@@ -2,53 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineSimilarity, ExprArgs, GraftNgrams, GraftShingles, GramStats, RhpBucket, TopKByLongScore, TopKByScore, TopKTerms}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.Natives
 
 /** `spark.sql.extensions=graft.GraftExtensions` registration path for
-  * every native graft expression. */
+  * every native graft expression ([[Natives.all]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[GraftShingles].getName, "graft_shingles"),
-      (exprs: Seq[Expression]) => GraftShingles(exprs(0),
-        ExprArgs.int(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_rhp_bucket"),
-      new ExpressionInfo(classOf[RhpBucket].getName, "graft_rhp_bucket"),
-      (exprs: Seq[Expression]) => RhpBucket(exprs(0),
-        ExprArgs.int(exprs(1)),
-        ExprArgs.int(exprs(2)),
-        ExprArgs.int(exprs(3)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKByScore].getName, "graft_topk"),
-      (exprs: Seq[Expression]) => TopKByScore(exprs(0),
-        ExprArgs.int(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk_long"),
-      new ExpressionInfo(classOf[TopKByLongScore].getName, "graft_topk_long"),
-      (exprs: Seq[Expression]) => TopKByLongScore(exprs(0),
-        ExprArgs.int(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk_terms"),
-      new ExpressionInfo(classOf[TopKTerms].getName, "graft_topk_terms"),
-      (exprs: Seq[Expression]) => TopKTerms(exprs(0),
-        ExprArgs.int(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[GraftNgrams].getName, "graft_ngrams"),
-      (exprs: Seq[Expression]) => GraftNgrams(exprs(0),
-        ExprArgs.int(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_stats"),
-      new ExpressionInfo(classOf[GramStats].getName, "graft_gram_stats"),
-      (exprs: Seq[Expression]) => GramStats(exprs(0),
-        ExprArgs.int(exprs(1)))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Natives.all.foreach { n =>
+      ext.injectFunction((FunctionIdentifier(n.name),
+        new ExpressionInfo(n.cls.getName, n.name), n.build))
+    }
 }

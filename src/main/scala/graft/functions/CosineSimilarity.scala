@@ -91,8 +91,7 @@ object CosineSimilarity {
   /** Programmatic registration: `SELECT graft_cosine(a.v, b.v)` /
     * `call_function("graft_cosine", ...)`. Idempotent. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+    Natives.register(spark, "graft_cosine")
 
   /** Column-API entry (registers on the session, then resolves by name —
     * Column-from-Expression constructors are private[sql] in Spark 4). */

@@ -104,10 +104,7 @@ object GraftShingles {
 
   /** Registers `graft_shingles(text, k)`; k must be a foldable int. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => GraftShingles(exprs(0),
-        ExprArgs.int(exprs(1))), "built-in")
+    Natives.register(spark, "graft_shingles")
 
   /** Column-API entry. */
   def apply(spark: SparkSession, text: Column, k: Int = 3): Column = {
@@ -141,9 +138,7 @@ case class GraftNgrams(child: Expression, k: Int) extends UnaryExpression {
 object GraftNgrams {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => GraftNgrams(exprs(0), ExprArgs.int(exprs(1))), "built-in")
+    Natives.register(spark, "graft_ngrams")
 
   /** Column-API entry. */
   def apply(spark: SparkSession, text: Column, k: Int): Column = {
@@ -220,9 +215,7 @@ case class GramStats(child: Expression, k: Int) extends UnaryExpression {
 object GramStats {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_stats",
-      exprs => GramStats(exprs(0), ExprArgs.int(exprs(1))), "built-in")
+    Natives.register(spark, "graft_gram_stats")
 
   /** Column-API entry. */
   def apply(spark: SparkSession, text: Column, k: Int): Column = {

@@ -127,10 +127,7 @@ case class GreedyMmr(left: Expression, right: Expression, k: Int)
 object GreedyMmr {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mmr",
-      exprs => GreedyMmr(exprs(0), exprs(1), ExprArgs.int(exprs(2))),
-      "built-in")
+    Natives.register(spark, "graft_mmr")
 
   /** Column-API entry: `graft_mmr(cands, sims, k)`. */
   def apply(spark: SparkSession, cands: Column, sims: Column, k: Int): Column = {

@@ -145,10 +145,7 @@ object MinKLong {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mink",
-      exprs => MinKLong(exprs(0), ExprArgs.int(exprs(1))),
-      "built-in")
+    Natives.register(spark, "graft_mink")
 
   /** Column-API entry: `graft_mink(value, k)`. */
   def apply(spark: SparkSession, value: Column, k: Int): Column = {

@@ -120,10 +120,7 @@ case class MinKPairs(
 object MinKPairs {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mink_pairs",
-      exprs => MinKPairs(exprs(0), ExprArgs.int(exprs(1))),
-      "built-in")
+    Natives.register(spark, "graft_mink_pairs")
 
   /** Column-API entry: `graft_mink_pairs(struct(key, id), k)`. */
   def apply(spark: SparkSession, keyAndId: Column, k: Int): Column = {

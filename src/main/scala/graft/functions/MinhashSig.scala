@@ -93,9 +93,7 @@ case class MinhashSig(child: Expression, numHashes: Int) extends UnaryExpression
 object MinhashSig {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      exprs => MinhashSig(exprs(0), ExprArgs.int(exprs(1))), "built-in")
+    Natives.register(spark, "graft_minhash_sig")
 
   /** Column-API entry. */
   def apply(spark: SparkSession, sh: Column, numHashes: Int): Column = {

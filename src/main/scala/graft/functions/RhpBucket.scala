@@ -61,12 +61,7 @@ case class RhpBucket(child: Expression, bits: Int, dim: Int, seedBase: Int)
 object RhpBucket {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rhp_bucket",
-      exprs => RhpBucket(exprs(0),
-        ExprArgs.int(exprs(1)),
-        ExprArgs.int(exprs(2)),
-        ExprArgs.int(exprs(3))), "built-in")
+    Natives.register(spark, "graft_rhp_bucket")
 
   def apply(spark: SparkSession, v: Column, bits: Int, dim: Int,
             seedBase: Int): Column = {

@@ -185,10 +185,7 @@ case class TopKByScore(
 object TopKByScore {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => TopKByScore(exprs(0), ExprArgs.int(exprs(1))),
-      "built-in")
+    Natives.register(spark, "graft_topk")
 
   /** Column-API entry: `graft_topk(struct(score, id), k)`. */
   def apply(spark: SparkSession, scoreAndId: Column, k: Int): Column = {

@@ -177,10 +177,7 @@ case class TopKByLongScore(
 object TopKByLongScore {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk_long",
-      exprs => TopKByLongScore(exprs(0), ExprArgs.int(exprs(1))),
-      "built-in")
+    Natives.register(spark, "graft_topk_long")
 
   /** Column-API entry: `graft_topk_long(struct(score, id), k)`. */
   def apply(spark: SparkSession, scoreAndId: Column, k: Int): Column = {
@@ -380,10 +377,7 @@ case class TopKTerms(
 object TopKTerms {
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk_terms",
-      exprs => TopKTerms(exprs(0), ExprArgs.int(exprs(1))),
-      "built-in")
+    Natives.register(spark, "graft_topk_terms")
 
   /** Column-API entry: `graft_topk_terms(struct(score, term, tf, df), k)`. */
   def apply(spark: SparkSession, scoreTermTfDf: Column, k: Int): Column = {

@@ -470,10 +470,6 @@ object Curation {
   /** The full merged decision frame off precomputed [[MergeParts]] —
     * shared by [[mergeCuration]] and the state-forward
     * [[mergeCurationState]] (which must not run mergeParts twice). */
-  private[graft] def mergedDecisionsFromForSpec(st: CurationState,
-                                                p: MergeParts): DataFrame =
-    mergedDecisionsFrom(st, p)
-
   private def mergedDecisionsFrom(st: CurationState, p: MergeParts): DataFrame = {
     val untouchedFinal = p.oldUntouched.join(p.relabel, Seq("lbl"), "left")
       .select(col("doc_id"), coalesce(col("nl"), col("lbl")).as("lbl"))

@@ -29,6 +29,20 @@ case class AudioMeta(doc_id: Long, n_bytes: Long, channels: Long,
 case class VideoMeta(doc_id: Long, n_bytes: Long, width: Long, height: Long,
                      codec: String, duration_ms: Long, format: String)
 
+/** The one error every media decoder raises on bytes it cannot read: a
+  * read outside its record, a negative or overflowing length, a bad
+  * checksum or zlib stream, or a layout the decoder does not handle.
+  * Metadata decoders (HeaderDecode, SegmentWalk, MetaValueWalk,
+  * RiffDecode, BmffDecode) catch it and return what they read before the
+  * bad record; content decoders (PngCodec, PcmCodec, Mp4Frames) let it
+  * propagate. */
+final class MalformedMedia(msg: String) extends IllegalArgumentException(msg)
+
+object MalformedMedia {
+  def check(ok: Boolean, msg: => String): Unit =
+    if (!ok) throw new MalformedMedia(msg)
+}
+
 /** Multimodal column handling (SURVEY §2.E): media as opaque `binary`
   * columns + typed decode metadata.
   *
@@ -47,61 +61,89 @@ case class VideoMeta(doc_id: Long, n_bytes: Long, width: Long, height: Long,
   */
 object Multimodal {
 
-  /** Real container-header decoders: PNG signature + IHDR big-endian
-    * dimensions; JPEG segment walk to the first SOF0/1/2 frame header.
-    * Pure byte arithmetic — no codec library — so it runs anywhere and
-    * is exactly what "extract image metadata without decoding pixels"
-    * does in production pipelines. */
-  object HeaderDecode {
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    private def be16(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 8) | (b(i + 1) & 0xffL)
-
-    private val PngSig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-
-    /** (width, height, format); (0, 0, "unknown") when neither container
-      * matches — the permissive posture, bad payloads surface in an
-      * audit column instead of killing the job. */
-    def decode(b: Array[Byte]): (Long, Long, String) = {
-      if (b.length >= 24 && b.take(8).sameElements(PngSig) &&
-          new String(b.slice(12, 16), "US-ASCII") == "IHDR") {
-        // IHDR is mandatory-first: length(4) type(4) width(4) height(4)
-        (be32(b, 16), be32(b, 20), "png")
-      } else if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-        // JPEG: walk marker segments (each FF mm len2 payload) until a
-        // start-of-frame (C0 baseline / C1 extended / C2 progressive);
-        // its payload is precision(1) height(2) width(2).
-        var i = 2
-        while (i + 9 <= b.length && (b(i) & 0xff) == 0xff) {
-          val m = b(i + 1) & 0xff
-          if (m == 0xc0 || m == 0xc1 || m == 0xc2)
-            return (be16(b, i + 7), be16(b, i + 5), "jpeg")
-          i += 2 + be16(b, i + 2).toInt
-        }
-        (0L, 0L, "unknown")
-      } else (0L, 0L, "unknown")
+  /** Bounds-checked reads over the window [from, to) of a byte array —
+    * the only way the decoders below touch payload bytes. Offsets and
+    * lengths are Longs relative to the window, so a 32-bit length field
+    * can neither wrap nor go negative unnoticed: any read, slice or
+    * negative length outside the window throws [[MalformedMedia]]. */
+  private[graft] final class ByteReader(a: Array[Byte], from: Int, to: Int) {
+    def this(a: Array[Byte]) = this(a, 0, a.length)
+    val length: Int = to - from
+    /** Offset of this window in the underlying array. */
+    def start: Int = from
+    def has(off: Long, n: Long): Boolean = off >= 0 && n >= 0 && off <= length - n
+    private def at(off: Long, n: Long): Int =
+      if (has(off, n)) from + off.toInt
+      else throw new MalformedMedia(
+        s"$n-byte read at offset $off of a $length-byte record")
+    private def be(off: Long, n: Int): Long = {
+      val p = at(off, n); var v = 0L; var k = 0
+      while (k < n) { v = (v << 8) | (a(p + k) & 0xffL); k += 1 }
+      v
     }
-  }
-
-  /** Real container-structure iteration: one row per PNG chunk or JPEG
-    * marker segment — (marker, payload length, byte-sum checksum). This
-    * is the metadata/structure pass a media pipeline runs before any
-    * pixel decode (find EXIF, count frames, locate SOF): pure byte
-    * arithmetic over any actual PNG or baseline JPEG. */
-  object SegmentWalk {
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    private def be16(b: Array[Byte], i: Int): Int =
-      (((b(i) & 0xff) << 8) | (b(i + 1) & 0xff))
-    private def byteSum(b: Array[Byte], from: Int, len: Int): Long = {
+    private def le(off: Long, n: Int): Long = {
+      val p = at(off, n); var v = 0L; var k = n - 1
+      while (k >= 0) { v = (v << 8) | (a(p + k) & 0xffL); k -= 1 }
+      v
+    }
+    def u8(off: Long): Int = be(off, 1).toInt
+    def be16(off: Long): Int = be(off, 2).toInt
+    def be32(off: Long): Long = be(off, 4)
+    def be64(off: Long): Long = be(off, 8)
+    def le16(off: Long): Int = le(off, 2).toInt
+    def le32(off: Long): Long = le(off, 4)
+    def tag(off: Long): String = new String(a, at(off, 4), 4, "US-ASCII")
+    def slice(off: Long, n: Long): ByteReader = {
+      val p = at(off, n)
+      new ByteReader(a, p, p + n.toInt)
+    }
+    def startsWith(sig: Array[Byte]): Boolean = has(0, sig.length) &&
+      java.util.Arrays.equals(a, from, from + sig.length, sig, 0, sig.length)
+    def sum: Long = {
       var s = 0L; var i = from
-      val end = math.min(from + len, b.length)
-      while (i < end) { s += b(i) & 0xff; i += 1 }
+      while (i < to) { s += a(i) & 0xff; i += 1 }
       s
     }
+    def crc32: Long = {
+      val c = new java.util.zip.CRC32
+      c.update(a, from, length)
+      c.getValue
+    }
+    def toArray: Array[Byte] = java.util.Arrays.copyOfRange(a, from, to)
+  }
+
+  /** One container record: its type tag (the marker name for JPEG), the
+    * offset of its header in the payload array, and its data window. */
+  private[graft] final case class Rec(tag: String, at: Int, body: ByteReader)
+
+  /** One walker per container grammar. Each yields records lazily and
+    * throws [[MalformedMedia]] at the first record whose header or data
+    * leaves the window; every step advances by at least a header, so no
+    * length field can stall a walk. */
+  private[graft] object Walk {
+    private def records(r: ByteReader, first: Int, more: Int => Boolean)(
+        step: Int => (Rec, Long)): Iterator[Rec] = new Iterator[Rec] {
+      private var i = first.toLong
+      def hasNext: Boolean = i < r.length && more(i.toInt)
+      def next(): Rec = { val (rec, n) = step(i.toInt); i += n; rec }
+    }
+    private def rec(r: ByteReader, tag: String, i: Int, off: Long, n: Long): Rec =
+      if (r.has(off, n)) Rec(tag, r.start + i, r.slice(off, n))
+      else throw new MalformedMedia(s"'$tag' record at byte ${r.start + i} " +
+        s"declares $n data bytes; ${r.length - off} remain")
+
+    val PngSig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
+    def isPng(r: ByteReader): Boolean = r.startsWith(PngSig)
+    def isJpeg(r: ByteReader): Boolean = r.has(0, 2) && r.be16(0) == 0xffd8
+
+    /** PNG chunks after the signature: len(4) type(4) data(len) crc(4). */
+    def png(r: ByteReader): Iterator[Rec] = records(r, 8, _ => true) { i =>
+      val len = r.be32(i)
+      val chunk = rec(r, r.tag(i + 4), i, i + 8, len)
+      r.be32(i + 8 + len) // the CRC must be inside the window too
+      (chunk, 12 + len)
+    }
+
     private def jpegMarkerName(m: Int): String = m match {
       case 0xe0 => "APP0"
       case 0xfe => "COM"
@@ -111,89 +153,148 @@ object Multimodal {
       case 0xd9 => "EOI"
       case x => f"M$x%02X"
     }
+    /** Start-of-frame markers: C0 baseline, C1 extended, C2 progressive. */
+    val JpegSof: Set[String] = Set(0xc0, 0xc1, 0xc2).map(jpegMarkerName)
 
+    /** JPEG marker segments after SOI: FF mm [len(2) data(len − 2)]. EOI,
+      * TEM and RSTn stand alone; EOI ends the walk, and so does a byte
+      * that is not a marker (the entropy-coded data after SOS). */
+    def jpeg(r: ByteReader): Iterator[Rec] =
+      records(r, 2, i => r.u8(i) == 0xff) { i =>
+        val m = r.u8(i + 1)
+        val name = jpegMarkerName(m)
+        if (m == 0xd9) (rec(r, name, i, i + 2, 0), r.length - i)
+        else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) (rec(r, name, i, i + 2, 0), 2)
+        else {
+          val len = r.be16(i + 2)
+          (rec(r, name, i, i + 4, len - 2), 2 + len)
+        }
+      }
+
+    /** RIFF chunks after the RIFF/WAVE header: id(4) size(4le)
+      * data(size), odd sizes padded to even (a missing pad at EOF ends
+      * the walk). */
+    def riff(r: ByteReader): Iterator[Rec] = records(r, 12, _ => true) { i =>
+      val size = r.le32(i + 4)
+      (rec(r, r.tag(i), i, i + 8, size), 8 + size + (size & 1))
+    }
+
+    /** ISO-BMFF boxes: size(4) type(4) [largesize(8)] data. Size 0 runs
+      * to the end of the window (streamed-file mdat), size 1 takes the
+      * 64-bit largesize after the type; a tail under 8 bytes holds no
+      * box. */
+    def bmff(r: ByteReader): Iterator[Rec] =
+      records(r, 0, i => r.length - i >= 8) { i =>
+        val size32 = r.be32(i)
+        val hdr = if (size32 == 1L) 16 else 8
+        val size =
+          if (size32 == 0L) (r.length - i).toLong
+          else if (size32 == 1L) r.be64(i + 8)
+          else size32
+        (rec(r, r.tag(i + 4), i, i + hdr, size - hdr), size)
+      }
+
+    private val BmffContainers = Set("moov", "trak", "mdia", "minf", "stbl")
+
+    /** Every box in depth-first order, descending the container boxes
+      * (moov → trak → mdia → minf → stbl) at most five levels deep, so a
+      * forged nest of containers cannot exhaust the stack. */
+    def bmffTree(r: ByteReader, depth: Int = 0): Iterator[Rec] =
+      bmff(r).flatMap(b => Iterator.single(b) ++
+        (if (depth < 5 && BmffContainers(b.tag)) bmffTree(b.body, depth + 1)
+         else Iterator.empty))
+  }
+
+  /** Metadata decoders are permissive: a [[MalformedMedia]] ends the
+    * read and `partial` — what was read before the bad record — is the
+    * result. */
+  private def permissive[T](partial: => T)(read: => T): T =
+    try read catch { case _: MalformedMedia => partial }
+
+  import MalformedMedia.check
+
+  /** Real container-header decoders: PNG signature + IHDR big-endian
+    * dimensions; JPEG segment walk to the first SOF0/1/2 frame header.
+    * Pure byte arithmetic — no codec library — so it runs anywhere and
+    * is exactly what "extract image metadata without decoding pixels"
+    * does in production pipelines. */
+  object HeaderDecode {
+    private val Unknown = (0L, 0L, "unknown")
+
+    /** (width, height, format); (0, 0, "unknown") when neither container
+      * matches — the permissive posture, bad payloads surface in an
+      * audit column instead of killing the job. */
+    def decode(b: Array[Byte]): (Long, Long, String) = {
+      val r = new ByteReader(b)
+      if (Walk.isPng(r)) permissive(Unknown) {
+        // IHDR is mandatory-first: width(4) height(4) ...
+        Walk.png(r).take(1).collectFirst { case c if c.tag == "IHDR" =>
+          (c.body.be32(0), c.body.be32(4), "png")
+        }.getOrElse(Unknown)
+      } else if (Walk.isJpeg(r)) permissive(Unknown) {
+        // the first start-of-frame payload is precision(1) height(2) width(2)
+        Walk.jpeg(r).collectFirst { case s if Walk.JpegSof(s.tag) =>
+          (s.body.be16(3).toLong, s.body.be16(1).toLong, "jpeg")
+        }.getOrElse(Unknown)
+      } else Unknown
+    }
+  }
+
+  /** Real container-structure iteration: one row per PNG chunk or JPEG
+    * marker segment — (marker, payload length, byte-sum checksum). This
+    * is the metadata/structure pass a media pipeline runs before any
+    * pixel decode (find EXIF, count frames, locate SOF): pure byte
+    * arithmetic over any actual PNG or baseline JPEG. */
+  object SegmentWalk {
     /** (marker, segLen, checksum, isKeyframe) per segment; empty for
       * non-media bytes. */
     def walk(b: Array[Byte]): Seq[(String, Long, Long, Boolean)] = {
+      val r = new ByteReader(b)
+      val segs =
+        if (Walk.isPng(r)) Walk.png(r).map(c => (c, c.tag == "IHDR"))
+        else if (Walk.isJpeg(r)) Walk.jpeg(r).map(s => (s, Walk.JpegSof(s.tag)))
+        else Iterator.empty
       val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long, Boolean)]()
-      if (b.length >= 16 && (b(0) & 0xff) == 0x89 && b(1) == 'P') {
-        // PNG: chunks of len(4) type(4) data(len) crc(4) from offset 8
-        var i = 8
-        while (i + 8 <= b.length) {
-          val len = be32(b, i).toInt
-          val typ = new String(b.slice(i + 4, i + 8), "US-ASCII")
-          out += ((typ, len.toLong, byteSum(b, i + 8, len), typ == "IHDR"))
-          i += 12 + len
-        }
-      } else if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-        // JPEG: FF mm [len2 payload] segments from offset 2; EOI and the
-        // restart/TEM markers are standalone (no length field)
-        var i = 2
-        var done = false
-        while (!done && i + 2 <= b.length && (b(i) & 0xff) == 0xff) {
-          val m = b(i + 1) & 0xff
-          if (m == 0xd9 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
-            out += ((jpegMarkerName(m), 0L, 0L, false))
-            if (m == 0xd9) done = true
-            i += 2
-          } else if (i + 4 <= b.length) {
-            val segLen = be16(b, i + 2)
-            val dataLen = segLen - 2
-            out += ((jpegMarkerName(m), dataLen.toLong, byteSum(b, i + 4, dataLen),
-              m == 0xc0 || m == 0xc1 || m == 0xc2))
-            i += 2 + segLen
-          } else done = true
-        }
+      permissive(out.toSeq) {
+        for ((s, key) <- segs) out += ((s.tag, s.body.length.toLong, s.body.sum, key))
+        out.toSeq
       }
-      out.toSeq
     }
   }
 
   /** Real RIFF/WAVE container parse — the audio sibling of
     * [[HeaderDecode]]: verify the RIFF/WAVE signature, then walk the
-    * little-endian chunk list (id(4) size(4le) data, odd sizes padded to
-    * even per the RIFF spec) collecting the PCM `fmt ` fields and the
-    * `data` chunk size. Duration falls out as data_size·1000 / byte_rate
-    * (integer division — deterministic, oracle-mirrorable). Works on any
-    * actual PCM WAV file; no audio library, no sample decode. */
+    * chunk list collecting the PCM `fmt ` fields and the `data` chunk
+    * size. Duration falls out as data_size·1000 / byte_rate (integer
+    * division — deterministic, oracle-mirrorable). Works on any actual
+    * PCM WAV file; no audio library, no sample decode. */
   object RiffDecode {
-    private def le32(b: Array[Byte], i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-        ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-    private def le16(b: Array[Byte], i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8)
-    private def tag(b: Array[Byte], i: Int): String =
-      new String(b.slice(i, i + 4), "US-ASCII")
-
     /** (channels, sampleRate, bitsPerSample, dataSize, durationMs,
       * format); zeros + "unknown" for non-RIFF bytes. */
     def decode(b: Array[Byte]): (Long, Long, Long, Long, Long, String) = {
-      if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE")
+      val r = new ByteReader(b)
+      if (!r.has(0, 12) || r.tag(0) != "RIFF" || r.tag(8) != "WAVE")
         return (0L, 0L, 0L, 0L, 0L, "unknown")
       var (ch, sr, bits, byteRate, dataSize) = (0L, 0L, 0L, 0L, 0L)
-      var i = 12
-      while (i + 8 <= b.length) {
-        val id = tag(b, i)
-        val size = le32(b, i + 4)
-        if (id == "fmt " && i + 24 <= b.length) {
-          ch = le16(b, i + 10)
-          sr = le32(b, i + 12)
-          byteRate = le32(b, i + 16)
-          bits = le16(b, i + 22)
-        } else if (id == "data") {
-          dataSize = size
+      def result = (ch, sr, bits, dataSize,
+        if (byteRate > 0) dataSize * 1000L / byteRate else 0L, "wav")
+      permissive(result) {
+        Walk.riff(r).foreach { c =>
+          if (c.tag == "fmt ") {
+            // codec(2) channels(2) rate(4) byte_rate(4) block(2) bits(2)
+            val f = c.body
+            val (fc, fs, fr, fb) = (f.le16(2), f.le32(4), f.le32(8), f.le16(14))
+            ch = fc; sr = fs; byteRate = fr; bits = fb
+          } else if (c.tag == "data") dataSize = c.body.length
         }
-        i += 8 + size.toInt + (size.toInt & 1) // RIFF pads odd chunks
+        result
       }
-      val dur = if (byteRate > 0) dataSize * 1000L / byteRate else 0L
-      (ch, sr, bits, dataSize, dur, "wav")
     }
   }
 
   /** Real ISO-BMFF (MP4/MOV) box walk — the video sibling of
     * [[HeaderDecode]]/[[RiffDecode]]: verify the leading `ftyp` box,
-    * then recursively descend the container boxes
-    * (moov → trak → mdia → minf → stbl), reading the movie header
+    * then descend the container boxes reading the movie header
     * (`mvhd`, version 0 AND 1 layouts: timescale + duration) and the
     * first sample-description entry (`stsd`: codec fourcc + coded
     * width/height). Duration falls out as units·1000 / timescale
@@ -202,69 +303,34 @@ object Multimodal {
     * decode — exactly the structure pass a video ingest runs to shard
     * by resolution/codec before any expensive frame work. */
   object BmffDecode {
-    private def be64(b: Array[Byte], i: Int): Long = {
-      var v = 0L; var k = 0
-      while (k < 8) { v = (v << 8) | (b(i + k) & 0xffL); k += 1 }
-      v
-    }
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    private def be16(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 8) | (b(i + 1) & 0xffL)
-    private def tag(b: Array[Byte], i: Int): String =
-      new String(b.slice(i, i + 4), "US-ASCII")
-
-    private val Containers = Set("moov", "trak", "mdia", "minf", "stbl")
-
     /** (width, height, codec, durationMs, format); zeros + "unknown"
       * for non-BMFF bytes — the permissive posture of the other
       * decoders. */
     def decode(b: Array[Byte]): (Long, Long, String, Long, String) = {
-      if (b.length < 12 || tag(b, 4) != "ftyp")
+      val r = new ByteReader(b)
+      if (!r.has(4, 8) || r.tag(4) != "ftyp")
         return (0L, 0L, "unknown", 0L, "unknown")
       var (ts, du, w, h) = (0L, 0L, 0L, 0L)
       var codec = "unknown"
-      def walk(from: Int, to: Int): Unit = {
-        var i = from
-        var ok = true
-        while (ok && i + 8 <= to) {
-          val size32 = be32(b, i)
-          val typ = tag(b, i + 4)
-          // Legal BMFF size encodings beyond the common 32-bit form:
-          // size==0 means "extends to the end of the enclosing box"
-          // (streamed-file mdat), size==1 means the real length is the
-          // 64-bit largesize at i+8 (header is then 16 bytes).
-          val hdr = if (size32 == 1L) 16 else 8
-          val size: Long =
-            if (size32 == 0L) (to - i).toLong
-            else if (size32 == 1L && i + 16 <= to) be64(b, i + 8)
-            else size32
-          if (size < hdr || i + size > to) ok = false
-          else {
-            val p = i + hdr // payload start, header-width-aware
-            val end = (i + size).toInt
-            if (Containers(typ)) walk(p, end)
-            else if (typ == "mvhd" && p + 20 <= to) {
-              // v0: ver/flags ctime4 mtime4 ts4 dur4; v1: 8-byte times.
-              if ((b(p) & 0xff) == 1 && p + 32 <= to) {
-                ts = be32(b, p + 20); du = be64(b, p + 24)
-              } else { ts = be32(b, p + 12); du = be32(b, p + 16) }
-            } else if (typ == "stsd" && codec == "unknown" && p + 8 + 36 <= to) {
-              // ver/flags(4) entry_count(4), then the first sample
-              // entry: size(4) fourcc(4) reserved(6) data_ref(2)
-              // pre/rsv(16) width(2) height(2) ...
-              val e = p + 8
-              codec = tag(b, e + 4)
-              w = be16(b, e + 32); h = be16(b, e + 34)
-            }
-            i = end
+      def result = (w, h, codec, if (ts > 0) du * 1000L / ts else 0L, "mp4")
+      permissive(result) {
+        Walk.bmffTree(r).foreach { box =>
+          val p = box.body
+          if (box.tag == "mvhd") {
+            // v0: ver/flags ctime4 mtime4 ts4 dur4; v1: 8-byte times.
+            val (t, d) =
+              if (p.u8(0) == 1) (p.be32(20), p.be64(24)) else (p.be32(12), p.be32(16))
+            ts = t; du = d
+          } else if (box.tag == "stsd" && codec == "unknown") {
+            // ver/flags(4) entry_count(4), then the first sample
+            // entry: size(4) fourcc(4) reserved(6) data_ref(2)
+            // pre/rsv(16) width(2) height(2) ...
+            val (c, ew, eh) = (p.tag(12), p.be16(40), p.be16(42))
+            codec = c; w = ew; h = eh
           }
         }
+        result
       }
-      walk(0, b.length)
-      val dur = if (ts > 0) du * 1000L / ts else 0L
-      (w, h, codec, dur, "mp4")
     }
   }
 
@@ -333,10 +399,6 @@ object Multimodal {
   }
 
   private def payloadCol = payloadColFor(col("doc_id"), col("n_chars"))
-
-  /** The (doc_id, payload) frame m01 decodes — exposed for specs/probes. */
-  def m01Payloads(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d).select(col("doc_id"), payloadCol.as("payload"))
 
   /** m01: attach a binary media payload and decode its metadata from the
     * container header bytes. */
@@ -617,51 +679,22 @@ object Multimodal {
   /** Parse the 8-byte metadata segments of a payload — ordinal among
     * them, marker, and the big-endian VALUE of the 8 data bytes. The
     * m06 feature extractor: real byte walking (PNG chunk list / JPEG
-    * marker list, [[SegmentWalk]]'s grammar) restricted to the
+    * marker list, the [[Walk]] grammars) restricted to the
     * metadata-carrier segments (tEXt / COM) whose content is exactly
     * 8 bytes. */
   object MetaValueWalk {
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    private def be64(b: Array[Byte], i: Int): Long = {
-      var v = 0L; var j = 0
-      while (j < 8) { v = (v << 8) | (b(i + j) & 0xffL); j += 1 }
-      v
-    }
     def extract(id: Long, b: Array[Byte]): Seq[MetaSeg] = {
+      val r = new ByteReader(b)
+      val carriers =
+        if (Walk.isPng(r)) Walk.png(r).filter(_.tag == "tEXt")
+        else if (Walk.isJpeg(r)) Walk.jpeg(r).filter(_.tag == "COM")
+        else Iterator.empty
       val out = scala.collection.mutable.ArrayBuffer[MetaSeg]()
-      var ord = 0
-      if (b.length >= 16 && (b(0) & 0xff) == 0x89 && b(1) == 'P') {
-        var i = 8
-        while (i + 8 <= b.length) {
-          val len = be32(b, i).toInt
-          val typ = new String(b.slice(i + 4, i + 8), "US-ASCII")
-          if (typ == "tEXt" && len == 8 && i + 16 <= b.length) {
-            ord += 1
-            out += MetaSeg(id, ord, typ, be64(b, i + 8))
-          }
-          i += 12 + len
-        }
-      } else if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-        var i = 2
-        var done = false
-        while (!done && i + 2 <= b.length && (b(i) & 0xff) == 0xff) {
-          val m = b(i + 1) & 0xff
-          if (m == 0xd9 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
-            if (m == 0xd9) done = true
-            i += 2
-          } else if (i + 4 <= b.length) {
-            val segLen = (((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff))
-            if (m == 0xfe && segLen == 10 && i + 12 <= b.length) {
-              ord += 1
-              out += MetaSeg(id, ord, "COM", be64(b, i + 4))
-            }
-            i += 2 + segLen
-          } else done = true
-        }
+      permissive(out.toSeq) {
+        for (c <- carriers if c.body.length == 8)
+          out += MetaSeg(id, out.length + 1, c.tag, c.body.be64(0))
+        out.toSeq
       }
-      out.toSeq
     }
   }
 
@@ -808,19 +841,51 @@ object Multimodal {
     * compliant reader (javax.imageio cross-checked in the spec), and
     * [[decode]] reads any grayscale-8 PNG regardless of producer. */
   object PngCodec {
-    private val Sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte)
     private def be32(v: Long): Array[Byte] = Array(
       ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
       ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    private def rd32(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
     private def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val tb = typ.getBytes("US-ASCII")
       val crc = new java.util.zip.CRC32
       crc.update(tb); crc.update(data)
       be32(data.length.toLong) ++ tb ++ data ++ be32(crc.getValue)
+    }
+
+    /** The PNG filter predictor of type `ft` from the left (a), up (b)
+      * and up-left (c) neighbours. */
+    private def predict(ft: Int, a: Int, b: Int, c: Int): Int = ft match {
+      case 0 => 0
+      case 1 => a
+      case 2 => b
+      case 3 => (a + b) / 2
+      case 4 => // Paeth
+        val p = a + b - c
+        val pa = math.abs(p - a); val pb = math.abs(p - b)
+        val pc = math.abs(p - c)
+        if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+      case other => throw new MalformedMedia(s"unknown filter type $other")
+    }
+
+    /** Inflates exactly `n` bytes of a zlib stream (output past `n` is
+      * never produced); memory grows only with what the stream really
+      * holds, so a forged IHDR cannot force a huge allocation. */
+    private def inflate(z: Array[Byte], n: Int): Array[Byte] = {
+      val infl = new java.util.zip.Inflater()
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](math.min(n, 1 << 16))
+      try {
+        infl.setInput(z)
+        while (out.size < n && !infl.finished()) {
+          val k =
+            try infl.inflate(buf, 0, math.min(buf.length, n - out.size))
+            catch { case e: java.util.zip.DataFormatException =>
+              throw new MalformedMedia(s"bad zlib stream: ${e.getMessage}") }
+          check(k > 0 || infl.finished(), "bad zlib stream")
+          out.write(buf, 0, k)
+        }
+      } finally infl.end()
+      check(out.size == n, s"short pixel data (${out.size} of $n)")
+      out.toByteArray
     }
 
     /** PNG filter pass for one scanline (prev = the RAW previous line,
@@ -833,18 +898,7 @@ object Multimodal {
         val a = if (x > 0) cur(x - 1) else 0
         val bb = if (prev.nonEmpty) prev(x) else 0
         val c = if (x > 0 && prev.nonEmpty) prev(x - 1) else 0
-        val pred = ft match {
-          case 0 => 0
-          case 1 => a
-          case 2 => bb
-          case 3 => (a + bb) / 2
-          case 4 => // Paeth
-            val p = a + bb - c
-            val pa = math.abs(p - a); val pb = math.abs(p - bb)
-            val pc = math.abs(p - c)
-            if (pa <= pb && pa <= pc) a else if (pb <= pc) bb else c
-        }
-        out(x) = ((cur(x) - pred) & 0xff).toByte
+        out(x) = ((cur(x) - predict(ft, a, bb, c)) & 0xff).toByte
         x += 1
       }
       out
@@ -880,52 +934,41 @@ object Multimodal {
       defl.end()
       val ihdr = be32(w.toLong) ++ be32(h.toLong) ++
         Array[Byte](8, 0, 0, 0, 0) // depth 8, grayscale, std compression
-      Sig ++ chunk("IHDR", ihdr) ++
+      Walk.PngSig ++ chunk("IHDR", ihdr) ++
         chunk("tEXt", ("Comment\u0000" + meta).getBytes("US-ASCII")) ++
         chunk("IDAT", out.toByteArray) ++ chunk("IEND", Array.empty)
     }
 
     /** REAL decode of a grayscale-8 PNG: signature check, chunk walk
       * with CRC32 VERIFICATION, multi-IDAT concat, Inflater, full
-      * 5-type unfilter. Throws on any structural violation — a decode
-      * stage must fail loudly, not hash garbage. */
+      * 5-type unfilter. Throws [[MalformedMedia]] on any structural
+      * violation — a decode stage must fail loudly, not hash garbage. */
     def decode(b: Array[Byte]): (Int, Int, Array[Int]) = {
-      require(b.length > 8 && java.util.Arrays.equals(
-        java.util.Arrays.copyOfRange(b, 0, 8), Sig), "not a PNG")
-      var w = 0; var h = 0
+      val r = new ByteReader(b)
+      check(Walk.isPng(r), "not a PNG")
+      var iw = 0L; var ih = 0L
       val idat = new java.io.ByteArrayOutputStream()
-      var i = 8
-      while (i + 12 <= b.length) {
-        val len = rd32(b, i).toInt
-        val typ = new String(b, i + 4, 4, "US-ASCII")
-        require(i + 12 + len <= b.length, s"truncated $typ chunk")
-        val crc = new java.util.zip.CRC32
-        crc.update(b, i + 4, 4 + len)
-        require(crc.getValue == rd32(b, i + 8 + len), s"bad CRC in $typ")
-        typ match {
+      Walk.png(r).foreach { c =>
+        val n = c.body.length
+        check(r.slice(c.at + 4, 4 + n).crc32 == r.be32(c.at + 8 + n),
+          s"bad CRC in ${c.tag}")
+        c.tag match {
           case "IHDR" =>
-            w = rd32(b, i + 8).toInt; h = rd32(b, i + 12).toInt
-            require(b(i + 16) == 8 && b(i + 17) == 0,
+            val d = c.body
+            iw = d.be32(0); ih = d.be32(4)
+            check(d.u8(8) == 8 && d.u8(9) == 0,
               "decoder handles grayscale-8 only")
-            require(b(i + 18) == 0 && b(i + 19) == 0 && b(i + 20) == 0,
+            check(d.u8(10) == 0 && d.u8(11) == 0 && d.u8(12) == 0,
               "decoder handles non-interlaced std compression/filter only")
-          case "IDAT" => idat.write(b, i + 8, len)
+          case "IDAT" => idat.write(c.body.toArray)
           case _ => ()
         }
-        i += 12 + len
       }
-      require(w > 0 && h > 0, "missing IHDR")
-      val infl = new java.util.zip.Inflater()
-      infl.setInput(idat.toByteArray)
-      val raw = new Array[Byte]((w + 1) * h)
-      var off = 0
-      while (off < raw.length && !infl.finished()) {
-        val n = infl.inflate(raw, off, raw.length - off)
-        require(n > 0 || infl.finished(), "bad zlib stream")
-        off += n
-      }
-      infl.end()
-      require(off == raw.length, s"short pixel data ($off of ${raw.length})")
+      check(iw > 0 && ih > 0 && iw <= Int.MaxValue && ih <= Int.MaxValue,
+        s"missing or invalid IHDR ($iw x $ih)")
+      check((iw + 1) * ih <= Int.MaxValue - 8, s"image $iw x $ih too large")
+      val (w, h) = (iw.toInt, ih.toInt)
+      val raw = inflate(idat.toByteArray, (w + 1) * h)
       val px = new Array[Int](w * h)
       var y = 0
       while (y < h) {
@@ -936,20 +979,7 @@ object Multimodal {
           val a = if (x > 0) px(y * w + x - 1) else 0
           val bb = if (y > 0) px((y - 1) * w + x) else 0
           val c = if (x > 0 && y > 0) px((y - 1) * w + x - 1) else 0
-          val pred = ft match {
-            case 0 => 0
-            case 1 => a
-            case 2 => bb
-            case 3 => (a + bb) / 2
-            case 4 =>
-              val p = a + bb - c
-              val pa = math.abs(p - a); val pb = math.abs(p - bb)
-              val pc = math.abs(p - c)
-              if (pa <= pb && pa <= pc) a else if (pb <= pc) bb else c
-            case other => throw new IllegalArgumentException(
-              s"unknown filter type $other")
-          }
-          px(y * w + x) = (f + pred) & 0xff
+          px(y * w + x) = (f + predict(ft, a, bb, c)) & 0xff
           x += 1
         }
         y += 1
@@ -1160,7 +1190,7 @@ object Multimodal {
     * `data` chunk (8-bit unsigned or 16-bit signed LE, mono — the two
     * canonical PCM layouts); [[decode]] walks the RIFF chunks with
     * structural validation and returns the RAW stored sample values
-    * (centered for 8-bit), failing loudly on anything that is not
+    * (centered for 8-bit), throwing [[MalformedMedia]] on anything not
     * mono 8/16-bit PCM — a decode stage must never hash garbage.
     * decode(encode(s, bits)) reproduces the samples exactly (PCM is
     * codec-free by definition), so determinism is independent of any
@@ -1191,22 +1221,11 @@ object Multimodal {
       data
     }
 
-    /** Inverse of [[pack]] over a byte range (centered for 8-bit). */
-    private[Multimodal] def unpack(bits: Int, b: Array[Byte],
-                                   off: Int, byteLen: Int): Array[Int] = {
-      require(bits == 8 || bits == 16, s"unsupported depth $bits")
-      val block = bits / 8
-      require(byteLen % block == 0, "sample bytes not block-aligned")
-      val out = new Array[Int](byteLen / block)
-      var k = 0
-      while (k < out.length) {
-        out(k) =
-          if (bits == 8) (b(off + k) & 0xff) - 128
-          else ((b(off + 2 * k) & 0xff) |
-            (b(off + 2 * k + 1) << 8)).toShort.toInt
-        k += 1
-      }
-      out
+    /** Inverse of [[pack]] over a sample window (centered for 8-bit). */
+    private[Multimodal] def unpack(bits: Int, d: ByteReader): Array[Int] = {
+      check(d.length % (bits / 8) == 0, "sample bytes not block-aligned")
+      Array.tabulate(d.length / (bits / 8))(k =>
+        if (bits == 8) d.u8(k) - 128 else d.le16(2L * k).toShort.toInt)
     }
 
     def encode(bits: Int, samples: Array[Int]): Array[Byte] = {
@@ -1229,29 +1248,20 @@ object Multimodal {
 
     /** (bitsPerSample, raw stored samples). */
     def decode(b: Array[Byte]): (Int, Array[Int]) = {
-      require(b.length >= 12 &&
-        new String(b, 0, 4, "US-ASCII") == "RIFF" &&
-        new String(b, 8, 4, "US-ASCII") == "WAVE", "not a WAV")
-      var fmt = -1L; var ch = -1L; var bits = -1L
-      var dataOff = -1; var dataLen = -1
-      var i = 12
-      while (i + 8 <= b.length) {
-        val id = new String(b, i, 4, "US-ASCII")
-        val size = ((b(i + 4) & 0xffL) | ((b(i + 5) & 0xffL) << 8) |
-          ((b(i + 6) & 0xffL) << 16) | ((b(i + 7) & 0xffL) << 24)).toInt
-        require(i + 8 + size <= b.length, s"truncated $id chunk")
-        if (id == "fmt ") {
-          require(size >= 16, "short fmt chunk")
-          fmt = (b(i + 8) & 0xffL) | ((b(i + 9) & 0xffL) << 8)
-          ch = (b(i + 10) & 0xffL) | ((b(i + 11) & 0xffL) << 8)
-          bits = (b(i + 22) & 0xffL) | ((b(i + 23) & 0xffL) << 8)
-        } else if (id == "data") { dataOff = i + 8; dataLen = size }
-        i += 8 + size + (size & 1)
+      val r = new ByteReader(b)
+      check(r.has(0, 12) && r.tag(0) == "RIFF" && r.tag(8) == "WAVE", "not a WAV")
+      var fmt = -1; var ch = -1; var bits = -1
+      var data: ByteReader = null
+      Walk.riff(r).foreach { c =>
+        if (c.tag == "fmt ") {
+          check(c.body.length >= 16, "short fmt chunk")
+          fmt = c.body.le16(0); ch = c.body.le16(2); bits = c.body.le16(14)
+        } else if (c.tag == "data") data = c.body
       }
-      require(fmt == 1 && ch == 1, "decoder handles mono PCM only")
-      require(bits == 8 || bits == 16, s"unsupported depth $bits")
-      require(dataOff >= 0, "missing data chunk")
-      (bits.toInt, unpack(bits.toInt, b, dataOff, dataLen))
+      check(fmt == 1 && ch == 1, "decoder handles mono PCM only")
+      check(bits == 8 || bits == 16, s"unsupported depth $bits")
+      check(data != null, "missing data chunk")
+      (bits, unpack(bits, data))
     }
   }
 
@@ -1413,22 +1423,14 @@ object Multimodal {
       * stsd first-entry format fourcc, the audio samplesize field (0
       * for video entries), the stsz table (uniform size + count, or a
       * per-sample size array), and the single stco chunk offset. */
-    private[Multimodal] final case class TrakInfo(
+    private[graft] final case class TrakInfo(
         handler: String, format: String, sampleSize: Int,
-        uniformSize: Int, count: Int, sizes: Array[Int], chunkOff: Long)
+        uniformSize: Long, count: Long, sizes: Array[Long], chunkOff: Long)
 
     /** Per-TRAK table walk (the multi-track generalization of the old
       * global walk — a file carrying both a video and an audio trak has
       * two stsz/stco sets, and a global collector would hand one trak's
       * offsets to the other's decoder).
-      *
-      * SCOPE: the box walk handles the 32-bit compact size form only —
-      * ISO-BMFF's 64-bit extended size (size == 1, largesize follows)
-      * and size == 0 (box extends to EOF) both fail the
-      * `require(size >= 8)` LOUDLY. Fine for the self-generated corpus
-      * (the writer never emits either); an externally produced MP4
-      * using those legal encodings would need the largesize/to-EOF
-      * branches added here.
       *
       * KNOWN WRITER DEVIATION (documented, deliberate): encodeAv stamps
       * the audio trak's tkhd duration in MEDIA-timescale samples where
@@ -1438,80 +1440,62 @@ object Multimodal {
       * the generated corpus, so the fix is deferred to a round that can
       * re-gate the digest family; a strict external player would report
       * a wrong audio track duration. */
-    private[Multimodal] def trakInfos(b: Array[Byte]): Seq[TrakInfo] = {
-      def be32(i: Int): Long =
-        ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-          ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-      def be16(i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-      val containers = Set("moov", "trak", "mdia", "minf", "stbl")
-      val out = scala.collection.mutable.ArrayBuffer.empty[TrakInfo]
-      var handler = ""; var format = ""; var sampleSize = 0
-      var uniformSize = 0; var count = 0
-      var sizes: Array[Int] = null; var chunkOff = -1L
-      def walk(from: Int, to: Int): Unit = {
-        var i = from
-        while (i + 8 <= to) {
-          val size = be32(i)
-          val typ = new String(b, i + 4, 4, "US-ASCII")
-          require(size >= 8 && i + size <= to, s"bad $typ box")
-          val p = i + 8
-          if (typ == "trak") {
-            handler = ""; format = ""; sampleSize = 0
-            uniformSize = 0; count = 0; sizes = null; chunkOff = -1L
-            walk(p, (i + size).toInt)
-            require(handler.nonEmpty && chunkOff >= 0 &&
-              (sizes != null || uniformSize > 0),
-              "trak missing hdlr/stsz/stco tables")
-            out += TrakInfo(handler, format, sampleSize,
-              uniformSize, count, sizes, chunkOff)
-          } else if (containers(typ)) walk(p, (i + size).toInt)
-          else if (typ == "hdlr") handler = new String(b, p + 8, 4, "US-ASCII")
-          else if (typ == "stsd") {
-            format = new String(b, p + 12, 4, "US-ASCII")
-            // SoundSampleEntry's samplesize field (bits per sample);
-            // only meaningful for audio formats — the reader checks the
-            // handler before trusting it. Loud failure (round 19,
-            // ADVICE item) instead of reading adjacent bytes: the first
-            // entry must be a full 28-byte sample entry inside the box.
-            // Bounds conjunct FIRST (round 20, ADVICE item): it also
-            // bounds the be32(p + 8) read — a truncated entry-less stsd
-            // at the end of the buffer must hit this require, not an
-            // ArrayIndexOutOfBoundsException inside the be32.
-            require(size >= 16 && p + 8 + 28 <= i + size &&
-              be32(p + 8) >= 28,
-              "stsd first entry truncated (need a 28-byte sample entry)")
-            sampleSize = be16(p + 8 + 26)
-          } else if (typ == "stsz") {
-            uniformSize = be32(p + 4).toInt
-            count = be32(p + 8).toInt
-            if (uniformSize == 0)
-              sizes = Array.tabulate(count)(k => be32(p + 12 + 4 * k).toInt)
-          } else if (typ == "stco") {
-            require(be32(p + 4) == 1L, "multi-chunk stco unsupported")
-            chunkOff = be32(p + 8)
+    private[graft] def trakInfos(b: Array[Byte]): Seq[TrakInfo] = {
+      val r = new ByteReader(b)
+      check(r.has(4, 8) && r.tag(4) == "ftyp", "not an MP4")
+      val traks = Walk.bmffTree(r).filter(_.tag == "trak").map { trak =>
+        var handler = ""; var format = ""; var sampleSize = 0
+        var uniformSize = 0L; var count = 0L
+        var sizes: Array[Long] = null; var chunkOff = -1L
+        Walk.bmffTree(trak.body).foreach { box =>
+          val p = box.body
+          box.tag match {
+            case "hdlr" => handler = p.tag(8)
+            case "stsd" =>
+              // ver/flags(4) entry_count(4), then the first sample entry,
+              // which must be a whole sample entry (>= 28 bytes) inside
+              // the box. Its SoundSampleEntry samplesize field (bits per
+              // sample) only means something for audio formats — the
+              // reader checks the handler before trusting it.
+              val size = p.be32(8)
+              check(size >= 28 && p.has(8, size),
+                "stsd first entry truncated (need a 28-byte sample entry)")
+              val entry = p.slice(8, size)
+              format = entry.tag(4); sampleSize = entry.be16(26)
+            case "stsz" =>
+              uniformSize = p.be32(4); count = p.be32(8)
+              if (uniformSize == 0) {
+                val table = p.slice(12, 4 * count) // bounds before allocating
+                sizes = Array.tabulate(count.toInt)(k => table.be32(4L * k))
+              }
+            case "stco" =>
+              check(p.be32(4) == 1L, "multi-chunk stco unsupported")
+              chunkOff = p.be32(8)
+            case _ => ()
           }
-          i += size.toInt
         }
-      }
-      require(b.length >= 12 &&
-        new String(b, 4, 4, "US-ASCII") == "ftyp", "not an MP4")
-      walk(0, b.length)
-      require(out.nonEmpty, "no trak found")
-      out.toSeq
+        check(handler.nonEmpty && chunkOff >= 0 &&
+          (sizes != null || uniformSize > 0),
+          "trak missing hdlr/stsz/stco tables")
+        TrakInfo(handler, format, sampleSize, uniformSize, count, sizes, chunkOff)
+      }.toList
+      check(traks.nonEmpty, "no trak found")
+      traks
     }
 
     /** Frame (offset, size) ranges from the VIDEO trak's real sample
       * tables (multi-track-safe: selects the 'vide' handler). */
     def sampleRanges(b: Array[Byte]): Seq[(Int, Int)] = {
       val v = trakInfos(b).find(_.handler == "vide")
-        .getOrElse(sys.error("no video trak"))
-      require(v.sizes != null, "uniform stsz unsupported for video frames")
-      var off = v.chunkOff.toInt
-      v.sizes.toSeq.map { s =>
-        val r = (off, s)
-        require(off + s <= b.length, "sample range outside buffer")
-        off += s
-        r
+        .getOrElse(throw new MalformedMedia("no video trak"))
+      check(v.sizes != null, "uniform stsz unsupported for video frames")
+      val r = new ByteReader(b)
+      var off = v.chunkOff
+      v.sizes.toSeq.map { n =>
+        check(r.has(off, n), "sample range outside buffer")
+        val range = (off.toInt, n.toInt)
+        off += n
+        range
       }
     }
 
@@ -1524,18 +1508,19 @@ object Multimodal {
       * by construction, hash-gated against the WAV path by m12. */
     def audioSamples(b: Array[Byte]): (Int, Array[Int]) = {
       val a = trakInfos(b).find(_.handler == "soun")
-        .getOrElse(sys.error("no audio trak"))
+        .getOrElse(throw new MalformedMedia("no audio trak"))
       val bits = a.format match {
         case "raw " => 8
         case "sowt" => 16
-        case f => sys.error(s"unsupported audio sample format '$f'")
+        case f => throw new MalformedMedia(s"unsupported audio sample format '$f'")
       }
-      require(a.sampleSize == bits, "stsd samplesize disagrees with format")
-      require(a.uniformSize == bits / 8 && a.count > 0,
+      check(a.sampleSize == bits, "stsd samplesize disagrees with format")
+      check(a.uniformSize == bits / 8 && a.count > 0,
         "audio stsz must be uniform at the PCM block size")
+      val r = new ByteReader(b)
       val byteLen = a.count * a.uniformSize
-      require(a.chunkOff + byteLen <= b.length, "audio range outside buffer")
-      (bits, PcmCodec.unpack(bits, b, a.chunkOff.toInt, byteLen))
+      check(r.has(a.chunkOff, byteLen), "audio range outside buffer")
+      (bits, PcmCodec.unpack(bits, r.slice(a.chunkOff, byteLen)))
     }
 
     /** Encode an AUDIO+VIDEO MP4: the video trak exactly as [[encode]]

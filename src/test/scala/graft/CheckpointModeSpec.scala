@@ -9,7 +9,7 @@ import graft.operators.{Curation, Incremental}
 class CheckpointModeSpec extends SparkSpecBase {
 
   private def withReliable[A](f: => A): (A, java.io.File) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-relck").toFile
+    val dir = tempDir("graft-relck").toFile
     spark.conf.set(Checkpoints.ReliableDirKey, dir.getAbsolutePath)
     try (f, dir)
     finally spark.conf.unset(Checkpoints.ReliableDirKey)
@@ -19,7 +19,7 @@ class CheckpointModeSpec extends SparkSpecBase {
     df.collect().map(_.toString).toSet
 
   test("group-state merge is frame-equal in local and reliable checkpoint modes") {
-    val st = java.nio.file.Files.createTempDirectory("graft-ck-groups").toString
+    val st = tempDir("graft-ck-groups").toString
     Incremental.writeGroupState(spark, sf001, st)
     val local = rowsOf(Incremental.mergeFromState(spark, sf001, st))
     val (reliable, dir) = withReliable {
@@ -57,7 +57,7 @@ class CheckpointModeSpec extends SparkSpecBase {
   }
 
   test("curation merge is frame-equal in local and reliable checkpoint modes") {
-    val st = java.nio.file.Files.createTempDirectory("graft-ck-cur").toString
+    val st = tempDir("graft-ck-cur").toString
     Curation.writeCurationState(spark, sf001, st)
     val local = rowsOf(Curation.mergeCurationFromState(spark, sf001, st))
     val (reliable, _) = withReliable {

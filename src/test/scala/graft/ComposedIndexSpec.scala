@@ -13,7 +13,7 @@ class ComposedIndexSpec extends SparkSpecBase {
 
   test("persisted append/delete/append + compaction == in-query e17 (real data)") {
     val d = sf001
-    val dir = java.nio.file.Files.createTempDirectory("graft-e17").toString
+    val dir = tempDir("graft-e17").toString
     val e = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     val b1 = pmod(col("vec_id"), lit(Incremental.IngestMod)) === 0
     val b2n = pmod(col("vec_id"), lit(Incremental.IngestMod)) ===

@@ -113,7 +113,7 @@ class ComposedLifecycleSpec extends SparkSpecBase {
 
   test("persisted-path steps == in-query composition (real data)") {
     val d = sf001
-    val root = java.nio.file.Files.createTempDirectory("graft-composed").toString
+    val root = tempDir("graft-composed").toString
     val dirs = Incremental.runComposedLifecyclePersisted(spark, d, root)
     val persisted = spark.read.parquet(s"${dirs.last}/labels")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

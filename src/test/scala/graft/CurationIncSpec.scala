@@ -120,7 +120,7 @@ class CurationIncSpec extends SparkSpecBase {
   }
 
   test("sf0.001: persisted-state merge and delta-upsert equal the gated x08") {
-    val dir = java.nio.file.Files.createTempDirectory("cur-state").toString
+    val dir = tempDir("cur-state").toString
     Curation.writeCurationState(spark, sf001, dir)
     val merged = Curation.mergeCurationFromState(spark, sf001, dir)
     val fromScratch = Curation.x08CurationDecide(spark, sf001)

@@ -25,7 +25,7 @@ class FileStreamSpec extends SparkSpecBase {
   }
 
   test("s01 file stream: on-time files aggregate; a late file is dropped") {
-    val dir = Files.createTempDirectory("graft-filestream").toString
+    val dir = tempDir("graft-filestream").toString
     publish(dir, "b0.json", Seq(
       """{"ts":"2024-06-01 00:10:00","event_type":"view","value":1.0}""",
       """{"ts":"2024-06-01 00:20:00","event_type":"view","value":2.0}"""))

@@ -135,7 +135,7 @@ class IncrementalSpec extends SparkSpecBase {
   }
 
   test("mergeFromState over persisted group state equals the in-query d09") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-inc-groups").toString
+    val dir = tempDir("graft-inc-groups").toString
     Incremental.writeGroupState(spark, sf001, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -146,7 +146,7 @@ class IncrementalSpec extends SparkSpecBase {
   }
 
   test("delta upsert over persisted labels reproduces the full merge labelling") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-inc-delta").toString
+    val dir = tempDir("graft-inc-delta").toString
     Incremental.writeGroupState(spark, sf001, dir)
     val delta = Incremental.mergeDeltaFromState(spark, sf001, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -162,7 +162,7 @@ class IncrementalSpec extends SparkSpecBase {
   }
 
   test("appendFromState over persisted index state equals the in-query e06") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-inc-ann").toString
+    val dir = tempDir("graft-inc-ann").toString
     Incremental.writeIndexState(spark, sf001, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("q_id", "rnk").collect().toSeq

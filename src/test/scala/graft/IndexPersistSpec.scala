@@ -10,7 +10,7 @@ import graft.operators.Similarity
 class IndexPersistSpec extends SparkSpecBase {
 
   test("e05 index round-trips partitioned by cell; probe filter prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-e05-index").toString
+    val dir = tempDir("graft-e05-index").toString
     val e = Tables.embeddings(spark, sf001).select(col("vec_id"), col("embedding"))
     val centroids = Similarity.kmeansCentroids(spark, e)
     Similarity.e05Index(spark, e, centroids)
@@ -49,7 +49,7 @@ class IndexPersistSpec extends SparkSpecBase {
     // convention); a deployment persists the index once and pays only
     // probe + ADC + the MMR tail per query batch. Both must agree
     // row-for-row — the index is deterministic given the quantizers.
-    val dir = java.nio.file.Files.createTempDirectory("graft-e13-index").toString
+    val dir = tempDir("graft-e13-index").toString
     val e = Tables.embeddings(spark, sf001).select(col("vec_id"), col("embedding"))
     val centroids = Similarity.corpusCentroids(spark, sf001)
     Similarity.e05IndexFrom(spark, e, centroids,

@@ -36,131 +36,126 @@ class MoviesReplaySpec extends SparkSpecBase {
 
   test("the composed catalog replays the reference pipeline over ragged wiki-movie JSON") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("movies_replay")
+    val dir = tempDir("movies_replay")
     val file = dir.resolve("wiki_movies.json")
     java.nio.file.Files.write(file,
       String.join("\n", fixture: _*).getBytes("UTF-8"))
-    try {
-      // Extract: schema-free ragged records as a string map (q17/q20's
-      // scan shape — no inference pass, no 193-column sparse struct).
-      val m = Reshape.raggedToMap(col("value"))
-      val raw = spark.read.textFile(file.toString).toDF("value")
-        .select(m.as("m"))
+    // Extract: schema-free ragged records as a string map (q17/q20's
+    // scan shape — no inference pass, no 193-column sparse struct).
+    val m = Reshape.raggedToMap(col("value"))
+    val raw = spark.read.textFile(file.toString).toDF("value")
+      .select(m.as("m"))
 
-      // Record filter (challenge.py:46-49): a director key of either
-      // spelling, an imdb link, and not episodic TV.
-      val movies = raw.filter(
-        coalesce(element_at(col("m"), "Director"),
-          element_at(col("m"), "Directed by")).isNotNull &&
-        element_at(col("m"), "imdb_link").isNotNull &&
-        element_at(col("m"), "No. of episodes").isNull)
+    // Record filter (challenge.py:46-49): a director key of either
+    // spelling, an imdb link, and not episodic TV.
+    val movies = raw.filter(
+      coalesce(element_at(col("m"), "Director"),
+        element_at(col("m"), "Directed by")).isNotNull &&
+      element_at(col("m"), "imdb_link").isNotNull &&
+      element_at(col("m"), "No. of episodes").isNull)
 
-      // q06: imdb id extract; q20: alt-title fold over the full
-      // reference key inventory; raw parser inputs carried alongside.
-      val idPat = "(tt\\d{7})"
-      val extracted = movies.select(
-        regexp_extract(element_at(col("m"), "imdb_link"), idPat, 1).as("imdb_id"),
-        element_at(col("m"), "url").as("url"),
-        element_at(col("m"), "title").as("title"),
-        Reshape.altTitle(col("m")).as("alt_title"),
-        coalesce(element_at(col("m"), "Director"),
-          element_at(col("m"), "Directed by")).as("director"),
-        element_at(col("m"), "Box office").as("box_office_raw"),
-        element_at(col("m"), "Budget").as("budget_raw"),
-        element_at(col("m"), "Release date").as("release_raw"),
-        element_at(col("m"), "Running time").as("runtime_raw"),
-        element_at(col("m"), "Mostly Null").as("mostly_null"))
-      assert(extracted.count() == 5) // Show/NoImdb/NoDir gone, dup still in
+    // q06: imdb id extract; q20: alt-title fold over the full
+    // reference key inventory; raw parser inputs carried alongside.
+    val idPat = "(tt\\d{7})"
+    val extracted = movies.select(
+      regexp_extract(element_at(col("m"), "imdb_link"), idPat, 1).as("imdb_id"),
+      element_at(col("m"), "url").as("url"),
+      element_at(col("m"), "title").as("title"),
+      Reshape.altTitle(col("m")).as("alt_title"),
+      coalesce(element_at(col("m"), "Director"),
+        element_at(col("m"), "Directed by")).as("director"),
+      element_at(col("m"), "Box office").as("box_office_raw"),
+      element_at(col("m"), "Budget").as("budget_raw"),
+      element_at(col("m"), "Release date").as("release_raw"),
+      element_at(col("m"), "Running time").as("runtime_raw"),
+      element_at(col("m"), "Mostly Null").as("mostly_null"))
+    assert(extracted.count() == 5) // Show/NoImdb/NoDir gone, dup still in
 
-      // q09: the 'Mostly Null' column is non-null ONLY on filtered-out
-      // records, so after the filter it prunes; every real column stays.
-      val pruned = NullPrune.prune(extracted)
-      assert(pruned.columns.toSeq ==
-        extracted.columns.filterNot(_ == "mostly_null").toSeq)
+    // q09: the 'Mostly Null' column is non-null ONLY on filtered-out
+    // records, so after the filter it prunes; every real column stays.
+    val pruned = NullPrune.prune(extracted)
+    assert(pruned.columns.toSeq ==
+      extracted.columns.filterNot(_ == "mostly_null").toSeq)
 
-      // q05: keep-first dedup by imdb id — min(struct(url, payload))
-      // is the deterministic analog of pandas drop_duplicates order.
-      val payload = struct(pruned.columns.filterNot(_ == "imdb_id").map(col): _*)
-      val deduped = pruned
-        .groupBy("imdb_id").agg(min(payload).as("f"))
-        .select(col("imdb_id") +:
-          pruned.columns.filterNot(_ == "imdb_id").map(c => col(s"f.$c")): _*)
-      assert(deduped.count() == 4)
+    // q05: keep-first dedup by imdb id — min(struct(url, payload))
+    // is the deterministic analog of pandas drop_duplicates order.
+    val payload = struct(pruned.columns.filterNot(_ == "imdb_id").map(col): _*)
+    val deduped = pruned
+      .groupBy("imdb_id").agg(min(payload).as("f"))
+      .select(col("imdb_id") +:
+        pruned.columns.filterNot(_ == "imdb_id").map(c => col(s"f.$c")): _*)
+    assert(deduped.count() == 4)
 
-      // q07/q08/q18: the messy-string parsers over the raw columns.
-      val wiki = deduped.select(
-        col("imdb_id"), col("title"), col("alt_title"), col("director"),
-        Parse.parseDollars(col("box_office_raw")).as("box_office"),
-        Parse.parseDollars(col("budget_raw")).as("budget_wiki"),
-        Parse.parseMultiDate(col("release_raw")).as("release_date"),
-        Parse.parseRuntime(col("runtime_raw")).as("runtime_min"))
+    // q07/q08/q18: the messy-string parsers over the raw columns.
+    val wiki = deduped.select(
+      col("imdb_id"), col("title"), col("alt_title"), col("director"),
+      Parse.parseDollars(col("box_office_raw")).as("box_office"),
+      Parse.parseDollars(col("budget_raw")).as("budget_wiki"),
+      Parse.parseMultiDate(col("release_raw")).as("release_date"),
+      Parse.parseRuntime(col("runtime_raw")).as("runtime_min"))
 
-      // q21/q11: kaggle-shaped second source — suffix join, zero counts
-      // as missing, prefer kaggle where it has a real value.
-      val kaggle = Seq(
-        ("tt0000001", 0.0),        // zero -> missing -> wiki wins
-        ("tt0000002", 9.0e8),      // kaggle fills wiki's unparseable N/A
-        ("tt0000003", 5.0e6)       // kaggle overrides wiki's absent budget
-      ).toDF("imdb_id", "budget_kaggle")
-      val merged = Reshape.suffixJoin(wiki, kaggle, "imdb_id", "_wiki", "_kaggle",
-          how = "left")
-        .withColumn("budget",
-          coalesce(nullif(col("budget_kaggle"), lit(0.0)), col("budget_wiki")))
+    // q21/q11: kaggle-shaped second source — suffix join, zero counts
+    // as missing, prefer kaggle where it has a real value.
+    val kaggle = Seq(
+      ("tt0000001", 0.0),        // zero -> missing -> wiki wins
+      ("tt0000002", 9.0e8),      // kaggle fills wiki's unparseable N/A
+      ("tt0000003", 5.0e6)       // kaggle overrides wiki's absent budget
+    ).toDF("imdb_id", "budget_kaggle")
+    val merged = Reshape.suffixJoin(wiki, kaggle, "imdb_id", "_wiki", "_kaggle",
+        how = "left")
+      .withColumn("budget",
+        coalesce(nullif(col("budget_kaggle"), lit(0.0)), col("budget_wiki")))
 
-      // q10: ratings histogram — groupBy count, pivot, fill 0, left join.
-      val ratings = Seq(
-        ("tt0000001", 5), ("tt0000001", 5), ("tt0000001", 4),
-        ("tt0000002", 3), ("tt0000003", 4), ("tt0000003", 4)
-      ).toDF("imdb_id", "rating")
-      val hist = ratings.groupBy("imdb_id").pivot("rating", Seq(3, 4, 5))
-        .agg(count(lit(1))).na.fill(0)
-        .select(col("imdb_id"), col("3").as("r3"), col("4").as("r4"),
-          col("5").as("r5"))
-      val out = merged.join(hist, Seq("imdb_id"), "left")
-        .na.fill(0L, Seq("r3", "r4", "r5"))
+    // q10: ratings histogram — groupBy count, pivot, fill 0, left join.
+    val ratings = Seq(
+      ("tt0000001", 5), ("tt0000001", 5), ("tt0000001", 4),
+      ("tt0000002", 3), ("tt0000003", 4), ("tt0000003", 4)
+    ).toDF("imdb_id", "rating")
+    val hist = ratings.groupBy("imdb_id").pivot("rating", Seq(3, 4, 5))
+      .agg(count(lit(1))).na.fill(0)
+      .select(col("imdb_id"), col("3").as("r3"), col("4").as("r4"),
+        col("5").as("r5"))
+    val out = merged.join(hist, Seq("imdb_id"), "left")
+      .na.fill(0L, Seq("r3", "r4", "r5"))
 
-      val got = out.collect().map(r => r.getAs[String]("imdb_id") -> r).toMap
-      assert(got.keySet ==
-        Set("tt0000001", "tt0000002", "tt0000003", "tt0000008"))
+    val got = out.collect().map(r => r.getAs[String]("imdb_id") -> r).toMap
+    assert(got.keySet ==
+      Set("tt0000001", "tt0000002", "tt0000003", "tt0000008"))
 
-      val a = got("tt0000001")
-      assert(a.getAs[String]("title") == "Alpha")
-      assert(a.getAs[String]("alt_title") == "alpha-ar")
-      assert(a.getAs[Double]("box_office") == 1.23e7)
-      assert(a.getAs[Double]("budget") == 1.0e7) // kaggle zero fell back
-      assert(a.getAs[java.sql.Date]("release_date").toString == "1997-09-05")
-      assert(a.getAs[Long]("runtime_min") == 135L)
-      assert((a.getAs[Long]("r3"), a.getAs[Long]("r4"), a.getAs[Long]("r5"))
-        == ((0L, 1L, 2L)))
+    val a = got("tt0000001")
+    assert(a.getAs[String]("title") == "Alpha")
+    assert(a.getAs[String]("alt_title") == "alpha-ar")
+    assert(a.getAs[Double]("box_office") == 1.23e7)
+    assert(a.getAs[Double]("budget") == 1.0e7) // kaggle zero fell back
+    assert(a.getAs[java.sql.Date]("release_date").toString == "1997-09-05")
+    assert(a.getAs[Long]("runtime_min") == 135L)
+    assert((a.getAs[Long]("r3"), a.getAs[Long]("r4"), a.getAs[Long]("r5"))
+      == ((0L, 1L, 2L)))
 
-      val b = got("tt0000002")
-      assert(b.getAs[String]("alt_title") == "beta-jp")
-      assert(b.getAs[Double]("box_office") == 1.2e9)
-      assert(b.getAs[Double]("budget") == 9.0e8) // kaggle filled N/A
-      assert(b.getAs[java.sql.Date]("release_date").toString == "1997-09-05")
-      assert(b.getAs[Long]("runtime_min") == 180L)
-      assert(b.getAs[Long]("r3") == 1L)
+    val b = got("tt0000002")
+    assert(b.getAs[String]("alt_title") == "beta-jp")
+    assert(b.getAs[Double]("box_office") == 1.2e9)
+    assert(b.getAs[Double]("budget") == 9.0e8) // kaggle filled N/A
+    assert(b.getAs[java.sql.Date]("release_date").toString == "1997-09-05")
+    assert(b.getAs[Long]("runtime_min") == 180L)
+    assert(b.getAs[Long]("r3") == 1L)
 
-      val c = got("tt0000003")
-      assert(c.getAs[String]("title") == "Gamma") // keep-first beat re-release
-      assert(c.getAs[String]("alt_title") == null)
-      assert(c.getAs[Double]("box_office") == 1234567.0)
-      assert(c.getAs[Double]("budget") == 5.0e6)
-      assert(c.getAs[java.sql.Date]("release_date").toString == "1997-09-01")
-      assert(c.getAs[Long]("runtime_min") == 135L)
-      assert(c.getAs[Long]("r4") == 2L)
+    val c = got("tt0000003")
+    assert(c.getAs[String]("title") == "Gamma") // keep-first beat re-release
+    assert(c.getAs[String]("alt_title") == null)
+    assert(c.getAs[Double]("box_office") == 1234567.0)
+    assert(c.getAs[Double]("budget") == 5.0e6)
+    assert(c.getAs[java.sql.Date]("release_date").toString == "1997-09-01")
+    assert(c.getAs[Long]("runtime_min") == 135L)
+    assert(c.getAs[Long]("r4") == 2L)
 
-      val e = got("tt0000008")
-      assert(e.getAs[String]("alt_title") == "delta-aka")
-      assert(e.isNullAt(e.fieldIndex("box_office"))) // 'garbage' coerced null
-      assert(e.isNullAt(e.fieldIndex("budget")))     // absent in both sources
-      assert(e.isNullAt(e.fieldIndex("release_date")))
-      assert(e.isNullAt(e.fieldIndex("runtime_min")))
-      assert((e.getAs[Long]("r3"), e.getAs[Long]("r4"), e.getAs[Long]("r5"))
-        == ((0L, 0L, 0L)))
-    } finally {
-      java.nio.file.Files.deleteIfExists(file)
-      java.nio.file.Files.deleteIfExists(dir)
-    }
+    val e = got("tt0000008")
+    assert(e.getAs[String]("alt_title") == "delta-aka")
+    assert(e.isNullAt(e.fieldIndex("box_office"))) // 'garbage' coerced null
+    assert(e.isNullAt(e.fieldIndex("budget")))     // absent in both sources
+    assert(e.isNullAt(e.fieldIndex("release_date")))
+    assert(e.isNullAt(e.fieldIndex("runtime_min")))
+    assert((e.getAs[Long]("r3"), e.getAs[Long]("r4"), e.getAs[Long]("r5"))
+      == ((0L, 0L, 0L)))
   }
 }

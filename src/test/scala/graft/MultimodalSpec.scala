@@ -2,33 +2,21 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal.HeaderDecode
+import MediaFixtures._
 
 /** Byte-level semantics of the container-header decoder, independent of
   * the payload generator (hand-assembled arrays, not the generation
   * expressions — a generator bug can't self-certify). */
 class MultimodalSpec extends SparkSpecBase {
 
-  private def be4(v: Long): Array[Byte] =
-    Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-  private def be2(v: Long): Array[Byte] = Array((v >> 8).toByte, v.toByte)
-  private def hexBytes(h: String): Array[Byte] =
-    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-
   test("PNG IHDR decode: signature check + big-endian dims") {
-    val png = hexBytes("89504E470D0A1A0A" + "0000000D" + "49484452") ++
-      be4(640) ++ be4(480) ++ hexBytes("080600000012345678")
-    assert(HeaderDecode.decode(png) == ((640L, 480L, "png")))
+    assert(HeaderDecode.decode(pngIhdr) == ((640L, 480L, "png")))
   }
 
   test("JPEG SOF decode walks variable-length segments before the frame header") {
-    // SOI, a COM segment of unusual length (9), APP0, then SOF2
-    // (progressive) — offsets differ from the generator's fixed layout,
-    // so a fixed-offset cheat would fail here.
-    val jpeg = hexBytes("FFD8" + "FFFE0009" + "00112233445566") ++
-      hexBytes("FFE000104A46494600010100000100010000") ++
-      hexBytes("FFC2001108") ++ be2(1080) ++ be2(1920) ++
-      hexBytes("03012200021101031101" + "FFD9")
-    assert(HeaderDecode.decode(jpeg) == ((1920L, 1080L, "jpeg")))
+    // offsets differ from the generator's fixed layout, so a
+    // fixed-offset cheat would fail here
+    assert(HeaderDecode.decode(jpegSof2) == ((1920L, 1080L, "jpeg")))
   }
 
   test("non-media bytes fall through to unknown, not an exception") {
@@ -40,11 +28,7 @@ class MultimodalSpec extends SparkSpecBase {
 
   test("PNG chunk walk: every chunk surfaced with type, length, byte-sum") {
     import graft.operators.Multimodal.SegmentWalk
-    val png = hexBytes("89504E470D0A1A0A" + "0000000D" + "49484452") ++
-      be4(640) ++ be4(480) ++ hexBytes("080600000012345678") ++
-      hexBytes("00000003" + "74455874" + "010203" + "00000000") ++ // tEXt, 3 data bytes
-      hexBytes("00000000" + "49454E44" + "AE426082")
-    val segs = SegmentWalk.walk(png)
+    val segs = SegmentWalk.walk(pngChunks)
     assert(segs.map(_._1) == Seq("IHDR", "tEXt", "IEND"))
     assert(segs(0)._4 && !segs(1)._4) // IHDR is the keyframe segment
     assert(segs(1) == (("tEXt", 3L, 6L, false))) // 1+2+3
@@ -52,9 +36,7 @@ class MultimodalSpec extends SparkSpecBase {
 
   test("JPEG segment walk handles standalone markers and stops at EOI") {
     import graft.operators.Multimodal.SegmentWalk
-    val jpeg = hexBytes("FFD8" + "FFFE0004" + "0A0B" + "FFC00007" + "08") ++
-      be2(9) ++ be2(7) ++ hexBytes("FFD9")
-    val segs = SegmentWalk.walk(jpeg)
+    val segs = SegmentWalk.walk(jpegSof0)
     assert(segs.map(_._1) == Seq("COM", "SOF0", "EOI"))
     assert(segs(0) == (("COM", 2L, 21L, false)))   // 0x0A + 0x0B
     assert(segs(1)._4)                             // SOF is the keyframe
@@ -86,44 +68,18 @@ class MultimodalSpec extends SparkSpecBase {
     assert(imageio == header)
   }
 
-  private def le4(v: Long): Array[Byte] =
-    Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-  private def le2(v: Long): Array[Byte] = Array(v.toByte, (v >> 8).toByte)
-
   test("RIFF/WAV decode: hand-assembled PCM file, odd-size chunk padding") {
     import graft.operators.Multimodal.RiffDecode
-    // 2ch 44.1kHz 16-bit, 100 samples -> data 400 bytes, byteRate 176400.
-    // A LIST chunk with ODD size (3, padded to 4) sits before fmt so a
-    // walker that skips padding lands mid-chunk and fails.
-    val data = Array.fill(400)(0x41.toByte)
-    val wav = "RIFF".getBytes ++ le4(4 + 12 + 24 + 8 + 400) ++ "WAVE".getBytes ++
-      "LIST".getBytes ++ le4(3) ++ Array[Byte](1, 2, 3, 0) ++
-      "fmt ".getBytes ++ le4(16) ++ le2(1) ++ le2(2) ++ le4(44100) ++
-      le4(176400) ++ le2(4) ++ le2(16) ++
-      "data".getBytes ++ le4(400) ++ data
-    assert(RiffDecode.decode(wav) == ((2L, 44100L, 16L, 400L, 2L, "wav")))
+    assert(RiffDecode.decode(wavOddList) == ((2L, 44100L, 16L, 400L, 2L, "wav")))
     assert(RiffDecode.decode("not audio at all".getBytes("UTF-8"))._6 == "unknown")
     assert(RiffDecode.decode(Array[Byte]())._6 == "unknown")
   }
 
   test("BMFF box walk: hand-assembled MP4, v1 mvhd, non-generator layout") {
     import graft.operators.Multimodal.BmffDecode
-    def be8(v: Long): Array[Byte] = be4(v >> 32) ++ be4(v & 0xffffffffL)
-    def box(typ: String, content: Array[Byte]): Array[Byte] =
-      be4(content.length + 8L) ++ typ.getBytes("US-ASCII") ++ content
-    // Layout deliberately unlike the generator's: a `free` box inside
-    // moov, a VERSION-1 mvhd (64-bit times), no tkhd/mdhd/hdlr at all —
-    // a generic box walker must still land on mvhd and the stsd entry.
-    val entry = be4(86) ++ "hvc1".getBytes ++ Array.fill[Byte](24)(0) ++
-      be2(3840) ++ be2(2160) ++ Array.fill[Byte](50)(0)
-    val stsd = box("stsd", be4(0) ++ be4(1) ++ entry)
-    val trak = box("trak", box("mdia", box("minf", box("stbl", stsd))))
-    // truncated-but-offset-correct v1 mvhd: verflags, ctime8, mtime8,
-    // timescale 90000, duration(64) 123456789
-    val mvhd = box("mvhd",
-      hexBytes("01000000") ++ be8(7L) ++ be8(9L) ++ be4(90000) ++ be8(123456789L))
-    val moov = box("moov", box("free", Array[Byte](1, 2)) ++ mvhd ++ trak)
-    val ftyp = box("ftyp", "isom".getBytes ++ be4(0))
+    // A generic box walker must land on mvhd and the stsd entry in a
+    // layout unlike the generator's (MediaFixtures.mp4Moov).
+    val (ftyp, moov) = (mp4Ftyp, mp4Moov)
     val mp4 = ftyp ++ moov
     assert(BmffDecode.decode(mp4) ==
       ((3840L, 2160L, "hvc1", 123456789000L / 90000L, "mp4")))
@@ -135,13 +91,10 @@ class MultimodalSpec extends SparkSpecBase {
     assert(BmffDecode.decode(broken)._3 == "unknown")
     // Legal size==0 on a trailing mdat (streamed-file layout): the walk
     // must step over it without declaring the file malformed.
-    val mdatEof = be4(0) ++ "mdat".getBytes ++ Array.fill[Byte](32)(7)
     assert(BmffDecode.decode(ftyp ++ moov ++ mdatEof) ==
       ((3840L, 2160L, "hvc1", 123456789000L / 90000L, "mp4")))
     // Legal size==1 (64-bit largesize, 16-byte header) wrapping moov:
     // payload offsets shift by the wider header; fields still decode.
-    val moovLarge = be4(1) ++ "moov".getBytes ++ be8(moov.length + 8L) ++
-      moov.drop(8)
     assert(BmffDecode.decode(ftyp ++ moovLarge ++ mdatEof) ==
       ((3840L, 2160L, "hvc1", 123456789000L / 90000L, "mp4")))
     // size==1 with a truncated largesize is malformed, not a loop.

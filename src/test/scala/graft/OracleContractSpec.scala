@@ -25,7 +25,7 @@ class OracleContractSpec extends SparkSpecBase {
   }
 
   test("calibratedRhpBits re-counts when the dir contents change") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bits").toString
+    val dir = tempDir("graft-bits").toString
     def write(n: Int): Unit = {
       import spark.implicits._
       (0 until n).map(_.toLong).toDF("vec_id")

@@ -86,7 +86,7 @@ class PostingsLifecycleSpec extends SparkSpecBase {
 
   test("persisted segmented state == in-memory composition, and compaction changes files not frames") {
     val d = sf001
-    val dir = java.nio.file.Files.createTempDirectory("graft-postlc").toString
+    val dir = tempDir("graft-postlc").toString
     val (base, batch1, delIds, batch2) = Incremental.composedDocSlices(spark, d)
     Retrieval.writePostingsLifecycleState(spark,
       Retrieval.postingsLifecycleOf(spark, base), dir)
@@ -120,7 +120,7 @@ class PostingsLifecycleSpec extends SparkSpecBase {
 
   test("index compaction: appended cell files fold, frames unchanged") {
     val d = sf001
-    val dir = java.nio.file.Files.createTempDirectory("graft-idxlc").toString
+    val dir = tempDir("graft-idxlc").toString
     // Base index over 60% of vectors, then three small appends + a
     // delete — the fragmenting cycle.
     val e = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))

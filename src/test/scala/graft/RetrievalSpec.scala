@@ -129,7 +129,7 @@ class RetrievalSpec extends SparkSpecBase {
   }
 
   test("e11: persisted-state append == in-query key (production ingest shape)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-postings").toString
+    val dir = tempDir("graft-postings").toString
     Retrieval.writePostingsState(spark, sf001, dir)
     val fromState = Retrieval.appendPostingsFromState(spark, sf001, dir)
       .collect().toSet

@@ -90,7 +90,7 @@ class SchemaCanarySpec extends SparkSpecBase {
   }
 
   test("eventsWithTs rejects an unsupported ts encoding with a named error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-canary").toString
+    val dir = tempDir("graft-canary").toString
     spark.range(3)
       .selectExpr("id AS event_id", "CAST(id AS STRING) AS ts", "id AS user_id",
         "'click' AS event_type", "CAST(id AS DOUBLE) AS value", "'{}' AS props")

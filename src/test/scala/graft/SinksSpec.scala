@@ -10,7 +10,7 @@ class SinksSpec extends SparkSpecBase {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft-sinks").toString
+    tempDir("graft-sinks").toString
 
   test("csv round trip with explicit schema; malformed cells null out") {
     val dir = tmp()

@@ -66,15 +66,15 @@ class StreamNearDupSpec extends SparkSpecBase {
   }
 
   test("bucket state survives a checkpoint restart (cross-restart pairs still found)") {
-    val in = Files.createTempDirectory("graft-neardup-in").toString
-    val chk = Files.createTempDirectory("graft-neardup-chk").toString
-    val out = Files.createTempDirectory("graft-neardup-out").toString
+    val in = tempDir("graft-neardup-in").toString
+    val chk = tempDir("graft-neardup-chk").toString
+    val out = tempDir("graft-neardup-out").toString
     val (pa, pb, _) = batchPairs.head
     val split = (pa + pb) / 2
     // JSON-encode via the dataframe writer to keep text escaping exact;
     // stage-then-move so the file source never lists a partial file.
     def publishDf(name: String, rows: Seq[(Long, String)]): Unit = {
-      val stage = Files.createTempDirectory("graft-neardup-stage").toString
+      val stage = tempDir("graft-neardup-stage").toString
       rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").json(stage)
       val part = new java.io.File(stage).listFiles()
         .find(_.getName.endsWith(".json")).get

@@ -28,7 +28,7 @@ class StreamRestartSpec extends SparkSpecBase {
   }
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   test("s03 streaming dedup: restart restores dedup state and never re-emits") {
     val in = tmp("graft-restart-in"); val chk = tmp("graft-restart-chk")

@@ -42,7 +42,7 @@ class StreamTakedownSpec extends SparkSpecBase {
 
   test("drain restart: checkpoint resumes mid-op-log, each op applied exactly once") {
     val d = sf001
-    val root = java.nio.file.Files.createTempDirectory("graft-s10-restart").toString
+    val root = tempDir("graft-s10-restart").toString
     Incremental.writeDeleteGroupState(spark, d, s"$root/v0")
     // Publish only the FIRST op file; drain to completion; stop.
     StreamOps.publishTakedownOps(spark, d, s"$root/ops", Seq(3L))
@@ -75,7 +75,7 @@ class StreamTakedownSpec extends SparkSpecBase {
 
   test("fresh-checkpoint replay of an already-applied op-log leaves the state fixed") {
     val d = sf001
-    val root = java.nio.file.Files.createTempDirectory("graft-s10-replay").toString
+    val root = tempDir("graft-s10-replay").toString
     Incremental.writeDeleteGroupState(spark, d, s"$root/v0")
     StreamOps.publishTakedownOps(spark, d, s"$root/ops", Seq(3L, 13L, 23L))
     StreamOps.takedownDrain(spark, root, s"$root/ops", s"$root/ckpt1")

@@ -220,14 +220,14 @@ class StreamingParitySpec extends SparkSpecBase {
     val norm = Tables.normalizeEventTs(raw)
     val med = norm.selectExpr("approx_percentile(ts_ns, 0.5)").head().getLong(0)
     val origCols = raw.columns.map(col).toSeq
-    val tmp = Files.createTempDirectory("graft_s06_mp_")
+    val tmp = tempDir("graft_s06_mp_")
     val evDir = tmp.resolve("events.parquet")
     Files.createDirectory(evDir)
     val now = System.currentTimeMillis()
     Seq((norm.filter(col("ts_ns") >= med).select(origCols: _*), 0), // late half, older mtime
         (norm.filter(col("ts_ns") < med).select(origCols: _*), 1))
       .foreach { case (half, i) =>
-        val w = Files.createTempDirectory("graft_s06_mp_w_")
+        val w = tempDir("graft_s06_mp_w_")
         half.coalesce(1).write.mode("overwrite").parquet(w.toString)
         import scala.jdk.CollectionConverters._
         val part = Files.list(w).iterator().asScala

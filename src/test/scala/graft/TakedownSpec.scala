@@ -58,7 +58,7 @@ class TakedownSpec extends SparkSpecBase {
 
   test("deleteGroupsFromState (persisted path) == in-query d16") {
     val d = sf001
-    val dir = java.nio.file.Files.createTempDirectory("graft-del-groups").toString
+    val dir = tempDir("graft-del-groups").toString
     Incremental.writeDeleteGroupState(spark, d, dir)
     val deleted = Tables.documents(spark, d).filter(pred(col("doc_id")))
       .select(col("doc_id").as("id"))
@@ -99,7 +99,7 @@ class TakedownSpec extends SparkSpecBase {
 
   test("deletePostingsFromState (persisted path) == in-query e14 (real data)") {
     val d = sf001
-    val dir = java.nio.file.Files.createTempDirectory("graft-del-post").toString
+    val dir = tempDir("graft-del-post").toString
     Retrieval.writeDeletePostingsState(spark, d, dir)
     val deletedIds = Tables.documents(spark, d)
       .filter(pred(col("doc_id"))).select("doc_id")
@@ -141,7 +141,7 @@ class TakedownSpec extends SparkSpecBase {
   test("deleteCurationFromState (persisted path) == in-query x18 (real data)") {
     import graft.operators.Curation
     val d = sf001
-    val dir = java.nio.file.Files.createTempDirectory("graft-del-cur").toString
+    val dir = tempDir("graft-del-cur").toString
     Curation.writeCurationStateAll(spark, d, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
       (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
@@ -164,7 +164,7 @@ class TakedownSpec extends SparkSpecBase {
 
   test("index delete: touched-cell-only rewrite, remaining-corpus equality, query parity") {
     val d = sf001
-    val dir = java.nio.file.Files.createTempDirectory("graft-del-idx").toString
+    val dir = tempDir("graft-del-idx").toString
     Incremental.writeFullIndexState(spark, d, dir)
     def cellFiles(): Map[String, Map[String, Long]] = {
       val root = new java.io.File(s"$dir/index")
