@@ -238,9 +238,8 @@ object IncBench {
         concat(col("text"), lit(" zzadversarialmarker")).as("text"))
     val newIds = batchDocs.select(col("doc_id").as("id"))
     val newSh = Dedup.shingledDocs(spark, batchDocs)
-    def labels = spark.read.parquet(s"$dir/labels")
-    def bands = spark.read.parquet(s"$dir/bands")
-    def sh = spark.read.parquet(s"$dir/shingles")
+    val Seq(labels, bands, sh) =
+      graft.sources.StateDir.read(spark, dir, "labels", "bands", "shingles")
     val batchRows = newIds.count()
     val corpusRows = labels.count()
     // Fan-out evidence: the merge-CC output must track the batch (each

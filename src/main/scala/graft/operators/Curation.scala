@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StateDir
 import graft.functions.{GraftShingles, Text}
 
 /** The curation DECISION operator (SURVEY §2.H): the end-to-end
@@ -508,23 +509,24 @@ object Curation {
                          mod: Int = Incremental.IngestMod): Unit = {
     val base = Tables.documents(s, d)
       .filter(!(pmod(col("doc_id"), lit(mod)) === 0))
-    val st = curationState(s, base)
-    st.decisions.write.mode("overwrite").parquet(s"$dir/decisions")
-    st.bands.write.mode("overwrite").parquet(s"$dir/bands")
-    st.shingles.write.mode("overwrite").parquet(s"$dir/shingles")
-    st.pairs.write.mode("overwrite").parquet(s"$dir/pairs")
-    st.quality.write.mode("overwrite").parquet(s"$dir/quality")
-    st.splits.write.mode("overwrite").parquet(s"$dir/splits")
-    st.benchGrams.write.mode("overwrite").parquet(s"$dir/benchgrams")
-    st.cleanGrams.write.mode("overwrite").parquet(s"$dir/cleangrams")
+    publishState(curationState(s, base), dir)
   }
 
-  private def readState(s: SparkSession, dir: String): CurationState =
-    CurationState(
-      s.read.parquet(s"$dir/decisions"), s.read.parquet(s"$dir/bands"),
-      s.read.parquet(s"$dir/shingles"), s.read.parquet(s"$dir/pairs"),
-      s.read.parquet(s"$dir/quality"), s.read.parquet(s"$dir/splits"),
-      s.read.parquet(s"$dir/benchgrams"), s.read.parquet(s"$dir/cleangrams"))
+  /** The table names of a persisted [[CurationState]], in field order. */
+  private val StateTables = Seq("decisions", "bands", "shingles", "pairs",
+    "quality", "splits", "benchgrams", "cleangrams")
+
+  private def publishState(st: CurationState, dir: String): Unit =
+    StateDir.publish(dir, StateTables.zip(Seq(st.decisions, st.bands,
+      st.shingles, st.pairs, st.quality, st.splits, st.benchGrams,
+      st.cleanGrams)))
+
+  private def readState(s: SparkSession, dir: String): CurationState = {
+    val Seq(decisions, bands, shingles, pairs, quality, splits, benchGrams,
+      cleanGrams) = StateDir.read(s, dir, StateTables: _*)
+    CurationState(decisions, bands, shingles, pairs, quality, splits,
+      benchGrams, cleanGrams)
+  }
 
   private def batchOf(s: SparkSession, d: String, mod: Int): DataFrame =
     Tables.documents(s, d).filter(pmod(col("doc_id"), lit(mod)) === 0)
@@ -595,28 +597,18 @@ object Curation {
   /** Persist FULL-corpus curation state (the artifact a takedown runs
     * against — [[writeCurationState]] holds out a batch for the merge
     * gate; deletes start from the complete current state). */
-  def writeCurationStateAll(s: SparkSession, d: String, dir: String): Unit = {
-    val all = Tables.documents(s, d)
-    val st = curationState(s, all)
-    st.decisions.write.mode("overwrite").parquet(s"$dir/decisions")
-    st.bands.write.mode("overwrite").parquet(s"$dir/bands")
-    st.shingles.write.mode("overwrite").parquet(s"$dir/shingles")
-    st.pairs.write.mode("overwrite").parquet(s"$dir/pairs")
-    st.quality.write.mode("overwrite").parquet(s"$dir/quality")
-    st.splits.write.mode("overwrite").parquet(s"$dir/splits")
-    st.benchGrams.write.mode("overwrite").parquet(s"$dir/benchgrams")
-    st.cleanGrams.write.mode("overwrite").parquet(s"$dir/cleangrams")
-  }
+  def writeCurationStateAll(s: SparkSession, d: String, dir: String): Unit =
+    publishState(curationState(s, Tables.documents(s, d)), dir)
 
   /** The production curation takedown from PERSISTED state: reads only
     * decisions + pairs + quality + splits (the delete never touches
     * bands/shingles/grams — no new edges, immutable registry). */
-  def deleteCurationFromState(s: SparkSession, d: String, dir: String): DataFrame =
-    deleteCuration(s,
-      s.read.parquet(s"$dir/decisions"),
-      s.read.parquet(s"$dir/pairs"),
-      s.read.parquet(s"$dir/quality"), s.read.parquet(s"$dir/splits"),
+  def deleteCurationFromState(s: SparkSession, d: String, dir: String): DataFrame = {
+    val Seq(decisions, pairs, quality, splits) =
+      StateDir.read(s, dir, "decisions", "pairs", "quality", "splits")
+    deleteCuration(s, decisions, pairs, quality, splits,
       deleteSlice(Tables.documents(s, d)))
+  }
 
   /** The production merge: full combined decisions from PERSISTED state. */
   def mergeCurationFromState(s: SparkSession, d: String, dir: String,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.StateDir
 
 /** Incremental corpus ingestion — the operation a 100 TB pipeline runs
   * DAILY: a new document batch arrives and must join the existing dedup
@@ -284,20 +285,19 @@ object Incremental {
   def writeGroupState(s: SparkSession, d: String, dir: String,
                       mod: Int = IngestMod): Unit = {
     val (labels, bands, sh) = baseGroupState(s, d, mod)
-    labels.write.mode("overwrite").parquet(s"$dir/labels")
-    bands.write.mode("overwrite").parquet(s"$dir/bands")
-    sh.write.mode("overwrite").parquet(s"$dir/shingles")
+    StateDir.publish(dir, GroupTables.zip(Seq(labels, bands, sh)))
   }
+
+  private val GroupTables = Seq("labels", "bands", "shingles")
 
   /** The production ingest: merge the batch into PERSISTED state. Work
     * is bounded by the batch's band fan-out + the final relabel — the
     * base pair-generation and base CC never re-run. */
   def mergeFromState(s: SparkSession, d: String, dir: String,
-                     mod: Int = IngestMod): DataFrame =
-    ingestAndResolve(s, d,
-      s.read.parquet(s"$dir/labels"),
-      s.read.parquet(s"$dir/bands"),
-      s.read.parquet(s"$dir/shingles"), mod)
+                     mod: Int = IngestMod): DataFrame = {
+    val Seq(labels, bands, sh) = StateDir.read(s, dir, GroupTables: _*)
+    ingestAndResolve(s, d, labels, bands, sh, mod)
+  }
 
   /** [[ingestDupGroupsDelta]] over persisted state: the batch-bounded
     * label upsert a daily pipeline writes back. */
@@ -307,10 +307,8 @@ object Incremental {
     val newSh = Dedup.shingled(s, d).filter(isNew)
     val newIds = Tables.documents(s, d).select(col("doc_id").as("id"))
       .filter(pmod(col("id"), lit(mod)) === 0)
-    ingestDupGroupsDelta(s,
-      s.read.parquet(s"$dir/labels"),
-      s.read.parquet(s"$dir/bands"),
-      s.read.parquet(s"$dir/shingles"), newIds, newSh)
+    val Seq(labels, bands, sh) = StateDir.read(s, dir, GroupTables: _*)
+    ingestDupGroupsDelta(s, labels, bands, sh, newIds, newSh)
   }
 
   /** Persist the ANN-index state a pipeline carries between batches:
@@ -321,12 +319,8 @@ object Incremental {
                       mod: Int = IngestMod): Unit = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val base = e.filter(!(pmod(col("vec_id"), lit(mod)) === 0))
-    val centroids = Similarity.kmeansCentroids(s, base)
-    val codebooks = Similarity.pqCodebooks(s, base)
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
-    Similarity.e05IndexFrom(s, base, centroids, codebooks)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/index")
+    writeIndexStateOf(s, base, Similarity.kmeansCentroids(s, base),
+      Similarity.pqCodebooks(s, base), dir)
   }
 
   /** The production append: encode the batch against PERSISTED frozen
@@ -339,11 +333,11 @@ object Incremental {
                       shortlist: Int = Similarity.PqShortlist): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val batch = e.filter(pmod(col("vec_id"), lit(mod)) === 0)
-    val centroids = s.read.parquet(s"$dir/centroids")
-    val codebooks = s.read.parquet(s"$dir/codebooks")
-    val index = s.read.parquet(s"$dir/index")
-      .select(col("cell"), col("c_id"), col("recon"))
-    val combined = appendToIndex(s, index, centroids, codebooks, batch)
+    val Seq(centroids, codebooks, index) =
+      StateDir.read(s, dir, "centroids", "codebooks", "index")
+    val combined = appendToIndex(s,
+      index.select(col("cell"), col("c_id"), col("recon")),
+      centroids, codebooks, batch)
     Similarity.e05FromIndex(s, e, centroids, combined, shortlist)
   }
 
@@ -513,18 +507,17 @@ object Incremental {
     * create edges). */
   def writeDeleteGroupState(s: SparkSession, d: String, dir: String): Unit = {
     val (labels, labeledPairs) = fullGroupState(s, d)
-    labels.write.mode("overwrite").parquet(s"$dir/labels")
-    labeledPairs.write.mode("overwrite").parquet(s"$dir/pairs")
+    StateDir.publish(dir, Seq("labels" -> labels, "pairs" -> labeledPairs))
   }
 
   /** The production delete: propagate a takedown list through PERSISTED
     * group state — touched-component re-CC only, one map-side pass over
     * the label table. Frame-equal to the in-query d16 (TakedownSpec). */
   def deleteGroupsFromState(s: SparkSession, dir: String,
-                            deleted: DataFrame): DataFrame =
-    resolveGroups(deleteFromGroups(s,
-      s.read.parquet(s"$dir/labels"),
-      s.read.parquet(s"$dir/pairs"), deleted))
+                            deleted: DataFrame): DataFrame = {
+    val Seq(labels, pairs) = StateDir.read(s, dir, "labels", "pairs")
+    resolveGroups(deleteFromGroups(s, labels, pairs, deleted))
+  }
 
   /** e15: takedown propagation through the IVF×PQ index as a gated key.
     * Quantizers stay FROZEN (trained on the pre-delete corpus — the
@@ -562,12 +555,11 @@ object Incremental {
     * frame — the shared write tail of [[writeFullIndexState]] and the
     * composed-lifecycle spec's base publish. */
   def writeIndexStateOf(s: SparkSession, base: DataFrame, centroids: DataFrame,
-                        codebooks: DataFrame, dir: String): Unit = {
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    codebooks.write.mode("overwrite").parquet(s"$dir/codebooks")
-    Similarity.e05IndexFrom(s, base, centroids, codebooks)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/index")
-  }
+                        codebooks: DataFrame, dir: String): Unit =
+    StateDir.publish(dir, Seq("centroids" -> centroids,
+      "codebooks" -> codebooks,
+      "index" -> Similarity.e05IndexFrom(s, base, centroids, codebooks)),
+      partitionBy = Map("index" -> "cell"))
 
   /** e17: the composed lifecycle gate for the DENSE index — d17/e16's
     * slice history through the IVF×PQ state: quantizers train on the
@@ -616,11 +608,9 @@ object Incremental {
                              live: Column => Column,
                              shortlist: Int = Similarity.PqShortlist): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val centroids = s.read.parquet(s"$dir/centroids")
-    val index = s.read.parquet(s"$dir/index")
-      .select(col("cell"), col("c_id"), col("recon"))
+    val Seq(centroids, index) = StateDir.read(s, dir, "centroids", "index")
     Similarity.e05FromIndex(s, e.filter(live(col("vec_id"))), centroids,
-      index, shortlist)
+      index.select(col("cell"), col("c_id"), col("recon")), shortlist)
   }
 
   /** Delete vectors from a PERSISTED cell-partitioned IVF×PQ index,
@@ -903,19 +893,19 @@ object Incremental {
     dirs
   }
 
-  /** Persist lifecycle state (the four nightly artifacts). Each
-    * operation writes a NEW version directory — atomic publish, and
-    * never an overwrite of a path a lazy plan is still reading. */
-  def writeGroupLifecycle(st: GroupLifecycleState, dir: String): Unit = {
-    st.labels.write.mode("overwrite").parquet(s"$dir/labels")
-    st.pairs.write.mode("overwrite").parquet(s"$dir/pairs")
-    st.bands.write.mode("overwrite").parquet(s"$dir/bands")
-    st.shingles.write.mode("overwrite").parquet(s"$dir/shingles")
-  }
+  /** Persist lifecycle state (the four nightly artifacts) as one
+    * [[StateDir.publish]]ed set: a reader sees the previous set or all
+    * four new tables, never new labels beside old or missing bands. Each
+    * operation publishes a NEW version dir, never over one being read. */
+  def writeGroupLifecycle(st: GroupLifecycleState, dir: String): Unit =
+    StateDir.publish(dir, LifecycleTables.zip(
+      Seq(st.labels, st.pairs, st.bands, st.shingles)))
 
   /** Read persisted lifecycle state back. */
-  def readGroupLifecycle(s: SparkSession, dir: String): GroupLifecycleState =
-    GroupLifecycleState(
-      s.read.parquet(s"$dir/labels"), s.read.parquet(s"$dir/pairs"),
-      s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/shingles"))
+  def readGroupLifecycle(s: SparkSession, dir: String): GroupLifecycleState = {
+    val Seq(labels, pairs, bands, sh) = StateDir.read(s, dir, LifecycleTables: _*)
+    GroupLifecycleState(labels, pairs, bands, sh)
+  }
+
+  private val LifecycleTables = Seq("labels", "pairs", "bands", "shingles")
 }

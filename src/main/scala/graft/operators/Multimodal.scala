@@ -1373,20 +1373,23 @@ object Multimodal {
       "00010000 00000000 00000000 00000000 00010000 00000000" +
         "00000000 00000000 40000000"
 
-    def encode(frames: Seq[Array[Byte]], w: Int, h: Int): Array[Byte] = {
+    def encode(frames: Seq[Array[Byte]], w: Int, h: Int): Array[Byte] =
+      mux(frames, w, h, None)
+
+    /** The file [[encode]] (no audio) and [[encodeAv]] write: ftyp, a moov
+      * holding the video trak (track 1) and the optional audio trak
+      * (track 2), and one mdat with the frame bytes then the audio
+      * bytes. */
+    private def mux(frames: Seq[Array[Byte]], w: Int, h: Int,
+                    audio: Option[(Int, Array[Int])]): Array[Byte] = {
       require(frames.nonEmpty, "a video needs at least one frame")
+      audio.foreach { case (_, a) => require(a.nonEmpty, "an audio trak needs samples") }
       val ftyp = hex("00000018 66747970 69736F6D 00000200 69736F6D 69736F32")
       val n = frames.length.toLong
       val mvhd = box("mvhd", be32a(0, 0, 0, 600, n) ++
-        hex("00010000 01000000 0000000000000000" + Matrix + ("00" * 24) +
-          "00000002"))
-      val tkhd = box("tkhd", be32a(7, 0, 0, 1, 0, n) ++
-        hex("0000000000000000 0000 0000 0000 0000" + Matrix) ++
-        be32a(w.toLong << 16, h.toLong << 16))
-      val mdhd = box("mdhd", be32a(0, 0, 0, 600, n) ++ hex("55C4 0000"))
-      val hdlr = box("hdlr", be32a(0, 0) ++ "vide".getBytes("US-ASCII") ++
-        new Array[Byte](13))
-      val entry = {
+        hex("00010000 01000000 0000000000000000" + Matrix + ("00" * 24)) ++
+        be32a(if (audio.isEmpty) 2 else 3)) // next track id
+      val pngEntry = {
         val o = bos
         o.write(be32a(86)); o.write("png ".getBytes("US-ASCII"))
         o.write(hex("000000000000 0001 0000 0000 000000000000000000000000"))
@@ -1396,27 +1399,55 @@ object Multimodal {
           "0018 FFFF"))
         o.toByteArray
       }
-      val stsd = box("stsd", be32a(0, 1) ++ entry)
-      val stts = box("stts", be32a(0, 1, n, 1))
-      val stsc = box("stsc", be32a(0, 1, 1, n, 1))
-      val stsz = box("stsz", be32a(0L +: 0L +: n +: frames.map(_.length.toLong): _*))
-      // stco needs the absolute mdat payload offset: compute the moov
-      // size with a placeholder, then rebuild with the real value (the
-      // offset does not change the box sizes).
-      def assemble(chunkOff: Long): Array[Byte] = {
-        val stco = box("stco", be32a(0, 1, chunkOff))
-        val stbl = box("stbl", stsd ++ stts ++ stsc ++ stsz ++ stco)
-        val minf = box("minf", stbl)
-        val mdia = box("mdia", mdhd ++ hdlr ++ minf)
-        val trak = box("trak", tkhd ++ mdia)
-        val moov = box("moov", mvhd ++ trak)
-        val mdat = box("mdat", frames.reduce(_ ++ _))
-        ftyp ++ moov ++ mdat
+      val frameBytes = frames.map(_.length).sum
+      val aBytes = audio.fold(Array.emptyByteArray) { case (bits, a) => PcmCodec.pack(bits, a) }
+      def traks(chunkOff: Long): Array[Byte] = {
+        val video = trak(1, 600, n, "0000", w, h, "vide", Array.emptyByteArray,
+          pngEntry, be32a(0L +: 0L +: n +: frames.map(_.length.toLong): _*),
+          chunkOff)
+        audio.fold(video) { case (bits, a) =>
+          val o = bos
+          o.write(be32a(36))
+          o.write((if (bits == 8) "raw " else "sowt").getBytes("US-ASCII"))
+          o.write(hex("000000000000 0001 0000 0000 00000000"))
+          o.write(be32a((1L << 16) | bits.toLong)) // channels=1, samplesize
+          o.write(hex("0000 0000"))
+          o.write(be32a(PcmCodec.SampleRate << 16))
+          val an = a.length.toLong
+          video ++ trak(2, PcmCodec.SampleRate, an, "0100", 0, 0, "soun",
+            box("smhd", be32a(0, 0)), o.toByteArray,
+            be32a(0, (bits / 8).toLong, an), chunkOff + frameBytes)
+        }
       }
+      def assemble(chunkOff: Long): Array[Byte] =
+        ftyp ++ box("moov", mvhd ++ traks(chunkOff)) ++
+          box("mdat", frames.reduce(_ ++ _) ++ aBytes)
+      // stco needs the absolute mdat payload offset, which sits at EOF
+      // minus the media bytes; the offset does not change any box size,
+      // so one probe pass fixes it.
       val probe = assemble(0)
-      // mdat payload sits at EOF minus the frame bytes; the offset does
-      // not change any box size, so one probe pass fixes it.
-      assemble((probe.length - frames.map(_.length).sum).toLong)
+      assemble((probe.length - frameBytes - aBytes.length).toLong)
+    }
+
+    /** One trak of `count` one-tick samples in one chunk at `chunkOff`:
+      * tkhd, then mdia → mdhd, hdlr, minf → `mediaHeader` and stbl
+      * (stsd holding `entry`, stts, stsc, stsz `sizes`, stco). */
+    private def trak(id: Long, timescale: Long, count: Long, volume: String,
+                     w: Int, h: Int, handler: String, mediaHeader: Array[Byte],
+                     entry: Array[Byte], sizes: Array[Byte],
+                     chunkOff: Long): Array[Byte] = {
+      val tkhd = box("tkhd", be32a(7, 0, 0, id, 0, count) ++
+        hex("0000000000000000 0000 0000" + volume + "0000" + Matrix) ++
+        be32a(w.toLong << 16, h.toLong << 16))
+      val mdhd = box("mdhd", be32a(0, 0, 0, timescale, count) ++ hex("55C4 0000"))
+      val hdlr = box("hdlr", be32a(0, 0) ++ handler.getBytes("US-ASCII") ++
+        new Array[Byte](13))
+      val stbl = box("stbl", box("stsd", be32a(0, 1) ++ entry) ++
+        box("stts", be32a(0, 1, count, 1)) ++
+        box("stsc", be32a(0, 1, 1, count, 1)) ++
+        box("stsz", sizes) ++ box("stco", be32a(0, 1, chunkOff)))
+      box("trak", tkhd ++ box("mdia", mdhd ++ hdlr ++
+        box("minf", mediaHeader ++ stbl)))
     }
 
     /** One trak's decode-relevant tables: the hdlr handler type, the
@@ -1531,76 +1562,8 @@ object Multimodal {
       * mdat after the frame bytes. Audio bytes are
       * [[PcmCodec.pack]]'s — byte-identical to the WAV data chunk. */
     def encodeAv(frames: Seq[Array[Byte]], w: Int, h: Int,
-                 audioBits: Int, audio: Array[Int]): Array[Byte] = {
-      require(frames.nonEmpty, "a video needs at least one frame")
-      require(audio.nonEmpty, "an audio trak needs samples")
-      val ftyp = hex("00000018 66747970 69736F6D 00000200 69736F6D 69736F32")
-      val n = frames.length.toLong
-      val an = audio.length.toLong
-      val block = audioBits / 8
-      val aBytes = PcmCodec.pack(audioBits, audio)
-      val mvhd = box("mvhd", be32a(0, 0, 0, 600, n) ++
-        hex("00010000 01000000 0000000000000000" + Matrix + ("00" * 24) +
-          "00000003"))
-      val vTkhd = box("tkhd", be32a(7, 0, 0, 1, 0, n) ++
-        hex("0000000000000000 0000 0000 0000 0000" + Matrix) ++
-        be32a(w.toLong << 16, h.toLong << 16))
-      val vMdhd = box("mdhd", be32a(0, 0, 0, 600, n) ++ hex("55C4 0000"))
-      val vHdlr = box("hdlr", be32a(0, 0) ++ "vide".getBytes("US-ASCII") ++
-        new Array[Byte](13))
-      val vEntry = {
-        val o = bos
-        o.write(be32a(86)); o.write("png ".getBytes("US-ASCII"))
-        o.write(hex("000000000000 0001 0000 0000 000000000000000000000000"))
-        o.write((w >> 8) & 0xff); o.write(w & 0xff)
-        o.write((h >> 8) & 0xff); o.write(h & 0xff)
-        o.write(hex("00480000 00480000 00000000 0001" + ("00" * 32) +
-          "0018 FFFF"))
-        o.toByteArray
-      }
-      val vStsd = box("stsd", be32a(0, 1) ++ vEntry)
-      val vStts = box("stts", be32a(0, 1, n, 1))
-      val vStsc = box("stsc", be32a(0, 1, 1, n, 1))
-      val vStsz = box("stsz", be32a(0L +: 0L +: n +: frames.map(_.length.toLong): _*))
-      val aTkhd = box("tkhd", be32a(7, 0, 0, 2, 0, an) ++
-        hex("0000000000000000 0000 0000 0100 0000" + Matrix) ++
-        be32a(0, 0))
-      val aMdhd = box("mdhd",
-        be32a(0, 0, 0, PcmCodec.SampleRate, an) ++ hex("55C4 0000"))
-      val aHdlr = box("hdlr", be32a(0, 0) ++ "soun".getBytes("US-ASCII") ++
-        new Array[Byte](13))
-      val aEntry = {
-        val o = bos
-        o.write(be32a(36))
-        o.write((if (audioBits == 8) "raw " else "sowt").getBytes("US-ASCII"))
-        o.write(hex("000000000000 0001 0000 0000 00000000"))
-        o.write(be32a((1L << 16) | audioBits.toLong)) // channels=1, samplesize
-        o.write(hex("0000 0000"))
-        o.write(be32a(PcmCodec.SampleRate << 16))
-        o.toByteArray
-      }
-      val aStsd = box("stsd", be32a(0, 1) ++ aEntry)
-      val aStts = box("stts", be32a(0, 1, an, 1))
-      val aStsc = box("stsc", be32a(0, 1, 1, an, 1))
-      val aStsz = box("stsz", be32a(0, block.toLong, an))
-      val frameBytes = frames.map(_.length).sum
-      def assemble(chunkOff: Long): Array[Byte] = {
-        val vStco = box("stco", be32a(0, 1, chunkOff))
-        val vStbl = box("stbl", vStsd ++ vStts ++ vStsc ++ vStsz ++ vStco)
-        val vTrak = box("trak", vTkhd ++ box("mdia",
-          vMdhd ++ vHdlr ++ box("minf", vStbl)))
-        val aStco = box("stco", be32a(0, 1, chunkOff + frameBytes))
-        val smhd = box("smhd", be32a(0, 0))
-        val aStbl = box("stbl", aStsd ++ aStts ++ aStsc ++ aStsz ++ aStco)
-        val aTrak = box("trak", aTkhd ++ box("mdia",
-          aMdhd ++ aHdlr ++ box("minf", smhd ++ aStbl)))
-        val moov = box("moov", mvhd ++ vTrak ++ aTrak)
-        val mdat = box("mdat", frames.reduce(_ ++ _) ++ aBytes)
-        ftyp ++ moov ++ mdat
-      }
-      val probe = assemble(0)
-      assemble((probe.length - frameBytes - aBytes.length).toLong)
-    }
+                 audioBits: Int, audio: Array[Int]): Array[Byte] =
+      mux(frames, w, h, Some(audioBits -> audio))
   }
 
   /** m11 grammar constants. Plants: doc % 23 == 0 is a per-frame PNG

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.functions.Text
+import graft.sources.StateDir
 
 /** Lexical retrieval (SURVEY §2 e09): inverted-index BM25 top-k — the
   * keyword sibling of the ANN ladder (e01–e08). Every retrieval/curation
@@ -381,11 +382,14 @@ object Retrieval {
     * counted in N). */
   def writeDeletePostingsState(s: SparkSession, d: String, dir: String): Unit = {
     val all = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    postings(s, all).write.mode("overwrite").parquet(s"$dir/postings")
-    val (n, t) = ntScalars(all)
+    StateDir.publish(dir, Seq("postings" -> postings(s, all),
+      "nt" -> ntFrame(s, all), "doclens" -> doclensOf(all)))
+  }
+
+  /** The one-row (n, t) scalar table of a corpus. */
+  private def ntFrame(s: SparkSession, docs: DataFrame): DataFrame = {
+    val (n, t) = ntScalars(docs)
     s.createDataFrame(Seq((n, t))).toDF("n", "t")
-      .write.mode("overwrite").parquet(s"$dir/nt")
-    doclensOf(all).write.mode("overwrite").parquet(s"$dir/doclens")
   }
 
   /** Per-doc term count (doc_id, dl) covering EVERY doc — including
@@ -404,12 +408,14 @@ object Retrieval {
     * to the in-query e14 when fed the same slice (TakedownSpec). */
   def deletePostingsFromState(s: SparkSession, dir: String,
                               deletedIds: DataFrame): DataFrame = {
-    val ntRow = s.read.parquet(s"$dir/nt").head()
-    val delRow = s.read.parquet(s"$dir/doclens")
+    val Seq(nt, doclens, post) =
+      StateDir.read(s, dir, "nt", "doclens", "postings")
+    val ntRow = nt.head()
+    val delRow = doclens
       .join(deletedIds.select("doc_id"), "doc_id")
       .agg(count(lit(1)).as("dn"),
         coalesce(sum(col("dl")), lit(0L)).as("dt")).head()
-    val remaining = s.read.parquet(s"$dir/postings")
+    val remaining = post
       .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
       .join(deletedIds.select("doc_id"), Seq("doc_id"), "left_anti")
     appendTail(s, remaining,
@@ -426,10 +432,8 @@ object Retrieval {
                          mod: Int = graft.operators.Incremental.IngestMod): Unit = {
     val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
       .filter(col("doc_id") % mod =!= 0)
-    postings(s, base).write.mode("overwrite").parquet(s"$dir/postings")
-    val (n, t) = ntScalars(base)
-    s.createDataFrame(Seq((n, t))).toDF("n", "t")
-      .write.mode("overwrite").parquet(s"$dir/nt")
+    StateDir.publish(dir,
+      Seq("postings" -> postings(s, base), "nt" -> ntFrame(s, base)))
   }
 
   /** The production ingest: base postings READ BACK from parquet, batch
@@ -440,9 +444,10 @@ object Retrieval {
                               mod: Int = graft.operators.Incremental.IngestMod): DataFrame = {
     val batch = Tables.documents(s, d).select(col("doc_id"), col("text"))
       .filter(col("doc_id") % mod === 0)
-    val ntRow = s.read.parquet(s"$dir/nt").head()
+    val Seq(nt, post) = StateDir.read(s, dir, "nt", "postings")
+    val ntRow = nt.head()
     val (cn, ct) = ntScalars(batch)
-    appendTail(s, s.read.parquet(s"$dir/postings")
+    appendTail(s, post
       .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
       .unionByName(postings(s, batch)),
       ntRow.getAs[Long]("n") + cn, ntRow.getAs[Long]("t") + ct)
@@ -551,31 +556,28 @@ object Retrieval {
     queryPostingsLifecycle(s, appendPostingsLifecycle(s, st2, batch2))
   }
 
-  /** Persist segmented lifecycle state. The layout is append-friendly:
-    * [[appendPostingsLifecycleState]] lands NEW FILES under postings/
-    * and doclens/ (mode append — never a rewrite of earlier segments),
-    * [[deletePostingsLifecycleState]] appends tombstone files, and only
-    * the one-row meta (curSeg) is overwritten (read driver-side first —
-    * never lazily). */
+  /** Persist segmented lifecycle state (postings, doclens, tombs and the
+    * one-row meta holding curSeg) as one [[StateDir.publish]]ed set. The
+    * mutators then change the live set in place:
+    * [[appendPostingsLifecycleState]] appends NEW FILES under postings/
+    * and doclens/ and overwrites meta (read driver-side first);
+    * [[deletePostingsLifecycleState]] appends tombstone files. */
   def writePostingsLifecycleState(s: SparkSession,
-                                  st: PostingsLifecycleState, dir: String): Unit = {
-    st.postings.write.mode("overwrite").parquet(s"$dir/postings")
-    st.doclens.write.mode("overwrite").parquet(s"$dir/doclens")
-    st.tombs.write.mode("overwrite").parquet(s"$dir/tombs")
-    writeMeta(s, dir, st.curSeg)
-  }
+                                  st: PostingsLifecycleState, dir: String): Unit =
+    StateDir.publish(dir, LifecycleTables.zip(
+      Seq(st.postings, st.doclens, st.tombs, metaOf(s, st.curSeg))))
 
-  private def writeMeta(s: SparkSession, dir: String, curSeg: Int): Unit = {
+  private val LifecycleTables = Seq("postings", "doclens", "tombs", "meta")
+
+  private def metaOf(s: SparkSession, curSeg: Int): DataFrame = {
     import s.implicits._
     Seq(curSeg).toDF("cur_seg").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  def readPostingsLifecycleState(s: SparkSession, dir: String): PostingsLifecycleState =
-    PostingsLifecycleState(
-      s.read.parquet(s"$dir/postings"), s.read.parquet(s"$dir/doclens"),
-      s.read.parquet(s"$dir/tombs"),
-      s.read.parquet(s"$dir/meta").head().getAs[Int]("cur_seg"))
+  def readPostingsLifecycleState(s: SparkSession, dir: String): PostingsLifecycleState = {
+    val Seq(post, lens, tombs, meta) = StateDir.read(s, dir, LifecycleTables: _*)
+    PostingsLifecycleState(post, lens, tombs, meta.head().getAs[Int]("cur_seg"))
+  }
 
   /** The production append: O(batch) new segment files, one meta bump. */
   def appendPostingsLifecycleState(s: SparkSession, dir: String,
@@ -583,7 +585,7 @@ object Retrieval {
     val seg = s.read.parquet(s"$dir/meta").head().getAs[Int]("cur_seg") + 1
     stamped(seg, postings(s, batch)).write.mode("append").parquet(s"$dir/postings")
     stamped(seg, doclensOf(batch)).write.mode("append").parquet(s"$dir/doclens")
-    writeMeta(s, dir, seg)
+    metaOf(s, seg).write.mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** The production delete: O(takedown) tombstone rows appended, zero
@@ -610,24 +612,22 @@ object Retrieval {
     * file-count collapse, never a shuffle), and clears the tombstone
     * set. The LIVE view is frame-equal before and after (the
     * CompactionSpec gate — compaction has no query semantics of its
-    * own), curSeg is untouched so later appends keep monotone segments,
-    * and the kept rows are lineage-cut BEFORE overwriting the path the
-    * plan is lazily reading (the CLAUDE.md footgun). Sizing uses the
+    * own), and curSeg is untouched so later appends keep monotone
+    * segments. The compacted set is published as a new set (postings,
+    * doclens, tombs and meta together), so the plan reading the old
+    * set never reads a path being overwritten. Sizing uses the
     * PRE-compaction directory bytes — an overestimate when many rows
     * are dead, so the packing errs toward a few more files, never
     * giant ones. */
   def compactPostingsLifecycle(s: SparkSession, dir: String,
                                targetBytes: Long = CompactTargetBytes): Unit = {
     val st = readPostingsLifecycleState(s, dir)
-    val post = graft.Checkpoints.cut(liveRows(st.postings, st.tombs))
-    val lens = graft.Checkpoints.cut(liveRows(st.doclens, st.tombs))
-    def packed(df: DataFrame, sub: String): Unit = {
-      val n = packFileCount(s, dirBytes(s, s"$dir/$sub"), targetBytes)
-      df.coalesce(n).write.mode("overwrite").parquet(s"$dir/$sub")
-    }
-    packed(post, "postings")
-    packed(lens, "doclens")
-    emptyTombs(s).write.mode("overwrite").parquet(s"$dir/tombs")
+    def packed(rows: DataFrame, sub: String): DataFrame =
+      liveRows(rows, st.tombs)
+        .coalesce(packFileCount(s, dirBytes(s, s"$dir/$sub"), targetBytes))
+    writePostingsLifecycleState(s, PostingsLifecycleState(
+      packed(st.postings, "postings"), packed(st.doclens, "doclens"),
+      emptyTombs(s), st.curSeg), dir)
   }
 
   /** Compaction output file count: byte-targeted, with a PARALLELISM

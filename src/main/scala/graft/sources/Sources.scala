@@ -122,8 +122,9 @@ object Sinks {
   /** Key-based upsert (MERGE) into a parquet dataset: rows of `df`
     * replace existing rows with matching `keys`; unmatched rows append.
     * Parquet has no native MERGE, so this is read → anti-join → union →
-    * rewrite, STAGED through a sibling directory (Spark cannot overwrite
-    * a path it is reading) and committed by rename.
+    * rewrite, STAGED through [[StateDir]]'s hidden sibling directory
+    * (Spark cannot overwrite a path it is reading) and committed by its
+    * checked renames.
     *
     * With `partitionCol` set, only the partitions `df` actually touches
     * are read (partition-pruned scan), rewritten, and swapped — the
@@ -137,23 +138,12 @@ object Sinks {
              partitionCol: Option[String] = None): Unit = {
     import org.apache.spark.sql.functions.col
     val s = df.sparkSession
-    val hconf = s.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(hconf)
-    // FileSystem.rename/delete report failure by RETURNING FALSE (HDFS/
-    // S3A do not throw) — a swap step that "fails quietly" must abort
-    // loudly or it can drop a partition on the floor.
-    def mustRename(from: org.apache.hadoop.fs.Path,
-                   to: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"upsert: rename $from -> $to failed")
-    def mustDelete(p: org.apache.hadoop.fs.Path): Unit =
-      if (fs.exists(p) && !fs.delete(p, true))
-        throw new java.io.IOException(s"upsert: delete $p failed")
+    val fs = StateDir.fsOf(s, new org.apache.hadoop.fs.Path(path))
+    val target = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
     def write(d: DataFrame, p: String): Unit =
       partitionCol.fold(d.write.mode("overwrite").parquet(p))(pc =>
         d.write.partitionBy(pc).mode("overwrite").parquet(p))
-    if (!fs.exists(target)) { write(df, path); return }
+    if (!fs.exists(target)) { StateDir.staged(s, path)(write(df, _)); return }
 
     // The delta feeds the touched-partition collect, the anti-join, and
     // the union — persist so an expensive upstream runs once, not thrice.
@@ -177,28 +167,19 @@ object Sinks {
       val kept = existing.join(delta.select(keys.map(col): _*).distinct(),
         keys, "left_anti")
       val merged = kept.unionByName(delta)
-      val stamp = System.nanoTime()
-      val staging = new org.apache.hadoop.fs.Path(
-        target.getParent, s".${target.getName}-upsert-$stamp")
-      write(merged, staging.toString)
       partitionCol match {
         case Some(pc) =>
           // swap only the rewritten partition directories
+          val staging = StateDir.stagingOf(fs, target)
+          write(merged, staging.toString)
           for (st <- fs.listStatus(staging) if st.isDirectory &&
               st.getPath.getName.startsWith(s"$pc=")) {
             val dest = new org.apache.hadoop.fs.Path(target, st.getPath.getName)
-            mustDelete(dest)
-            mustRename(st.getPath, dest)
+            StateDir.delete(fs, dest)
+            StateDir.rename(fs, st.getPath, dest)
           }
-          mustDelete(staging)
-        case None =>
-          // unique backup name: residue from a crashed earlier run can
-          // never block (or be destroyed by) this swap
-          val old = new org.apache.hadoop.fs.Path(
-            target.getParent, s".${target.getName}-upsert-old-$stamp")
-          mustRename(target, old)
-          mustRename(staging, target)
-          mustDelete(old)
+          StateDir.delete(fs, staging)
+        case None => StateDir.staged(s, path)(write(merged, _))
       }
     } finally delta.unpersist()
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
+import graft.sources.StateDir
 
 /** Event with both exact-µs long and the event-time timestamp column
   * Structured Streaming needs for watermarks. */
@@ -689,12 +690,6 @@ object StreamOps {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("op",
         org.apache.spark.sql.types.StringType)))
-    def curVersion: Int = {
-      val p = new org.apache.hadoop.fs.Path(stateRoot)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.matches("v\\d+")).map(_.drop(1).toInt).max
-    }
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(opsDir)
     val applied = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -705,25 +700,15 @@ object StreamOps {
           .select(col("id")).distinct()
           .transform(graft.Checkpoints.cut) // read twice (emptiness + step)
         if (del.take(1).nonEmpty) {
-          val v = curVersion
-          val (nl, np) = Incremental.deleteGroupStateStep(s,
-            s.read.parquet(s"$stateRoot/v$v/labels"),
-            s.read.parquet(s"$stateRoot/v$v/pairs"), del)
-          // ATOMIC publish (round 19, ADVICE item): labels+pairs land in
-          // a staging dir and RENAME into v{n+1} in one namespace op —
-          // curVersion only matches v\d+, so a crash mid-write leaves an
-          // invisible .staging dir (cleared on the next attempt), never
-          // a half-published version the restarted drain would wedge on.
-          val p = new org.apache.hadoop.fs.Path(stateRoot)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val staging = new org.apache.hadoop.fs.Path(
-            stateRoot, s".v${v + 1}.staging")
-          fs.delete(staging, true) // stale staging from a killed run
-          nl.write.mode("overwrite").parquet(s"$staging/labels")
-          np.write.mode("overwrite").parquet(s"$staging/pairs")
-          require(fs.rename(staging,
-            new org.apache.hadoop.fs.Path(stateRoot, s"v${v + 1}")),
-            s"takedownDrain: could not publish v${v + 1} (rename failed)")
+          val v = StateDir.latest(stateRoot)
+          val Seq(labels, pairs) =
+            StateDir.read(s, s"$stateRoot/v$v", "labels", "pairs")
+          val (nl, np) = Incremental.deleteGroupStateStep(s, labels, pairs, del)
+          // A crash mid-write leaves only the hidden .v{n+1}.staging dir
+          // (cleared by the next attempt), never a half-published version
+          // the restarted drain would wedge on.
+          StateDir.publish(s"$stateRoot/v${v + 1}",
+            Seq("labels" -> nl, "pairs" -> np))
           applied.incrementAndGet()
         }
         ()
@@ -764,11 +749,8 @@ object StreamOps {
     Incremental.writeDeleteGroupState(s, d, s"$root/v0")
     publishTakedownOps(s, d, s"$root/ops", Seq(3L, 13L, 23L))
     takedownDrain(s, root, s"$root/ops", s"$root/ckpt")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val vMax = fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
-      .map(_.getPath.getName).filter(_.matches("v\\d+")).map(_.drop(1).toInt).max
-    Incremental.resolveGroups(s.read.parquet(s"$root/v$vMax/labels"))
+    Incremental.resolveGroups(
+      StateDir.read(s, s"$root/v${StateDir.latest(root)}", "labels").head)
   }
 
   /** Publish takedown op files (one per residue of doc_id % 30) FLAT
@@ -789,8 +771,8 @@ object StreamOps {
         .coalesce(1).write.mode("overwrite").parquet(scratch)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(scratch)).toSeq
         .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      fs.rename(part, new org.apache.hadoop.fs.Path(ops, f"b$i%02d.parquet"))
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
+      StateDir.rename(fs, part, new org.apache.hadoop.fs.Path(ops, f"b$i%02d.parquet"))
+      StateDir.delete(fs, new org.apache.hadoop.fs.Path(scratch))
     }
   }
 }

@@ -72,6 +72,21 @@ class Mp4AudioSpec extends SparkSpecBase {
     intercept[IllegalArgumentException](Mp4Frames.audioSamples("junkjunkjunk".getBytes))
   }
 
+  test("encode and encodeAv output is byte-stable (pinned digests)") {
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b)
+        .map(x => f"${x & 0xff}%02x").mkString
+    val (w, h, png5, _) = frame(5L)
+    val (_, _, png7, _) = frame(7L)
+    val frames = Seq(png5, png7, png5)
+    assert(sha(Mp4Frames.encode(frames, w, h)) ==
+      "4d7cc40d8f631bea8088912911602be93e6a9eefec8ce9dfacca653e2caa91d8")
+    assert(sha(Mp4Frames.encodeAv(frames, w, h, 8, sig(1, 80))) ==
+      "9412ace6907a36f48f856b657604427f1557bf7359d85467150a0befac393cda")
+    assert(sha(Mp4Frames.encodeAv(frames, w, h, 16, sig(2, 33))) ==
+      "8b234c1dffa8dca4cb5fdce08f0fb037a83a4a1391ed7c84dd3f6144e7deb0eb")
+  }
+
   test("m12 == m09 on real data: the audio trak path equals the WAV path") {
     val d = sf001
     def pairs(df: org.apache.spark.sql.DataFrame) =

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Incremental
+import graft.sources.StateDir
 import graft.streaming.StreamOps
 
 /** s10: takedowns arriving on a CDC stream. The oracle gate hash-proves
@@ -16,13 +17,6 @@ class StreamTakedownSpec extends SparkSpecBase {
   private def labelsAt(root: String, v: Int): Map[Long, Long] =
     spark.read.parquet(s"$root/v$v/labels")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  private def vMax(root: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v\\d+")).map(_.drop(1).toInt).max
-  }
 
   test("deleteGroupStateStep is idempotent: re-deleting absent ids is a no-op") {
     val labels = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L).toDF("id", "lbl")
@@ -47,7 +41,7 @@ class StreamTakedownSpec extends SparkSpecBase {
     // Publish only the FIRST op file; drain to completion; stop.
     StreamOps.publishTakedownOps(spark, d, s"$root/ops", Seq(3L))
     StreamOps.takedownDrain(spark, root, s"$root/ops", s"$root/ckpt")
-    assert(vMax(root) == 1, "first run must publish exactly one new version")
+    assert(StateDir.latest(root) == 1, "first run must publish exactly one new version")
     val afterFirst = labelsAt(root, 1)
     // Publish the remaining two; RESTART from the same checkpoint. The
     // file-source offsets must skip b00 (no replay → exactly two new
@@ -61,7 +55,7 @@ class StreamTakedownSpec extends SparkSpecBase {
         new org.apache.hadoop.fs.Path(s"$root/ops/$to"))
     }
     StreamOps.takedownDrain(spark, root, s"$root/ops", s"$root/ckpt")
-    assert(vMax(root) == 3,
+    assert(StateDir.latest(root) == 3,
       "restart must process exactly the two new files (no b00 replay)")
     assert(labelsAt(root, 1) == afterFirst, "v1 untouched by the restart")
     val oneShot = Incremental.deleteGroupsFromState(spark, s"$root/v0",
@@ -79,11 +73,31 @@ class StreamTakedownSpec extends SparkSpecBase {
     Incremental.writeDeleteGroupState(spark, d, s"$root/v0")
     StreamOps.publishTakedownOps(spark, d, s"$root/ops", Seq(3L, 13L, 23L))
     StreamOps.takedownDrain(spark, root, s"$root/ops", s"$root/ckpt1")
-    val settled = labelsAt(root, vMax(root))
+    val settled = labelsAt(root, StateDir.latest(root))
     // A fresh checkpoint replays every file — the worst-case recovery
     // posture. Deletes are idempotent, so the re-published versions are
     // value-identical.
     StreamOps.takedownDrain(spark, root, s"$root/ops", s"$root/ckpt2")
-    assert(labelsAt(root, vMax(root)) == settled)
+    assert(labelsAt(root, StateDir.latest(root)) == settled)
+  }
+
+  test("a killed drain's leftover .v{n}.staging is invisible, and the next drain replaces it with v{n}") {
+    val d = sf001
+    val root = tempDir("graft-s10-staging").toString
+    Incremental.writeDeleteGroupState(spark, d, s"$root/v0")
+    // What a drain killed mid-publish leaves: half of v1, in staging.
+    Seq(1L -> 1L).toDF("id", "lbl").write.parquet(s"$root/.v1.staging/labels")
+    assert(StateDir.latest(root) == 0, "a staging dir is not a version")
+    StreamOps.publishTakedownOps(spark, d, s"$root/ops", Seq(3L))
+    StreamOps.takedownDrain(spark, root, s"$root/ops", s"$root/ckpt")
+    assert(StateDir.latest(root) == 1)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/.v1.staging")))
+    val Seq(labels, pairs) = StateDir.read(spark, s"$root/v0", "labels", "pairs")
+    val (nl, np) = Incremental.deleteGroupStateStep(spark, labels, pairs,
+      Tables.documents(spark, d).filter(col("doc_id") % 30 === 3)
+        .select(col("doc_id").as("id")))
+    assert(labelsAt(root, 1) ==
+      nl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(spark.read.parquet(s"$root/v1/pairs").count() == np.count())
   }
 }
