@@ -60,9 +60,10 @@ object IncBench {
     val d09m = marginal(Incremental.mergeFromState(spark, sfDir, s"$stateDir/groups", mod))
     val d09d = marginal(Incremental.mergeDeltaFromState(spark, sfDir, s"$stateDir/groups", mod))
     val e06m = marginal(Incremental.appendFromState(spark, sfDir, s"$stateDir/ann", mod))
-    // Lexical index: e11's production posture — base postings read back
-    // from parquet, batch postings built fresh, global stats recomputed
-    // over the union (nothing frozen, nothing stale).
+    // Lexical index: e11's production posture — base lifecycle state
+    // read back from parquet, the batch appended as a new segment,
+    // global stats recomputed over the live view (nothing frozen,
+    // nothing stale).
     val tPost = timed(graft.operators.Retrieval.writePostingsState(
       spark, sfDir, s"$stateDir/postings", mod))
     val e11m = marginal(graft.operators.Retrieval.appendPostingsFromState(
@@ -99,7 +100,7 @@ object IncBench {
     * state persisted once, then the marginal cost of propagating the
     * deterministic 10% takedown slice (d16/e14/e15's rule) through each
     * structure — dup groups (touched-component re-CC), postings
-    * (anti-join + stat decrement + re-score), and the dense index
+    * (tombstones + live-view re-score), and the dense index
     * (touched-cell partition rewrite, timed as the one-shot state
     * surgery it is, plus the post-delete query pass). */
   private def runDeletes(spark: org.apache.spark.sql.SparkSession,
@@ -238,8 +239,8 @@ object IncBench {
         concat(col("text"), lit(" zzadversarialmarker")).as("text"))
     val newIds = batchDocs.select(col("doc_id").as("id"))
     val newSh = Dedup.shingledDocs(spark, batchDocs)
-    val Seq(labels, bands, sh) =
-      graft.sources.StateDir.read(spark, dir, "labels", "bands", "shingles")
+    val st = Incremental.readGroupLifecycle(spark, dir)
+    val (labels, bands, sh) = (st.labels, st.bands, st.shingles)
     val batchRows = newIds.count()
     val corpusRows = labels.count()
     // Fan-out evidence: the merge-CC output must track the batch (each

@@ -351,7 +351,7 @@ object Dedup {
   /** Candidate (id_a < id_b) pairs from a band table — the
     * pair-generating self-join half of [[minhashLshPairs]], factored so
     * the fused state builders ([[Curation.curationBase]],
-    * [[Incremental.baseGroupState]], [[Incremental.groupLifecycleOf]])
+    * [[Incremental.groupLifecycleOf]])
     * can generate candidates off an already-CUT band table instead of
     * re-banding per reference. Explicit repartition: exempt from AQE
     * input-size coalescing, which would otherwise run this self-join in

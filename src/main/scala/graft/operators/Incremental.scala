@@ -212,61 +212,38 @@ object Incremental {
                     codebooks: DataFrame, newE: DataFrame): DataFrame =
     index.unionByName(Similarity.e05IndexFrom(s, newE, centroids, codebooks))
 
-  /** The base corpus's pre-existing dup-group state (labels, bands,
-    * shingles), exactly as a production pipeline would have persisted it
-    * after its last batch: pairs → CC labelling over base docs only.
-    * Shared by the self-contained gated key (which rebuilds it in-query
-    * so the oracle can check it) and the persisted-state path
-    * ([[writeGroupState]]/[[mergeFromState]], which is what production
-    * actually runs — and what IncBench prices). */
-  def baseGroupState(s: SparkSession, d: String,
-                     mod: Int = IngestMod): (DataFrame, DataFrame, DataFrame) = {
-    // Lineage-cut the three state frames (round 19): they are the
-    // in-query analog of writeGroupState's persisted artifacts, and the
-    // downstream ingest consumes each several times (shingles twice in
-    // the verify's sa/sb plus the batch verify, bands in both the base
-    // self-join and the batch probe's build side, labels in the edge
-    // lift and both relabel maps) — uncut, every reference re-ran the
-    // corpus shingle pass.
-    val baseSh = graft.Checkpoints.cut(
-      Dedup.shingled(s, d).filter(!(pmod(col("doc_id"), lit(mod)) === 0)))
-    val baseBands = graft.Checkpoints.cut(Dedup.minhashBands(baseSh))
-    val basePairs = Dedup.verifyJaccard(
-        Dedup.bandCandidates(s, baseBands), baseSh, 0.5)
-      .select(col("id_a"), col("id_b"))
-    val baseVerts = Tables.documents(s, d).select(col("doc_id").as("id"))
-      .filter(!(pmod(col("id"), lit(mod)) === 0))
-    (graft.Checkpoints.cut(Dedup.connectedComponents(baseVerts, basePairs)),
-      baseBands, baseSh)
+  /** The gated append split at `mod`: ids ≡ 0 (mod `mod`) are the
+    * batch, the rest the base corpus — one definition for d09 and the
+    * persisted-state path. The batch shingles are cut on first use:
+    * [[batchPairs]] reads them ~5x (band table, touched buckets,
+    * build-side union, verify sa/sb), and uncut every read re-ran the
+    * batch shingle pass. Lazy, so a base-state write never pays it. */
+  private final class AppendSlice(s: SparkSession, d: String, mod: Int) {
+    private val docs = corpusDocs(s, d)
+    private val isNew = pmod(col("doc_id"), lit(mod)) === 0
+    val base: DataFrame = docs.filter(!isNew)
+    val ids: DataFrame = docs.filter(isNew).select(col("doc_id").as("id"))
+    lazy val shingles: DataFrame =
+      graft.Checkpoints.cut(Dedup.shingledDocs(s, docs.filter(isNew)))
   }
 
-  /** Ingest the batch into a given base state and resolve d06's group
-    * schema over the combined corpus — the tail shared by the gated key
-    * and the persisted-state path. */
-  private def ingestAndResolve(s: SparkSession, d: String,
-                               baseLabels: DataFrame, baseBands: DataFrame,
-                               baseSh: DataFrame, mod: Int): DataFrame = {
-    val isNew = pmod(col("doc_id"), lit(mod)) === 0
-    // Cut (round 19): batchPairs references the batch shingles ~5x
-    // (band table, touched buckets, build-side union, verify sa/sb).
-    val newSh = graft.Checkpoints.cut(Dedup.shingled(s, d).filter(isNew))
-    val newIds = Tables.documents(s, d).select(col("doc_id").as("id"))
-      .filter(pmod(col("id"), lit(mod)) === 0)
-    val labels =
-      ingestDupGroups(s, baseLabels, baseBands, baseSh, newIds, newSh)
-    val sizes = labels.groupBy(col("lbl").as("cid"))
-      .agg(count(lit(1)).as("group_size"))
-    labels.join(sizes, col("lbl") === col("cid"))
-      .select(col("id").as("doc_id"), col("lbl").as("canonical_id"),
-        col("group_size"), (col("id") === col("lbl")).as("is_keeper"))
-  }
+  private def corpusDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(col("doc_id"), col("text"))
+
+  /** Append the slice's batch to a lifecycle state and resolve d06's
+    * group schema over the combined corpus — the tail shared by the
+    * gated key and the persisted-state path. */
+  private def appendAndResolve(s: SparkSession, st: GroupLifecycleState,
+                               sl: AppendSlice): DataFrame =
+    resolveGroups(appendGroupLifecycle(s, st, sl.ids, sl.shingles).labels)
 
   /** d09: incremental dup-group ingestion as a gated key. The 20% batch
-    * (doc_id ≡ 0 mod [[IngestMod]]) is ingested into the base corpus's
-    * labelling via [[ingestDupGroups]]; output is d06's exact schema
-    * over the COMBINED corpus. The oracle is from-scratch CC over the
-    * combined pair graph (d06's recursive CTE verbatim), so the gate
-    * hash-proves incremental == from-scratch on every run.
+    * (doc_id ≡ 0 mod [[IngestMod]]) is appended to the base corpus's
+    * lifecycle state ([[groupLifecycleOf]] → [[appendGroupLifecycle]],
+    * whose labelling is [[ingestDupGroups]]'s merge); output is d06's
+    * exact schema over the COMBINED corpus. The oracle is from-scratch
+    * CC over the combined pair graph (d06's recursive CTE verbatim), so
+    * the gate hash-proves incremental == from-scratch on every run.
     *
     * NOTE ON THE BENCH NUMBER: this self-contained form REBUILDS the
     * base state in-query (the oracle needs one closed plan), so its
@@ -274,41 +251,33 @@ object Incremental {
     * The number production cares about is the MARGINAL ingest cost from
     * persisted state: [[mergeFromState]], priced by [[IncBench]]. */
   def d09IncrementalGroups(s: SparkSession, d: String): DataFrame = {
-    val (baseLabels, baseBands, baseSh) = baseGroupState(s, d)
-    ingestAndResolve(s, d, baseLabels, baseBands, baseSh, IngestMod)
+    val sl = new AppendSlice(s, d, IngestMod)
+    appendAndResolve(s, groupLifecycleOf(s, sl.base), sl)
   }
 
-  /** Persist the dup-group state a pipeline carries between batches.
-    * Bands are written bucket-partitionable by (band); labels and
-    * shingles by id range — at 100 TB these are the nightly artifacts,
-    * and the ingest reads back only what the batch's bands touch. */
+  /** Persist the base corpus's dup-group state — the lifecycle set
+    * ([[writeGroupLifecycle]]: labels, pairs, bands, shingles) over the
+    * docs outside the `mod` batch. At 100 TB these are the nightly
+    * artifacts, and the ingest reads back only what the batch's bands
+    * touch; the same set also takes the next delete. */
   def writeGroupState(s: SparkSession, d: String, dir: String,
-                      mod: Int = IngestMod): Unit = {
-    val (labels, bands, sh) = baseGroupState(s, d, mod)
-    StateDir.publish(dir, GroupTables.zip(Seq(labels, bands, sh)))
-  }
-
-  private val GroupTables = Seq("labels", "bands", "shingles")
+                      mod: Int = IngestMod): Unit =
+    writeGroupLifecycle(groupLifecycleOf(s, new AppendSlice(s, d, mod).base), dir)
 
   /** The production ingest: merge the batch into PERSISTED state. Work
     * is bounded by the batch's band fan-out + the final relabel — the
     * base pair-generation and base CC never re-run. */
   def mergeFromState(s: SparkSession, d: String, dir: String,
-                     mod: Int = IngestMod): DataFrame = {
-    val Seq(labels, bands, sh) = StateDir.read(s, dir, GroupTables: _*)
-    ingestAndResolve(s, d, labels, bands, sh, mod)
-  }
+                     mod: Int = IngestMod): DataFrame =
+    appendAndResolve(s, readGroupLifecycle(s, dir), new AppendSlice(s, d, mod))
 
   /** [[ingestDupGroupsDelta]] over persisted state: the batch-bounded
     * label upsert a daily pipeline writes back. */
   def mergeDeltaFromState(s: SparkSession, d: String, dir: String,
                           mod: Int = IngestMod): DataFrame = {
-    val isNew = pmod(col("doc_id"), lit(mod)) === 0
-    val newSh = Dedup.shingled(s, d).filter(isNew)
-    val newIds = Tables.documents(s, d).select(col("doc_id").as("id"))
-      .filter(pmod(col("id"), lit(mod)) === 0)
-    val Seq(labels, bands, sh) = StateDir.read(s, dir, GroupTables: _*)
-    ingestDupGroupsDelta(s, labels, bands, sh, newIds, newSh)
+    val sl = new AppendSlice(s, d, mod)
+    val st = readGroupLifecycle(s, dir)
+    ingestDupGroupsDelta(s, st.labels, st.bands, st.shingles, sl.ids, sl.shingles)
   }
 
   /** Persist the ANN-index state a pipeline carries between batches:
@@ -459,60 +428,47 @@ object Incremental {
         col("group_size"), (col("id") === col("lbl")).as("is_keeper"))
   }
 
-  /** Full-corpus labelling + component-labeled pair graph — the state
-    * a DELETE propagates through (deletes run against the CURRENT
-    * corpus, so unlike [[baseGroupState]] there is no batch holdout). */
-  private def fullGroupState(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    // Cut the shingles BEFORE pair generation (round 19): the verify
-    // reads them twice (sa/sb) and the band aggregate once — uncut,
-    // the pairs' one materialization ran the corpus shingle pass three
-    // times.
-    val sh = graft.Checkpoints.cut(Dedup.shingled(s, d))
-    val pairs = Dedup.minhashLshPairs(s, sh)
-      .select(col("id_a"), col("id_b"))
-      .transform(graft.Checkpoints.cut)
-    val verts = Tables.documents(s, d).select(col("doc_id").as("id"))
-    val labels = Dedup.connectedComponents(verts, pairs)
-      .transform(graft.Checkpoints.cut)
-    (labels, pairs.join(labels.toDF("id_a", "lbl"), "id_a"))
-  }
-
   /** d16: takedown propagation through dup groups as a gated key. The
     * 10% takedown slice (doc_id ≡ [[DeleteRes]] mod [[DeleteMod]]) is
-    * deleted from the full corpus's persisted labelling via
-    * [[deleteFromGroups]]; output is d06's exact schema over the
-    * REMAINING corpus. The oracle is from-scratch CC on
-    * corpus-minus-deleted (d06's recursive CTE with the takedown
-    * filter), so keeper re-election and component splits are
-    * hash-proved, not spec-claimed. State frames are checkpointed
-    * (x09's in-query-rebuild discipline: production state is
-    * parquet-opaque, and a transparent rebuild re-runs the base
-    * pipeline per reference).
+    * deleted from the full corpus's lifecycle state via
+    * [[deleteGroupLifecycle]] (its labelling is [[deleteFromGroups]]);
+    * output is d06's exact schema over the REMAINING corpus. The oracle
+    * is from-scratch CC on corpus-minus-deleted (d06's recursive CTE
+    * with the takedown filter), so keeper re-election and component
+    * splits are hash-proved, not spec-claimed. State frames are
+    * checkpointed by [[groupLifecycleOf]] (x09's in-query-rebuild
+    * discipline: production state is parquet-opaque, and a transparent
+    * rebuild re-runs the base pipeline per reference).
     *
     * NOTE ON THE BENCH NUMBER: the self-contained form pays
     * base-build + delete; the production marginal from persisted state
     * is [[deleteGroupsFromState]], priced by [[graft.IncBench]]
     * `--deletes`. */
   def d16DeleteGroups(s: SparkSession, d: String): DataFrame = {
-    val (labels, labeledPairs) = fullGroupState(s, d)
     val deleted = Tables.documents(s, d)
       .filter(col("doc_id") % DeleteMod === DeleteRes)
       .select(col("doc_id").as("id"))
-    resolveGroups(deleteFromGroups(s, labels, labeledPairs, deleted))
+    resolveGroups(deleteGroupLifecycle(s,
+      groupLifecycleOf(s, corpusDocs(s, d)), deleted).labels)
   }
 
-  /** Persist the delete-capable group state: labelling + labeled pair
-    * graph over the FULL corpus (the nightly artifact a takedown
-    * pipeline reads; bands/shingles are NOT needed — deletes never
-    * create edges). */
+  /** Persist the DELETE-ONLY group set: labelling + component-labeled
+    * pair graph over the FULL corpus, taken from [[groupLifecycleOf]].
+    * It is the one group set besides the lifecycle set, and it stays
+    * because s10's drain republishes it on every micro-batch
+    * ([[deleteGroupStateStep]]): deletes never create edges, so they
+    * need no bands or shingles, and carrying those corpus-sized tables
+    * through the drain would multiply its writes. */
   def writeDeleteGroupState(s: SparkSession, d: String, dir: String): Unit = {
-    val (labels, labeledPairs) = fullGroupState(s, d)
-    StateDir.publish(dir, Seq("labels" -> labels, "pairs" -> labeledPairs))
+    val st = groupLifecycleOf(s, corpusDocs(s, d))
+    StateDir.publish(dir, Seq("labels" -> st.labels,
+      "pairs" -> st.pairs.join(st.labels.toDF("id_a", "lbl"), "id_a")))
   }
 
   /** The production delete: propagate a takedown list through PERSISTED
-    * group state — touched-component re-CC only, one map-side pass over
-    * the label table. Frame-equal to the in-query d16 (TakedownSpec). */
+    * delete-only group state — touched-component re-CC only, one
+    * map-side pass over the label table. Frame-equal to the in-query d16
+    * (TakedownSpec). */
   def deleteGroupsFromState(s: SparkSession, dir: String,
                             deleted: DataFrame): DataFrame = {
     val Seq(labels, pairs) = StateDir.read(s, dir, "labels", "pairs")
@@ -711,15 +667,17 @@ object Incremental {
   // whose replacement a later batch changes again. The composed gate
   // runs the SAME per-step operators production runs, and its oracle
   // is the from-scratch mirror on the composed survivor set — so the
-  // hash gate proves the steps COMPOSE, not just that each works.
+  // hash gate proves the steps COMPOSE, not just that each works. d09
+  // and d16 are the one-step histories over the same state.
   // ---------------------------------------------------------------
 
-  /** The dup-group state a lifecycle-capable pipeline PERSISTS between
-    * operations: the labelling (id, lbl), the verified pair graph
-    * (id_a, id_b), and the band/shingle stores appends probe. A
-    * delete-only pipeline needs just labels + pairs (d16 — deletes
-    * never create edges); carrying bands + shingles is what makes the
-    * NEXT append possible without re-banding the corpus. */
+  /** The dup-group state a pipeline PERSISTS between operations — the
+    * family's one state format: the labelling (id, lbl), the verified
+    * pair graph (id_a, id_b), and the band/shingle stores appends
+    * probe. Deletes alone need just labels + pairs (deletes never
+    * create edges) — the drain set of [[writeDeleteGroupState]];
+    * carrying bands + shingles is what makes the NEXT append possible
+    * without re-banding the corpus. */
   final case class GroupLifecycleState(labels: DataFrame, pairs: DataFrame,
                                        bands: DataFrame, shingles: DataFrame)
 

@@ -160,13 +160,13 @@ object Retrieval {
         (col("pos") + 1).cast("bigint").as("rnk"))
   }
 
-  /** Per-slice corpus scalars (N docs, T term occurrences), folded
-    * driver-side and re-entered as literals (join-on-literal /
-    * unpartitioned-window are the alternatives and both are banned
-    * shapes). One narrow aggregate pass; terms per doc = bigram count
-    * = greatest(len−1, 0). BOTH scalars are ADDITIVE over disjoint doc
-    * slices — the property [[postingsAppendTopK]]'s incremental merge
-    * rests on. */
+  /** Corpus scalars (N docs, T term occurrences) of the one-shot
+    * [[bm25TopK]], folded driver-side and re-entered as literals
+    * (join-on-literal / unpartitioned-window are the alternatives and
+    * both are banned shapes). One narrow aggregate pass; terms per doc
+    * = bigram count = greatest(len−1, 0). The incremental paths fold
+    * the same two sums off their live `doclens` instead
+    * ([[queryPostingsLifecycle]]). */
   private def ntScalars(docs: DataFrame): (Long, Long) = {
     val nt = Tables.spread(docs, col("doc_id")).agg(
       count(lit(1)).as("n"),
@@ -291,13 +291,18 @@ object Retrieval {
     * search-index bug; the verbatim-oracle gate would catch it
     * (RetrievalSpec pins the cap-crossing case on fixtures).
     *
-    * Scale shape: the merged postings frame is lineage-cut
+    * Runs as a one-step history over the segmented lifecycle state
+    * (e16's): base postings in segment 0, the batch in segment 1, no
+    * tombstones — so e11, e14, e16 and their persisted forms share one
+    * state format and one query tail ([[queryPostingsLifecycle]]).
+    *
+    * Scale shape: the live postings frame is lineage-cut
     * ([[graft.Checkpoints.cut]]) — it feeds THREE consumers (df
     * aggregate, df-cap join probe, query-term slice), and without the
     * cut each consumer re-runs the corpus-wide explode (the x08
-    * lesson); in production the base side of the union is a parquet
-    * READ of the persisted index, so the ingest pays batch-explode +
-    * df-recount, never a base re-index. */
+    * lesson); in production the base segment is a parquet READ of the
+    * persisted index, so the ingest pays batch-explode + df-recount,
+    * never a base re-index. */
   def e11PostingsAppend(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Incremental.IngestMod
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -310,46 +315,25 @@ object Retrieval {
     * (spec entry — fixtures pin df-cap crossing and frame equality with
     * the one-shot index). */
   def postingsAppendTopK(s: SparkSession, base: DataFrame,
-                         batch: DataFrame): DataFrame = {
-    // Additive scalars: per-slice driver folds summed — the persisted-
-    // state shape (the index stores two longs next to the postings).
-    val (bn, bt) = ntScalars(base)
-    val (cn, ct) = ntScalars(batch)
-    appendTail(s, postings(s, base).unionByName(postings(s, batch)),
-      bn + cn, bt + ct)
-  }
-
-  /** Shared append tail: lineage-cut the merged postings (three
-    * consumers), recompute the GLOBAL df/cap/query stats over it, score.
-    * Used by the gated in-query key and the persisted-state path, so
-    * the two cannot drift. */
-  private def appendTail(s: SparkSession, mergedRaw: DataFrame,
-                         bigN: Long, bigT: Long): DataFrame = {
-    val merged = graft.Checkpoints.cut(mergedRaw)
-    val dfKept = merged.groupBy("tok").agg(count(lit(1)).as("df"))
-      .filter(col("df") * MaxDfDiv <= bigN)
-    val post = merged.join(dfKept, "tok")
-    // Query terms off the postings state itself: one (doc, term) row
-    // each — already distinct, no raw-text re-scan of the query docs.
-    val q = merged.filter(col("doc_id") % QueryEvery === 0)
-      .select(col("doc_id").as("q_id"), col("tok"))
-    scoreAndTop(s, q, post, bigN, bigT)
-  }
+                         batch: DataFrame): DataFrame =
+    queryPostingsLifecycle(s,
+      appendPostingsLifecycle(s, postingsLifecycleOf(s, base), batch))
 
   /** e14: takedown propagation through the lexical index — e11's
     * additivity run in REVERSE: postings rows are per-doc, so the
     * remaining index is exactly the persisted postings minus the
-    * deleted docs' rows, and N/T decrement by the deleted slice's
-    * additive contributions. Every GLOBAL statistic is then recomputed
-    * over the remaining state by the same [[appendTail]] the append
-    * path uses — which is where the one semantic trap lives, REVERSED:
-    * a term over the df cap in the full corpus can drop back UNDER it
-    * after the delete (its df fell faster than N) and must RE-ENTER
-    * every query; carrying the old capped term set forward would
-    * silently keep it dead (TakedownSpec pins the re-cross on
-    * fixtures). Deleted docs also stop querying — the query-term slice
-    * reads the remaining postings, so their rows vanish without a
-    * separate filter.
+    * deleted docs' rows, and N/T fold off the remaining doclens. It
+    * runs as a one-step history over the segmented lifecycle state:
+    * the takedown lands as tombstones ([[deletePostingsLifecycle]]) and
+    * every GLOBAL statistic is recomputed over the live view by
+    * [[queryPostingsLifecycle]] — which is where the one semantic trap
+    * lives, REVERSED: a term over the df cap in the full corpus can
+    * drop back UNDER it after the delete (its df fell faster than N)
+    * and must RE-ENTER every query; carrying the old capped term set
+    * forward would silently keep it dead (TakedownSpec pins the
+    * re-cross on fixtures). Deleted docs also stop querying — the
+    * query-term slice reads the live postings, so their rows vanish
+    * without a separate filter.
     *
     * Gated against e09's oracle ON THE REMAINING CORPUS (the d09
     * convention inverted): from-scratch indexing of corpus-minus-
@@ -362,35 +346,21 @@ object Retrieval {
   }
 
   /** [[e14PostingsDelete]] over any corpus and deleted slice (spec
-    * entry). The in-query gated form: full postings built, deleted rows
-    * dropped map-side, scalars decremented by the deleted slice's
-    * additive (n, t). */
+    * entry): the whole corpus in segment 0, the deleted docs
+    * tombstoned. */
   def postingsDeleteTopK(s: SparkSession, all: DataFrame,
-                         deletedDocs: DataFrame): DataFrame = {
-    val (n, t) = ntScalars(all)
-    val (dn, dt) = ntScalars(deletedDocs)
-    val remaining = postings(s, all)
-      .join(deletedDocs.select("doc_id"), Seq("doc_id"), "left_anti")
-    appendTail(s, remaining, n - dn, t - dt)
-  }
+                         deletedDocs: DataFrame): DataFrame =
+    queryPostingsLifecycle(s,
+      deletePostingsLifecycle(s, postingsLifecycleOf(s, all), deletedDocs))
 
-  /** Persist the delete-capable lexical index: [[writePostingsState]]'s
-    * postings + (N, T) scalars over the FULL corpus, plus the per-doc
-    * length table `doclens` (doc_id, dl) covering EVERY doc — including
-    * dl = 0 docs absent from postings — so a takedown can decrement N
-    * and T exactly from state alone (a deleted no-postings doc still
-    * counted in N). */
-  def writeDeletePostingsState(s: SparkSession, d: String, dir: String): Unit = {
-    val all = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    StateDir.publish(dir, Seq("postings" -> postings(s, all),
-      "nt" -> ntFrame(s, all), "doclens" -> doclensOf(all)))
-  }
-
-  /** The one-row (n, t) scalar table of a corpus. */
-  private def ntFrame(s: SparkSession, docs: DataFrame): DataFrame = {
-    val (n, t) = ntScalars(docs)
-    s.createDataFrame(Seq((n, t))).toDF("n", "t")
-  }
+  /** Persist the delete-capable lexical index: the lifecycle set
+    * ([[writePostingsLifecycleState]]) over the FULL corpus. Its
+    * `doclens` covers EVERY doc — including dl = 0 docs absent from
+    * postings — so a takedown moves N and T exactly from state alone
+    * (a deleted no-postings doc still counted in N). */
+  def writeDeletePostingsState(s: SparkSession, d: String, dir: String): Unit =
+    writePostingsLifecycleState(s, postingsLifecycleOf(s,
+      Tables.documents(s, d).select(col("doc_id"), col("text"))), dir)
 
   /** Per-doc term count (doc_id, dl) covering EVERY doc — including
     * dl = 0 docs absent from postings, so N/T derive from it exactly. */
@@ -400,58 +370,37 @@ object Retrieval {
         greatest(size(Text.tokens(col("text"))).cast("bigint") - 1, lit(0L))
           .as("dl"))
 
-  /** The production takedown: anti-join the PERSISTED postings against
-    * the deleted id list, decrement (N, T) from the persisted doclens
-    * (two driver-folded longs — the scalar rule), recompute the global
-    * stats over the remainder. Pays one postings pass + the
-    * takedown-sized doclens join; no text is ever re-read. Frame-equal
-    * to the in-query e14 when fed the same slice (TakedownSpec). */
+  /** The production takedown: tombstone the deleted ids in the
+    * PERSISTED lifecycle state and query the live view — N/T fold off
+    * the live doclens, the global stats are recomputed over the live
+    * postings, and no text is ever re-read. Frame-equal to the in-query
+    * e14 when fed the same slice (TakedownSpec). */
   def deletePostingsFromState(s: SparkSession, dir: String,
-                              deletedIds: DataFrame): DataFrame = {
-    val Seq(nt, doclens, post) =
-      StateDir.read(s, dir, "nt", "doclens", "postings")
-    val ntRow = nt.head()
-    val delRow = doclens
-      .join(deletedIds.select("doc_id"), "doc_id")
-      .agg(count(lit(1)).as("dn"),
-        coalesce(sum(col("dl")), lit(0L)).as("dt")).head()
-    val remaining = post
-      .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
-      .join(deletedIds.select("doc_id"), Seq("doc_id"), "left_anti")
-    appendTail(s, remaining,
-      ntRow.getAs[Long]("n") - delRow.getAs[Long]("dn"),
-      ntRow.getAs[Long]("t") - delRow.getAs[Long]("dt"))
-  }
+                              deletedIds: DataFrame): DataFrame =
+    queryPostingsLifecycle(s,
+      deletePostingsLifecycle(s, readPostingsLifecycleState(s, dir), deletedIds))
 
   /** Persist the BASE lexical index (production shape, [[graft.IncBench]]
-    * prices the marginal): postings rows as parquet plus the additive
-    * (N, T) scalars as a one-row frame — the WHOLE state an exact BM25
-    * append needs (df/avgdl/idf all derive from postings + scalars;
-    * nothing is frozen, nothing goes stale). */
+    * prices the marginal): the lifecycle set over the docs outside the
+    * `mod` batch — the WHOLE state an exact BM25 append needs
+    * (df/avgdl/idf all derive from postings + doclens; nothing is
+    * frozen, nothing goes stale). */
   def writePostingsState(s: SparkSession, d: String, dir: String,
-                         mod: Int = graft.operators.Incremental.IngestMod): Unit = {
-    val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      .filter(col("doc_id") % mod =!= 0)
-    StateDir.publish(dir,
-      Seq("postings" -> postings(s, base), "nt" -> ntFrame(s, base)))
-  }
+                         mod: Int = graft.operators.Incremental.IngestMod): Unit =
+    writePostingsLifecycleState(s, postingsLifecycleOf(s,
+      Tables.documents(s, d).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % mod =!= 0)), dir)
 
-  /** The production ingest: base postings READ BACK from parquet, batch
-    * postings built fresh, global stats recomputed over the union —
-    * frame-equal to the in-query [[e11PostingsAppend]]
-    * (PostingsStateSpec) and priced per batch by [[graft.IncBench]]. */
+  /** The production ingest: base state READ BACK from parquet, the
+    * batch appended as a new segment, global stats recomputed over the
+    * live view — frame-equal to the in-query [[e11PostingsAppend]]
+    * (RetrievalSpec) and priced per batch by [[graft.IncBench]]. */
   def appendPostingsFromState(s: SparkSession, d: String, dir: String,
-                              mod: Int = graft.operators.Incremental.IngestMod): DataFrame = {
-    val batch = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      .filter(col("doc_id") % mod === 0)
-    val Seq(nt, post) = StateDir.read(s, dir, "nt", "postings")
-    val ntRow = nt.head()
-    val (cn, ct) = ntScalars(batch)
-    appendTail(s, post
-      .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
-      .unionByName(postings(s, batch)),
-      ntRow.getAs[Long]("n") + cn, ntRow.getAs[Long]("t") + ct)
-  }
+                              mod: Int = graft.operators.Incremental.IngestMod): DataFrame =
+    queryPostingsLifecycle(s, appendPostingsLifecycle(s,
+      readPostingsLifecycleState(s, dir),
+      Tables.documents(s, d).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % mod === 0)))
 
   // ---------------------------------------------------------------
   // e16: the COMPOSED lexical-index lifecycle (d17's sibling) —
@@ -466,9 +415,11 @@ object Retrieval {
   // killed the old ones. Global stats (N, T, df, the cap) are
   // recomputed over the LIVE view per query — nothing is ever carried
   // stale, which is where both the append trap (e11: a term crossing
-  // the cap) and the delete trap (e14: crossing back) live. The
-  // storage debt this design accrues (dead rows + segment files) is
-  // exactly what [[compactPostingsLifecycle]] pays down.
+  // the cap) and the delete trap (e14: crossing back) live. It is the
+  // family's one state format: e11 and e14 (in-query and persisted)
+  // are one-step histories over it. The storage debt this design
+  // accrues (dead rows + segment files) is exactly what
+  // [[compactPostingsLifecycle]] pays down.
   // ---------------------------------------------------------------
 
   /** Segmented lexical-index state: postings and doclens rows stamped
@@ -513,28 +464,45 @@ object Retrieval {
     st.copy(tombs = st.tombs.unionByName(deletedIds
       .select(col("doc_id"), lit(st.curSeg).as("killed_at_seg"))))
 
-  /** The live view of segmented rows: one max-tombstone per doc
-    * (liveness needs ANY killed_at ≥ seg ⇔ the max is), broadcast
-    * size-guarded — takedown-sized in any sane history, shuffle-join
-    * degrade if hostile. */
-  private def liveRows(rows: DataFrame, tombs: DataFrame): DataFrame = {
-    val t = Skew.boundedBroadcast(
-      tombs.groupBy("doc_id").agg(max("killed_at_seg").as("killed_at")))
-    rows.join(t, Seq("doc_id"), "left")
-      .filter(col("killed_at").isNull || col("seg") > col("killed_at"))
-      .drop("killed_at")
+  /** The tombstones as a liveness filter, or None when there are none —
+    * an append-only history pays no liveness join. Broadcast
+    * size-guarded on their exact count — takedown-sized in any sane
+    * history, shuffle-join degrade if hostile (never materialized
+    * whole). Not cut: the count and the two readers (doclens and
+    * postings) each re-run only the takedown list's own scan, cheaper
+    * than a checkpoint job on every query. */
+  private def tombsOf(tombs: DataFrame): Option[DataFrame] = {
+    val n = tombs.count()
+    if (n == 0) None
+    else Some(Skew.boundedBroadcastKnown(tombs.select(
+      col("doc_id").as("t_doc"), col("killed_at_seg").as("t_seg")), n))
   }
 
-  /** Query the live index: N/T fold from the live doclens (one narrow
-    * aggregate — so the scalars CANNOT go stale), df/cap/scoring over
-    * the live postings via the same [[appendTail]] every incremental
-    * path uses. */
+  /** The live view of segmented rows: a row of segment s of doc X is
+    * live iff no tombstone (X, k) with k ≥ s exists. */
+  private def liveRows(rows: DataFrame, tombs: Option[DataFrame]): DataFrame =
+    tombs.fold(rows)(t => rows.join(t,
+      col("doc_id") === col("t_doc") && col("t_seg") >= col("seg"), "left_anti"))
+
+  /** Query the live index — the one query tail of every incremental
+    * path (e11, e14, e16 and their persisted forms): N/T fold from the
+    * live doclens (one narrow aggregate — so the scalars CANNOT go
+    * stale), and the GLOBAL df/cap/query stats are recomputed over the
+    * live postings, lineage-cut first (three consumers). */
   def queryPostingsLifecycle(s: SparkSession,
                              st: PostingsLifecycleState): DataFrame = {
-    val ntRow = liveRows(st.doclens, st.tombs)
+    val tombs = tombsOf(st.tombs)
+    val ntRow = liveRows(st.doclens, tombs)
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("t")).head()
-    appendTail(s, liveRows(st.postings, st.tombs).drop("seg"),
-      ntRow.getAs[Long]("n"), ntRow.getAs[Long]("t"))
+    val bigN = ntRow.getAs[Long]("n")
+    val live = graft.Checkpoints.cut(liveRows(st.postings, tombs).drop("seg"))
+    val dfKept = live.groupBy("tok").agg(count(lit(1)).as("df"))
+      .filter(col("df") * MaxDfDiv <= bigN)
+    // Query terms off the postings state itself: one (doc, term) row
+    // each — already distinct, no raw-text re-scan of the query docs.
+    val q = live.filter(col("doc_id") % QueryEvery === 0)
+      .select(col("doc_id").as("q_id"), col("tok"))
+    scoreAndTop(s, q, live.join(dfKept, "tok"), bigN, ntRow.getAs[Long]("t"))
   }
 
   /** e16: the composed lifecycle gate for the lexical index — the SAME
@@ -622,8 +590,9 @@ object Retrieval {
   def compactPostingsLifecycle(s: SparkSession, dir: String,
                                targetBytes: Long = CompactTargetBytes): Unit = {
     val st = readPostingsLifecycleState(s, dir)
+    val tombs = tombsOf(st.tombs)
     def packed(rows: DataFrame, sub: String): DataFrame =
-      liveRows(rows, st.tombs)
+      liveRows(rows, tombs)
         .coalesce(packFileCount(s, dirBytes(s, s"$dir/$sub"), targetBytes))
     writePostingsLifecycleState(s, PostingsLifecycleState(
       packed(st.postings, "postings"), packed(st.doclens, "doclens"),

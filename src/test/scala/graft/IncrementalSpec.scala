@@ -161,6 +161,26 @@ class IncrementalSpec extends SparkSpecBase {
     assert(delta.size < full.size)
   }
 
+  test("writeGroupState persists the lifecycle set: a delete over it equals from-scratch") {
+    val dir = tempDir("graft-inc-lifecycle").toString
+    Incremental.writeGroupState(spark, sf001, dir)
+    val docs = Tables.documents(spark, sf001).select(col("doc_id"), col("text"))
+    val isBase = pmod(col("doc_id"), lit(Incremental.IngestMod)) =!= 0
+    val isDeleted = col("doc_id") % Incremental.DeleteMod === Incremental.DeleteRes
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val st = Incremental.readGroupLifecycle(spark, dir)
+    val got = labels(Incremental.deleteGroupLifecycle(spark, st,
+      docs.filter(isDeleted).select(col("doc_id").as("id"))).labels)
+    val scratch = labels(Incremental.groupLifecycleOf(spark,
+      docs.filter(isBase && !isDeleted)).labels)
+    assert(got == scratch && got.nonEmpty)
+    // The takedown reaches a deleted doc that the persisted pair graph
+    // connects, so the delete re-runs CC on a touched component.
+    assert(st.pairs.filter(col("id_a") % Incremental.DeleteMod === Incremental.DeleteRes ||
+      col("id_b") % Incremental.DeleteMod === Incremental.DeleteRes).count() > 0)
+  }
+
   test("appendFromState over persisted index state equals the in-query e06") {
     val dir = tempDir("graft-inc-ann").toString
     Incremental.writeIndexState(spark, sf001, dir)

@@ -140,6 +140,30 @@ class RetrievalSpec extends SparkSpecBase {
       "reading base postings back from parquet must not change any result")
   }
 
+  test("e11: persisted base state takes a delete — equals one-shot bm25 on base-minus-deleted") {
+    import graft.operators.Incremental.{DeleteMod, DeleteRes}
+    // mod 3, not the default 5: every query doc (id % 100 == 0) is
+    // ≡ 0 mod 5, so a mod-5 base holds no queries; mod 3 keeps 100,
+    // 200 and 400 in the base.
+    val mod = 3
+    val dir = tempDir("graft-postings-del").toString
+    Retrieval.writePostingsState(spark, sf001, dir, mod)
+    val docs = Tables.documents(spark, sf001).select(col("doc_id"), col("text"))
+    val base = docs.filter(col("doc_id") % mod =!= 0)
+    val isDeleted = col("doc_id") % DeleteMod === DeleteRes
+    val got = Retrieval.queryPostingsLifecycle(spark,
+      Retrieval.deletePostingsLifecycle(spark,
+        Retrieval.readPostingsLifecycleState(spark, dir),
+        docs.filter(isDeleted).select("doc_id")))
+      .collect().toSet
+    val scratch = Retrieval.bm25TopK(spark, base.filter(!isDeleted)).collect().toSet
+    assert(got.nonEmpty)
+    assert(got == scratch,
+      "a takedown over the persisted base index must equal indexing the survivors")
+    assert(got != Retrieval.bm25TopK(spark, base).collect().toSet,
+      "the takedown must change the results")
+  }
+
   test("e09 production: ONE corpus-wide exchange, the rest candidate-bounded; no window") {
     val df = Queries.production("e09_bm25_topk")(spark, sf001)
     // Execute THIS QueryExecution (a write would plan a fresh one), so
