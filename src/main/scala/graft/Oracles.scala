@@ -2613,7 +2613,7 @@ object Oracles {
 
     // x14: deterministic KMV-sample quantile sketch — same hash-order
     // sample rule (k smallest h60(doc_id) per source, v tie-break
-    // mirroring MinKPairs' (key, id) order) and the x11 integer rank
+    // mirroring graft_mink_pairs' (key, id) order) and the x11 integer rank
     // rule over the sorted sample.
     "x14_quantile_sketch" -> {
       import graft.operators.Sampling.{QSketchK, QSketchSeed, QuantilePcts}

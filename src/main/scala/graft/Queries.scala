@@ -136,8 +136,9 @@ object Queries {
     // 5.6x baseline" weak was NOT a depth-policy problem — it was
     // TopKByScore's O(k)-per-candidate linear scan, invisible at k=30
     // and ruinous at k=10000. With the heap buffer the depth is nearly
-    // free (E04CurveMain at sf10: 22.0 s at depth 30 vs 27.5 s at
-    // 10000, recall 0.015 vs 0.579), so e04 keeps the recall.
+    // free (sf10: 22.0 s at depth 30 vs 27.5 s at 10000, recall 0.015
+    // vs 0.579; BENCH.md "e04's weak, root-caused"), so e04 keeps the
+    // recall.
     "e04_pq_ann"           -> ((s, d) =>
       Similarity.e04PqAnn(s, d, shortlist = Similarity.calibratedPqShortlist(s, d))),
     "e05_ivfpq"            -> ((s, d) =>

@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * parquet behave identically everywhere (no per-loader conf mutation). */
 object Sessions {
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+              Runtime.getRuntime.availableProcessors.toString),
             extra: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -22,20 +22,12 @@ object Natives {
       e => GramStats(e(0), ExprArgs.int(e(1)))),
     Native("graft_rhp_bucket", classOf[RhpBucket],
       e => RhpBucket(e(0), ExprArgs.int(e(1)), ExprArgs.int(e(2)), ExprArgs.int(e(3)))),
-    Native("graft_topk", classOf[TopKByScore],
-      e => TopKByScore(e(0), ExprArgs.int(e(1)))),
-    Native("graft_topk_long", classOf[TopKByLongScore],
-      e => TopKByLongScore(e(0), ExprArgs.int(e(1)))),
-    Native("graft_topk_terms", classOf[TopKTerms],
-      e => TopKTerms(e(0), ExprArgs.int(e(1)))),
-    Native("graft_mink", classOf[MinKLong],
-      e => MinKLong(e(0), ExprArgs.int(e(1)))),
-    Native("graft_mink_pairs", classOf[MinKPairs],
-      e => MinKPairs(e(0), ExprArgs.int(e(1)))),
     Native("graft_mmr", classOf[GreedyMmr],
       e => GreedyMmr(e(0), e(1), ExprArgs.int(e(2)))),
     Native("graft_minhash_sig", classOf[MinhashSig],
-      e => MinhashSig(e(0), ExprArgs.int(e(1)))))
+      e => MinhashSig(e(0), ExprArgs.int(e(1))))) ++
+    Seq(TopKByScore, TopKByLongScore, TopKTerms, MinKLong, MinKPairs).map(r =>
+      Native(r.name, classOf[KBest], e => KBest(r, e(0), ExprArgs.int(e(1)))))
 
   /** Registers the entry named `name` on the session. Idempotent. */
   def register(spark: SparkSession, name: String): Unit = {

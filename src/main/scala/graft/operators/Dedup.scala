@@ -90,7 +90,7 @@ object Dedup {
     * cap filter — a bounded, named straggler. The skew-free
     * alternatives were built and measured at sf1 (warm, this round)
     * and all lose at every measured SF:
-    *  - bounded-collect posting arrays (MinKPairs cap+1 per shingle,
+    *  - bounded-collect posting arrays (graft_mink_pairs cap+1 per shingle,
     *    pairs from array suffixes): 11.8 s vs 4.1 s — ObjectHashAggregate
     *    sort-fallback at tens of millions of tiny groups;
     *  - partial-agg stop list + broadcast anti-join (map-side drop):

@@ -87,7 +87,7 @@ object Retrieval {
     * is also AQE-coalesce-exempt (the LSH band-table rule — the join
     * OUTPUT is what explodes, not its input). Downstream shuffles are
     * candidate-bounded: per-(q,doc) sum ≤ Σ qf·df ≤ |query terms|·N/10
-    * rows, then [[TopKByScore]]'s bounded min-heap per query (no
+    * rows, then the [[graft.functions.KBest]] bounded heap per query (no
     * window, no sort of the scored relation). Driver-side scalars are
     * exactly two longs (N, T) folded per the scalar-literal rule. */
   def e09Bm25TopK(s: SparkSession, d: String): DataFrame =
@@ -232,8 +232,8 @@ object Retrieval {
         expr("num DIV den").cast("bigint").as("micros"))
       .groupBy("q_id", "doc_id")
       .agg(sum("micros").as("micros"))
-    // Long-keyed top-k ([[graft.functions.TopKByLongScore]]): the summed
-    // micros stay an exact BIGINT through the ranking — the double-keyed
+    // Long-keyed top-k (graft_topk_long over [[graft.functions.KBest]]):
+    // the summed micros stay an exact BIGINT through the ranking — the double-keyed
     // form was exact only below 2^53 (~9e15; per-(q,doc) sums approach
     // ~1e15 at sf10-scale doc lengths and pass it at ~10^8-doc corpora,
     // where near-tie ranks would wobble). Only the DISPLAY value is a

@@ -92,9 +92,10 @@ object Sampling {
         explode(array_distinct(Text.tokens(col("text")))).as("tok"))
       .select(col("lang"), Text.hash60(col("tok"), KmvSeed).as("h"))
       .distinct()
-    // One bounded aggregate does both jobs: graft_mink (MinKLong) is a
-    // fixed-size max-heap that partial-aggregates — each partition ships
-    // at most k values per language to the final merge — and the exact
+    // One bounded aggregate does both jobs: graft_mink (the MinKLong
+    // ranking of graft.functions.KBest) keeps the k minima in a bounded
+    // heap that partial-aggregates — each partition ships at most k
+    // values per language to the final merge — and the exact
     // cardinality is a plain count riding the same exchange. This
     // replaced a two-level row_number pipeline (two window SORTS of
     // vocabulary slices + an extra join): same k minima, same hashes,
@@ -121,9 +122,10 @@ object Sampling {
     * deterministic uniform draw that reproduces on any engine or
     * partitioning, unlike rand()-based reservoir sampling.
     *
-    * The selection is a bounded [[graft.functions.MinKPairs]] aggregate:
-    * each partition ships at most quota (hash, id) pairs per source to
-    * the merge, so a source with a billion documents costs the shuffle
+    * The selection is the bounded [[graft.functions.KBest]] aggregate
+    * under graft_mink_pairs: each partition ships at most quota
+    * (hash, id) pairs per source to the merge, so a source with a
+    * billion documents costs the shuffle
     * 50 pairs per partition — the row_number-window form would shuffle
     * and SORT the full billion in one task (few distinct sources = few
     * window partitions; AQE cannot split a window partition). Output is
@@ -547,8 +549,9 @@ object Sampling {
     * it) whose distinct values grow with the corpus.
     *
     * Scale shape: one map-side projection, ONE bounded partial
-    * aggregate ([[graft.functions.MinKPairs]]: each partition ships at
-    * most k pairs per source); the per-source sort is over k values in
+    * aggregate ([[graft.functions.KBest]] under graft_mink_pairs: each
+    * partition ships at most k pairs per source); the per-source sort
+    * is over k values in
     * one array — no window over doc rows, no per-value cell state. */
   def x14QuantileSketch(s: SparkSession, d: String): DataFrame =
     quantileSketch(s, Tables.documents(s, d)

@@ -145,7 +145,8 @@ object Similarity {
     * PQ quantization noise then evicts the true neighbours before the
     * exact re-rank ever sees them: e05 recall@10 measured 0.018 at sf10
     * under the catalog default. n/20 re-establishes the headroom —
-    * measured at sf10 on one shared index (ShortlistCurveMain): depth
+    * measured at sf10 on one shared index (BENCH.md "ANN recall@10 at
+    * sf10 (round 9)"): depth
     * 1000 → 0.176, 2500 → 0.279, 5000 → 0.363, 10000 (= n/20) → 0.444,
     * i.e. 88% of e03's 0.502 probe-set ceiling — while the exact
     * re-rank touches 5% of the corpus' real vectors (~2 s of e01's
@@ -174,8 +175,8 @@ object Similarity {
           RhpSeedBase + t * bits).as("bkt"))): _*)).as("x"))
       .select(col("vec_id"), col("x.tbl").as("tbl"), col("x.bkt").as("bkt"))
 
-  /** Per-query top-k via the bounded [[TopKByScore]] aggregate: map-side
-    * partial top-k means at most k rows per (query, partition) reach the
+  /** Per-query top-k via the bounded graft_topk aggregate
+    * ([[graft.functions.KBest]]): map-side partial top-k means at most k rows per (query, partition) reach the
     * shuffle — the row_number-window form would shuffle and sort EVERY
     * scored candidate. Output identical (score DESC, id ASC ranking). */
   private def topK(s: SparkSession, scored: DataFrame, k: Int = K): DataFrame =
@@ -355,8 +356,8 @@ object Similarity {
     * query, 30²/2 pairwise sims). Both halves stay deterministic, so
     * the key is hash-gated end-to-end: oracle = e05's CTE chain at pool
     * depth feeding e12's unrolled selection ladder. e12 remains the
-    * exact sibling (pool recall vs brute is corpus-dependent; measured
-    * by MmrRecallProbeMain, recorded in BENCH.md). */
+    * exact sibling (pool recall vs brute is corpus-dependent; BENCH.md
+    * "e13_mmr_ann: MMR over the e05 ANN pool"). */
   def e13MmrAnn(s: SparkSession, d: String,
                 shortlist: Int = PqShortlist): DataFrame =
     mmrTail(s,
@@ -364,7 +365,7 @@ object Similarity {
       e13MmrAnnPool(s, d, shortlist))
 
   /** e13's pool half — the e05 IVF×PQ ladder at [[MmrPool]] depth
-    * (exposed for MmrSpec and the MmrRecallProbeMain overlap probe). */
+    * (exposed for MmrSpec). */
   def e13MmrAnnPool(s: SparkSession, d: String,
                     shortlist: Int = PqShortlist): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -459,7 +460,7 @@ object Similarity {
   /** XOR masks for multi-probe at a given radius: the base bucket, all
     * single-bit flips, and (radius 2) all two-bit flips — the probe-set
     * generator behind the catalog default (radius 1) and the
-    * ProbeCurveMain recall/cost frontier sweep. */
+    * recall/cost frontier in BENCH.md "e02 probe-depth curve at sf10". */
   private[graft] def probeMasks(bits: Int, radius: Int): Seq[Long] =
     Seq(0L) ++
       (if (radius >= 1) (0 until bits).map(1L << _) else Nil) ++

@@ -478,9 +478,9 @@ object TextAnalysis {
         d38(lit(2L) * col("df") + lit(1L)).as("den"))
       .select(col("doc_id"), col("tok"), col("tf"), col("df"),
         expr("num DIV den").cast("bigint").as("micros"))
-    // Bounded O(k) buffer ([[graft.functions.TopKTerms]]): the old
-    // collect_list → sort_array → slice shape buffered EVERY distinct
-    // term of a doc per aggregation row; the heap keeps exactly k and
+    // Bounded O(k) heap (graft_topk_terms over [[graft.functions.KBest]]):
+    // the old collect_list → sort_array → slice shape buffered EVERY
+    // distinct term of a doc per aggregation row; the heap keeps exactly k and
     // partial-aggregates map-side. Ranking (micros DESC, term ASC —
     // UTF8 binary, matching sort_array's struct comparison) and output
     // rows are identical.
