@@ -34,6 +34,20 @@ import graft.operators.{Curation, Incremental}
   * never an OOM.
   */
 object IncBench {
+  private def timed(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  private def noop(df: => org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** One untimed warmup, then the min of two timed noop
+    * materializations (the Bench protocol). */
+  private def marginal(df: => org.apache.spark.sql.DataFrame): Double = {
+    noop(df)
+    math.min(timed(noop(df)), timed(noop(df)))
+  }
+
   def main(args: Array[String]): Unit = {
     val adversarial = args.contains("--adversarial")
     val pos = args.filterNot(_.startsWith("--"))
@@ -43,20 +57,11 @@ object IncBench {
       java.nio.file.Files.createTempDirectory("graft-inc-state").toString)
     val mod = pos.lift(2).map(_.toInt).getOrElse(Incremental.IngestMod)
     val spark = Sessions.local()
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: => org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     if (adversarial) { runAdversarial(spark, sfDir, stateDir, mod); spark.stop(); return }
     if (args.contains("--deletes")) { runDeletes(spark, sfDir, stateDir); spark.stop(); return }
     if (args.contains("--composed")) { runComposed(spark, sfDir, stateDir); spark.stop(); return }
     val tGroup = timed(Incremental.writeGroupState(spark, sfDir, s"$stateDir/groups", mod))
     val tIndex = timed(Incremental.writeIndexState(spark, sfDir, s"$stateDir/ann", mod))
-    def marginal(df: => org.apache.spark.sql.DataFrame): Double = {
-      noop(df) // warmup
-      math.min(timed(noop(df)), timed(noop(df)))
-    }
     val d09m = marginal(Incremental.mergeFromState(spark, sfDir, s"$stateDir/groups", mod))
     val d09d = marginal(Incremental.mergeDeltaFromState(spark, sfDir, s"$stateDir/groups", mod))
     val e06m = marginal(Incremental.appendFromState(spark, sfDir, s"$stateDir/ann", mod))
@@ -107,15 +112,6 @@ object IncBench {
                          sfDir: String, stateDir: String): Unit = {
     import org.apache.spark.sql.functions._
     import graft.operators.{Incremental, Retrieval}
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def noop(df: => org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    def marginal(df: => org.apache.spark.sql.DataFrame): Double = {
-      noop(df)
-      math.min(timed(noop(df)), timed(noop(df)))
-    }
     def deletedPred(c: org.apache.spark.sql.Column) =
       c % Incremental.DeleteMod === Incremental.DeleteRes
     val tGroup = timed(Incremental.writeDeleteGroupState(spark, sfDir, s"$stateDir/delgroups"))
@@ -157,9 +153,6 @@ object IncBench {
   private def runComposed(spark: org.apache.spark.sql.SparkSession,
                           sfDir: String, stateDir: String): Unit = {
     import graft.operators.Incremental
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     val (base, (ids1, sh1), delIds, (ids2, sh2)) =
       Incremental.composedSliceInputs(spark, sfDir)
     val root = s"$stateDir/composed"
@@ -184,12 +177,7 @@ object IncBench {
     val tPApp1 = timed(Retrieval.appendPostingsLifecycleState(spark, pDir, batch1))
     val tPDel = timed(Retrieval.deletePostingsLifecycleState(spark, pDir, delDocIds))
     val tPApp2 = timed(Retrieval.appendPostingsLifecycleState(spark, pDir, batch2))
-    def noop(df: => org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    noop(Retrieval.queryPostingsLifecycleState(spark, pDir))
-    val tPQuery = math.min(
-      timed(noop(Retrieval.queryPostingsLifecycleState(spark, pDir))),
-      timed(noop(Retrieval.queryPostingsLifecycleState(spark, pDir))))
+    val tPQuery = marginal(Retrieval.queryPostingsLifecycleState(spark, pDir))
     val pFilesBefore = Retrieval.partFileCount(spark, s"$pDir/postings")
     val pRowsBefore = spark.read.parquet(s"$pDir/postings").count()
     val tPCompact = timed(Retrieval.compactPostingsLifecycle(spark, pDir))
@@ -219,9 +207,6 @@ object IncBench {
                              sfDir: String, stateDir: String, mod: Int): Unit = {
     import org.apache.spark.sql.functions._
     import graft.operators.{Dedup, Skew}
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     // Near-full-corpus base state: a modulus beyond the id range keeps
     // every doc EXCEPT doc 0 in the base slice (ids start at 0, and
     // pmod(0, m) == 0 for any m puts doc 0 in the batch residue — no
@@ -248,10 +233,7 @@ object IncBench {
     val mergedRows = Incremental
       .mergeGraph(spark, labels, bands, sh, newIds, newSh).count()
     def ingest = Incremental.ingestDupGroups(spark, labels, bands, sh, newIds, newSh)
-    def noop(df: => org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    noop(ingest) // warmup
-    val tIngest = math.min(timed(noop(ingest)), timed(noop(ingest)))
+    val tIngest = marginal(ingest)
     val ingestRows = ingest.count()
     println(s"""{"metric":"incremental_adversarial","unit":"sec","sf":"$sfDir","mod":$mod,""" +
       s""""build_state":$tState,"batch_rows":$batchRows,"corpus_rows":$corpusRows,""" +

@@ -11,15 +11,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Foldable-literal argument extraction for registered function builders
-  * (SQL users may write `10` (int) or a bigint literal). */
+  * (SQL users may write `10` (int) or a bigint literal). A bigint outside
+  * the Int range is rejected at analysis, never wrapped. */
 private[graft] object ExprArgs {
   def int(e: Expression): Int = e.eval() match {
     case i: Int => i
-    case l: Long => l.toInt
+    case l: Long if l.isValidInt => l.toInt
     case s: Short => s.toInt
     case b: Byte => b.toInt
     case other => throw new IllegalArgumentException(
-      s"expected an integer literal, got $other")
+      s"expected an integer literal in the Int range, got $other")
   }
 }
 

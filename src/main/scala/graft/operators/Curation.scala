@@ -244,12 +244,22 @@ object Curation {
     * assert the fan-out bounds on the real frames). */
   private[graft] final case class MergeParts(
       stagedB: DataFrame, batchClean: DataFrame, removed: DataFrame,
-      oldUntouched: DataFrame, relabel: DataFrame, survivorFinal: DataFrame,
-      batchFinal: DataFrame, quality: DataFrame, splits: DataFrame,
+      split: Incremental.TouchedSplit, merged: DataFrame,
+      quality: DataFrame, splits: DataFrame,
       // state-forward halves (the composed lifecycle carries them into
       // the next state version; a one-shot merge ignores them):
       batchShingles: DataFrame, batchBands: DataFrame, newPairs: DataFrame,
-      newBenchGrams: DataFrame, batchCleanGrams: DataFrame)
+      newBenchGrams: DataFrame, batchCleanGrams: DataFrame) {
+
+    /** The merged clean-doc labelling (doc_id, lbl): untouched
+      * components through the merged map — all of them (`full`), or only
+      * those incident to new edges (the delta) — and split survivors and
+      * clean batch docs by id. */
+    def labels(full: Boolean): DataFrame =
+      Incremental.relabeled(merged, split.untouched,
+        split.survivors.unionByName(batchClean.toDF("id")), allOld = full)
+        .toDF("doc_id", "lbl")
+  }
 
   /** Merge a new batch into persisted curation state. Work is bounded by
     * the batch plus what it disturbs:
@@ -259,22 +269,18 @@ object Curation {
     *    one map-side scan, no gram recompute (contamination is MONOTONE:
     *    the gram set only grows, so old verdicts can only flip
     *    clean → contaminated, never back);
-    *  - a contaminated old doc leaves the pair graph, which can SPLIT
-    *    its component: CC re-runs on the TOUCHED components' persisted
-    *    subgraphs only (label-filtered pairs), never the corpus;
-    *  - batch docs band-probe the persisted band table semi-joined to
-    *    the buckets the batch occupies (d09's pre-filter), so new-pair
-    *    generation shuffles the batch's fan-out, not the band table;
-    *  - the merge CC runs in d09's mixed label space — untouched
-    *    components enter as their (component-min) label, touched
-    *    members and batch docs as raw ids — so its graph is bounded by
-    *    touched components + batch fan-out;
-    *  - the merge-CC vertex set holds ONLY edge-incident ids (isolated
-    *    batch docs and isolated survivors resolve to their own id via
-    *    the coalesce in batchFinal/survivorFinal — d09's shape), so the
-    *    CC, its `merged` output, and the relabel map are all bounded by
-    *    the batch's FAN-OUT (touched components + verified new pairs),
-    *    never the batch itself;
+    *  - the clean component graph then takes ONE group-graph update
+    *    ([[Incremental]]'s steps): a contaminated old doc leaves the
+    *    pair graph, which can SPLIT its component, so the removed docs
+    *    split the components they touch ([[Incremental.touchedSplit]] —
+    *    label-filtered persisted subgraphs, never the corpus); batch
+    *    docs band-probe the live band table ([[Incremental.batchPairs]]);
+    *    one edge-incident CC ([[Incremental.edgeCC]]) runs over the
+    *    surviving subgraph ∪ the new pairs lifted to the UNTOUCHED
+    *    components' labels (survivors and batch docs stay raw — a
+    *    survivor's old label no longer names its piece), so the CC, its
+    *    output and the relabel map are bounded by touched components +
+    *    the batch's FAN-OUT, never the batch itself;
     *  - group stats re-aggregate only changed components' members.
     * The only corpus-sized passes are map-side: the cleanGrams semi-join
     * and (full form only) the relabel of the decision frame.
@@ -348,116 +354,53 @@ object Curation {
       .select("doc_id").distinct()
       .transform(graft.Checkpoints.cut)
 
-    // --- touched components: re-derive their subgraph from state ---
+    // --- the group-graph update: the removed docs split the components
+    // they touch, the batch's clean docs probe the live bands, and one
+    // CC runs over the surviving subgraph ∪ the lifted new pairs.
+    // Batch/old id spaces are disjoint (ids are assigned once,
+    // corpus-wide — d09's same precondition).
     val oldClean = st.decisions.filter(col("stage").isin("kept", "duplicate"))
-      .select(col("doc_id"), col("group_id").as("lbl"))
-    // Checkpointed: three consumers, each would re-run the decision-scan
-    // join; bounded by `removed`. The guard covers the hostile case
-    // where nearly every component is touched.
-    val touched = removed.join(oldClean, "doc_id").select("lbl").distinct()
-      .transform(graft.Checkpoints.cut)
-    val touchedB = Skew.boundedBroadcast(touched)
-    val survivors = oldClean.join(touchedB, "lbl")
-      .select("doc_id")
-      .join(removed, Seq("doc_id"), "left_anti")
-    val subEdges = st.pairs.join(touchedB, "lbl")
-      .join(removed.toDF("id_a"), Seq("id_a"), "left_anti")
-      .join(removed.toDF("id_b"), Seq("id_b"), "left_anti")
-      .select("id_a", "id_b")
-
-    // --- new pairs: batch clean probes live bands + its own ---
+      .select(col("doc_id").as("id"), col("group_id").as("lbl"))
+    val split = Incremental.touchedSplit(oldClean, st.pairs, removed.toDF("id"))
     // Cut (round 19): referenced by the band table, the verify's sa/sb,
     // and the carried batchShingles — uncut, the batch shingle pass
     // re-ran per reference.
     val shB = graft.Checkpoints.cut(
       Dedup.shingledDocs(s, batch).join(batchClean, "doc_id"))
-    val newBands = Dedup.minhashBands(shB)
-    val n = s.sessionState.conf.numShufflePartitions
-    val probe = newBands.toDF("id_a", "band", "bsig")
-      .repartition(n, col("band"), col("bsig"))
-    // Guarded: bucket count grows with the batch's band fan-out; over
-    // the cap the pre-filter becomes a shuffle semi-join (still
-    // candidate-preserving, still cheaper than no filter).
-    val touchedBuckets = newBands
-      .select(col("band").as("band2"), col("bsig").as("bsig2")).distinct()
-      .transform(graft.Checkpoints.cut)
-    val build = st.bands.join(removed, Seq("doc_id"), "left_anti")
-      .unionByName(newBands).toDF("id_b", "band2", "bsig2")
-      .join(Skew.boundedBroadcast(touchedBuckets), Seq("band2", "bsig2"), "leftsemi")
-      .repartition(n, col("band2"), col("bsig2"))
-    val cand = probe
-      .join(build, col("band") === col("band2") && col("bsig") === col("bsig2") &&
-        col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .distinct()
     // Cut: consumed by the merge CC's edge lift AND carried forward
     // into composed state (its lineage is the whole candidate+verify
     // pipeline).
-    val newPairs = Dedup.verifyJaccard(cand, st.shingles.unionByName(shB), 0.5)
-      .select(col("id_a"), col("id_b"))
+    val newPairs = Incremental.batchPairs(s,
+        st.bands.join(removed, Seq("doc_id"), "left_anti"), st.shingles, shB)
       .transform(graft.Checkpoints.cut)
-
-    // --- merge CC in mixed space (d09's trick + touched raw subgraphs):
-    // an endpoint in an UNTOUCHED old component is lifted to its label
-    // (the component min, so min-propagation stays exact); touched
-    // members and batch docs stay raw. Batch/old id spaces are disjoint
-    // (ids are assigned once, corpus-wide — d09's same precondition).
-    val oldUntouched = oldClean.join(touchedB, Seq("lbl"), "left_anti")
-    val edgesNew = newPairs
-      .join(oldUntouched.select(col("doc_id").as("id_a"), col("lbl").as("la")),
-        Seq("id_a"), "left")
-      .join(oldUntouched.select(col("doc_id").as("id_b"), col("lbl").as("lb")),
-        Seq("id_b"), "left")
-      .select(coalesce(col("la"), col("id_a")).as("id_a"),
-        coalesce(col("lb"), col("id_b")).as("id_b"))
-    // Same cut class: edges is read by CC AND twice by verts; merged by
-    // relabel/survivorFinal/batchFinal. Each is bounded by touched
-    // components + batch fan-out, while its lineage is the whole
-    // candidate-generation + verify pipeline.
-    val edges = subEdges.unionByName(edgesNew).transform(graft.Checkpoints.cut)
-    // EDGE-INCIDENT vertices only (d09's mergeGraph shape): an isolated
-    // clean batch doc or isolated survivor is its own singleton
-    // component by definition and resolves via the coalesce in
-    // batchFinal/survivorFinal — feeding the whole batch into the CC
-    // (and therefore into `merged` and the relabel broadcast) made both
-    // BATCH-sized, the r11 scale defect.
-    val verts = edges.select(col("id_a").as("id"))
-      .unionByName(edges.select(col("id_b").as("id")))
-      .distinct()
-    val merged = Dedup.connectedComponents(verts, edges).toDF("id", "nl")
-      .transform(graft.Checkpoints.cut)
-
-    val relabel = Skew.boundedBroadcast(merged.toDF("lbl", "nl"))
-    val survivorFinal = survivors
-      .join(merged.toDF("doc_id", "lbl"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
-    val batchFinal = batchClean
-      .join(merged.toDF("doc_id", "lbl"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("lbl"))
+    val merged = Incremental.edgeCC(split.subEdges
+      .unionByName(Incremental.lifted(newPairs, split.untouched)))
 
     val qualB = TextAnalysis.qualityScore(batch)
       .select(col("doc_id"), col("quality")).join(batchClean, "doc_id")
     val splitB = Sampling.stratSplit(batch)
       .select(col("doc_id"), col("split")).join(batchClean, "doc_id")
-    MergeParts(stagedB, batchClean, removed, oldUntouched, relabel,
-      survivorFinal, batchFinal,
+    MergeParts(stagedB, batchClean, removed, split, merged,
       st.quality.unionByName(qualB), st.splits.unionByName(splitB),
-      shB, newBands, newPairs, bgNew,
+      shB, Dedup.minhashBands(shB), newPairs, bgNew,
       gramsB.join(batchClean, "doc_id"))
   }
 
-  /** Non-clean verdict rows of a merge: the batch's drops, the old
-    * corpus's standing drops, and the newly-contaminated old docs. */
-  private def mergedNonClean(st: CurationState, p: MergeParts,
-                             includeOld: Boolean): DataFrame = {
-    val batchDrops = p.stagedB.filter(col("stage0") =!= "clean")
-    val newContam = p.removed
-      .select(col("doc_id"), lit("contaminated").as("stage0"))
-    if (!includeOld) batchDrops.unionByName(newContam)
-    else batchDrops.unionByName(newContam).unionByName(
-      st.decisions.filter(!col("stage").isin("kept", "duplicate"))
-        .select(col("doc_id"), col("stage").as("stage0")))
+  /** The merged decision frame off precomputed [[MergeParts]]: `full`
+    * re-emits the whole corpus ([[mergeCuration]]), otherwise only the
+    * rows whose decision changed ([[curationDelta]]). Non-clean rows are
+    * the batch's drops and the newly-contaminated old docs, plus the old
+    * corpus's standing drops when `full`. */
+  private def decisionsFrom(st: CurationState, p: MergeParts,
+                            full: Boolean): DataFrame = {
+    val drops = p.stagedB.filter(col("stage0") =!= "clean")
+      .unionByName(p.removed
+        .select(col("doc_id"), lit("contaminated").as("stage0")))
+    assembleDecisions(p.labels(full), p.quality, p.splits,
+      if (!full) drops
+      else drops.unionByName(
+        st.decisions.filter(!col("stage").isin("kept", "duplicate"))
+          .select(col("doc_id"), col("stage").as("stage0"))))
   }
 
   /** The FULL merged decision frame over base ∪ batch — frame-equal to
@@ -466,19 +409,7 @@ object Curation {
     * a daily pipeline persists is [[curationDelta]]. */
   def mergeCuration(s: SparkSession, st: CurationState,
                     batch: DataFrame): DataFrame =
-    mergedDecisionsFrom(st, mergeParts(s, st, batch))
-
-  /** The full merged decision frame off precomputed [[MergeParts]] —
-    * shared by [[mergeCuration]] and the state-forward
-    * [[mergeCurationState]] (which must not run mergeParts twice). */
-  private def mergedDecisionsFrom(st: CurationState, p: MergeParts): DataFrame = {
-    val untouchedFinal = p.oldUntouched.join(p.relabel, Seq("lbl"), "left")
-      .select(col("doc_id"), coalesce(col("nl"), col("lbl")).as("lbl"))
-    val labels = untouchedFinal.unionByName(p.survivorFinal)
-      .unionByName(p.batchFinal)
-    assembleDecisions(labels, p.quality, p.splits,
-      mergedNonClean(st, p, includeOld = true))
-  }
+    decisionsFrom(st, mergeParts(s, st, batch), full = true)
 
   /** The DELTA of a merge — only rows whose decision changed: every
     * batch doc, every newly-contaminated old doc, and every member of a
@@ -489,18 +420,8 @@ object Curation {
     * daily batch writes O(batch fan-out + touched components), never
     * the corpus. */
   def curationDelta(s: SparkSession, st: CurationState,
-                    batch: DataFrame): DataFrame = {
-    val p = mergeParts(s, st, batch)
-    // Untouched components incident to new edges: their label appears
-    // as a vertex in the merge CC (= a key of the relabel map).
-    val incidentFinal = p.oldUntouched
-      .join(p.relabel, Seq("lbl"))
-      .select(col("doc_id"), col("nl").as("lbl"))
-    val labels = incidentFinal.unionByName(p.survivorFinal)
-      .unionByName(p.batchFinal)
-    assembleDecisions(labels, p.quality, p.splits,
-      mergedNonClean(st, p, includeOld = false))
-  }
+                    batch: DataFrame): DataFrame =
+    decisionsFrom(st, mergeParts(s, st, batch), full = false)
 
   /** Persist the curation state for the base slice (doc_id ≢ 0 mod
     * `mod`) of a corpus — the once-per-corpus artifact [[IncBench]]'s
@@ -650,7 +571,7 @@ object Curation {
     // frame — a later cut of a frame that captured the LAZY decisions
     // would re-evaluate the whole assembly pipeline per cut (the first
     // x19 form paid exactly that cascade; see [[cutState]]'s note).
-    val decisions = graft.Checkpoints.cut(mergedDecisionsFrom(st, p))
+    val decisions = graft.Checkpoints.cut(decisionsFrom(st, p, full = true))
     val rm = p.removed
     def drop(df: DataFrame): DataFrame =
       df.join(rm, Seq("doc_id"), "left_anti")

@@ -552,7 +552,13 @@ object Dedup {
   def d06DupGroups(s: SparkSession, d: String): DataFrame = {
     val pairs = d03MinhashLsh(s, d).select(col("id_a"), col("id_b"))
     val verts = Tables.documents(s, d).select(col("doc_id").as("id"))
-    val labels = connectedComponents(verts, pairs)
+    resolveGroups(connectedComponents(verts, pairs))
+  }
+
+  /** Resolve a labelling (id, lbl) into d06's group schema (sizes +
+    * min-id keeper) — shared by d06 and every dup-group state key
+    * (d09/d16/d17/s10). */
+  private[graft] def resolveGroups(labels: DataFrame): DataFrame = {
     val sizes = labels.groupBy(col("lbl").as("cid"))
       .agg(count(lit(1)).as("group_size"))
     labels.join(sizes, col("lbl") === col("cid"))

@@ -67,30 +67,8 @@ object Incremental {
                       oldBands: DataFrame, oldSh: DataFrame,
                       newIds: DataFrame, newSh: DataFrame,
                       threshold: Double = 0.5): DataFrame =
-    relabeled(oldLabels, newIds,
-      mergeGraph(s, oldLabels, oldBands, oldSh, newIds, newSh, threshold))
-
-  /** Apply a merged touched-graph labelling to the full label table:
-    * old components adopt their merged label (old labels are component
-    * minima, so a bridge through a new doc correctly pulls both sides
-    * down to the global min); untouched components and isolated new
-    * docs keep their own. The relabel maps are bounded by the batch's
-    * edge FAN-OUT ([[mergeGraph]]'s vertex set is edge-incident only)
-    * and broadcast so the corpus-sized label table maps in place
-    * instead of shuffling — SIZE-GUARDED ([[Skew.boundedBroadcast]]):
-    * a ~100%-near-dup batch (the crawl case) makes fan-out ≈ batch,
-    * and the guard lets the relabel degrade to a shuffle join instead
-    * of a forced driver collect. */
-  private def relabeled(oldLabels: DataFrame, newIds: DataFrame,
-                        merged: DataFrame): DataFrame = {
-    val relabelOld = Skew.boundedBroadcast(merged.toDF("lbl", "nl"))
-    val oldFinal = oldLabels.join(relabelOld, Seq("lbl"), "left")
-      .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
-    val relabelNew = Skew.boundedBroadcast(merged.toDF("id", "nl"))
-    val newFinal = newIds.join(relabelNew, Seq("id"), "left")
-      .select(col("id"), coalesce(col("nl"), col("id")).as("lbl"))
-    oldFinal.unionByName(newFinal)
-  }
+    relabeled(mergeGraph(s, oldLabels, oldBands, oldSh, newIds, newSh, threshold),
+      oldLabels, newIds)
 
   /** The LABEL DELTA of an ingest — what a production pipeline actually
     * persists per batch: the batch's labels plus the old rows whose
@@ -100,43 +78,50 @@ object Incremental {
     * a daily batch writes O(batch fan-out) rows while the full-relabel
     * form re-emits — and re-shuffles for group sizes — the whole
     * corpus. The only corpus-sized work left is one map-side scan of
-    * the label table against the broadcast relabel map. */
+    * the label table against the broadcast relabel map, here cut down
+    * to the labels that move (a batch id whose merged label is its own
+    * id resolves to it either way). */
   def ingestDupGroupsDelta(s: SparkSession, oldLabels: DataFrame,
                            oldBands: DataFrame, oldSh: DataFrame,
                            newIds: DataFrame, newSh: DataFrame,
-                           threshold: Double = 0.5): DataFrame = {
-    val merged = mergeGraph(s, oldLabels, oldBands, oldSh, newIds, newSh, threshold)
-    val changed = Skew.boundedBroadcast(merged.toDF("lbl", "nl")
-      .filter(col("nl") =!= col("lbl")))
-    val oldChanged = oldLabels.join(changed, Seq("lbl"))
-      .select(col("id"), col("nl").as("lbl"))
-    val relabelNew = Skew.boundedBroadcast(merged.toDF("id", "nl"))
-    val newFinal = newIds.join(relabelNew, Seq("id"), "left")
-      .select(col("id"), coalesce(col("nl"), col("id")).as("lbl"))
-    oldChanged.unionByName(newFinal)
-  }
+                           threshold: Double = 0.5): DataFrame =
+    relabeled(mergeGraph(s, oldLabels, oldBands, oldSh, newIds, newSh, threshold)
+      .filter(col("nl") =!= col("id")), oldLabels, newIds, allOld = false)
 
-  /** Candidate generation + verify + label-space CC shared by the full
-    * and delta ingest forms: returns the merged labelling of the
-    * touched graph (old labels + batch ids incident to new edges).
-    * The vertex set is EDGE-INCIDENT only — an isolated batch doc is
-    * its own singleton component and resolves via the
-    * coalesce-to-own-id in the callers' relabel joins — so the CC, its
-    * output, and the relabel broadcasts are all bounded by the batch's
-    * verified-pair fan-out, not the batch (package-visible so
-    * ScaleGuardSpec can assert that bound on the real frame). */
+  /** The merged labelling (id, nl) of a batch's touched graph: the band
+    * probe, the label-space lift and the edge-incident CC. The vertex
+    * set is EDGE-INCIDENT only — an isolated batch doc is its own
+    * singleton component and resolves to its own id in [[relabeled]] —
+    * so the CC, its output, and the relabel broadcast are all bounded
+    * by the batch's verified-pair fan-out, not the batch
+    * (package-visible so ScaleGuardSpec can assert that bound on the
+    * real frame). */
   private[graft] def mergeGraph(s: SparkSession, oldLabels: DataFrame,
                                 oldBands: DataFrame, oldSh: DataFrame,
                                 newIds: DataFrame, newSh: DataFrame,
                                 threshold: Double = 0.5): DataFrame =
-    mergeLabels(s, oldLabels, batchPairs(s, oldBands, oldSh, newSh, threshold))
+    edgeCC(lifted(batchPairs(s, oldBands, oldSh, newSh, threshold), oldLabels))
 
-  /** Candidate generation + exact verification of the pairs a batch
-    * introduces (new-vs-corpus AND new-vs-new) — the pair half of
-    * [[mergeGraph]], factored so the composed lifecycle can ALSO feed
-    * the verified pairs forward into its persisted pair graph. */
-  private[graft] def batchPairs(s: SparkSession, oldBands: DataFrame,
-                                oldSh: DataFrame, newSh: DataFrame,
+  // ---------------------------------------------------------------
+  // The group-graph update. Every dup-group and curation update
+  // (append, delete, the s10 drain, the curation merge) composes these
+  // four steps and keeps no copy of its own:
+  //  1. [[batchPairs]] — band probe of a batch against live bands;
+  //  2. [[touchedSplit]] — the components a removed-id set touches;
+  //  3. [[lifted]] + [[edgeCC]] — label-space lift, edge-incident CC;
+  //  4. [[relabeled]] / [[ownOrMerged]] — relabel from the merged map.
+  // ---------------------------------------------------------------
+
+  /** Step 1: candidate generation + exact verification of the pairs a
+    * batch introduces against a LIVE band table (new-vs-corpus AND
+    * new-vs-new) — the filter-then-verify shape of a similarity join.
+    * `liveBands` (doc_id, band, bsig) and `liveSh` are the corpus
+    * stores; a caller that has removed docs passes bands without them.
+    * Returned uncut: a caller that consumes the pairs more than once
+    * (a carried pair graph) cuts them, or the verify pipeline re-runs
+    * per consumer. */
+  private[graft] def batchPairs(s: SparkSession, liveBands: DataFrame,
+                                liveSh: DataFrame, newSh: DataFrame,
                                 threshold: Double = 0.5): DataFrame = {
     val n = s.sessionState.conf.numShufflePartitions
     val newBands = Dedup.minhashBands(newSh)
@@ -150,15 +135,18 @@ object Incremental {
     // Bucket pre-filter: a corpus band row can only pair with the batch
     // if its (band, bsig) bucket is one the batch occupies, so the
     // persisted band table is semi-joined down to the TOUCHED buckets
-    // (batch-bands broadcast — daily-batch-small by assumption) before
-    // anything shuffles. Provably candidate-preserving (a pair needs an
-    // equal bucket on both sides), hash-checked by the d09 gate; at
-    // corpus scale it is the difference between shuffling the whole
-    // band table per batch and shuffling the batch's fan-out.
-    val touched = newBands.select(col("band").as("band2"), col("bsig").as("bsig2"))
-      .distinct()
-    val build = oldBands.unionByName(newBands).toDF("id_b", "band2", "bsig2")
-      .join(broadcast(touched), Seq("band2", "bsig2"), "leftsemi")
+    // before anything shuffles. Provably candidate-preserving (a pair
+    // needs an equal bucket on both sides), hash-checked by the d09
+    // gate; at corpus scale it is the difference between shuffling the
+    // whole band table per batch and shuffling the batch's fan-out. The
+    // bucket set grows with the batch's band fan-out, so it is cut and
+    // size-guarded: over the cap the pre-filter becomes a shuffle
+    // semi-join (still candidate-preserving).
+    val touched = Skew.boundedBroadcast(newBands
+      .select(col("band").as("band2"), col("bsig").as("bsig2")).distinct()
+      .transform(graft.Checkpoints.cut))
+    val build = liveBands.unionByName(newBands).toDF("id_b", "band2", "bsig2")
+      .join(touched, Seq("band2", "bsig2"), "leftsemi")
       .repartition(n, col("band2"), col("bsig2"))
     val cand = probe
       .join(build, col("band") === col("band2") && col("bsig") === col("bsig2") &&
@@ -166,38 +154,99 @@ object Incremental {
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .distinct()
-    Dedup.verifyJaccard(cand, oldSh.unionByName(newSh), threshold)
+    Dedup.verifyJaccard(cand, liveSh.unionByName(newSh), threshold)
       .select(col("id_a"), col("id_b"))
   }
 
-  /** The label-space merge CC over a batch's verified pairs — the
-    * labelling half of [[mergeGraph]]. `newPairs` is consumed once
-    * (the edge lift, itself cut immediately); a caller that ALSO
-    * carries the pairs forward (composed lifecycle state) must cut
-    * them first or the verify pipeline re-runs per consumer. */
-  private[graft] def mergeLabels(s: SparkSession, oldLabels: DataFrame,
-                                 newPairs: DataFrame): DataFrame = {
-    // Lift pair endpoints into LABEL space: an old endpoint stands for
-    // its whole (already-connected) component, so the merge graph is
-    // labels + new ids, with one edge per verified pair.
-    val edges = newPairs
-      .join(oldLabels.toDF("id_a", "la"), Seq("id_a"), "left")
-      .join(oldLabels.toDF("id_b", "lb"), Seq("id_b"), "left")
+  /** Step 2: the components of a labelling (id, lbl) that a removed-id
+    * set (id) touches, and their component-labeled pair graph
+    * (id_a, id_b, lbl) cut down to what survives.
+    *  - `touched`: the labels of the removed ids — removal-sized, cut
+    *    and broadcast SIZE-GUARDED ([[Skew.boundedBroadcast]]: a
+    *    removal touching most components degrades to a shuffle join,
+    *    never a forced collect);
+    *  - `untouched` (id, lbl): rows of the other components, which lose
+    *    no vertex and no edge, so their membership AND their min — their
+    *    label — are unchanged (one map-side anti-join);
+    *  - `survivors` (id): the touched components' remaining members;
+    *  - `subEdges` (id_a, id_b): the touched components' pairs minus
+    *    those incident to a removed id — the subgraph a re-CC splits. */
+  private[graft] final case class TouchedSplit(touched: DataFrame,
+                                               untouched: DataFrame,
+                                               survivors: DataFrame,
+                                               subEdges: DataFrame)
+
+  private[graft] def touchedSplit(labels: DataFrame, labeledPairs: DataFrame,
+                                  removed: DataFrame): TouchedSplit = {
+    // Cut: three consumers here (four in the s10 step), and the lineage
+    // holds the label-table join (the x08/r11 multiply-referenced rule).
+    val touched = Skew.boundedBroadcast(labels.join(removed, "id")
+      .select("lbl").distinct().transform(graft.Checkpoints.cut))
+    TouchedSplit(touched,
+      labels.join(touched, Seq("lbl"), "left_anti").select("id", "lbl"),
+      labels.join(touched, "lbl").join(removed, Seq("id"), "left_anti")
+        .select("id"),
+      labeledPairs.join(touched, "lbl")
+        .join(removed.toDF("id_a"), Seq("id_a"), "left_anti")
+        .join(removed.toDF("id_b"), Seq("id_b"), "left_anti")
+        .select("id_a", "id_b"))
+  }
+
+  /** Step 3a: lift pair endpoints into LABEL space — an endpoint with a
+    * row in `labels` (id, lbl) stands for its whole (already-connected)
+    * component, so the merge graph is labels + raw ids, one edge per
+    * pair. Exact because each label is its component's min id, so
+    * min-propagation over representatives yields the global min. An
+    * endpoint WITHOUT a row (a batch doc, or a survivor of a split
+    * component, whose old label no longer names its piece) stays raw. */
+  private[graft] def lifted(pairs: DataFrame, labels: DataFrame): DataFrame =
+    pairs
+      .join(labels.toDF("id_a", "la"), Seq("id_a"), "left")
+      .join(labels.toDF("id_b", "lb"), Seq("id_b"), "left")
       .select(coalesce(col("la"), col("id_a")).as("id_a"),
         coalesce(col("lb"), col("id_b")).as("id_b"))
-      .transform(graft.Checkpoints.cut)
-    // EDGE-INCIDENT vertices only: feeding all of newIds into the CC
-    // made `merged` — and the relabel broadcasts built from it —
-    // BATCH-sized; isolated batch docs need no CC row (the callers
-    // coalesce a missing relabel hit to the doc's own id).
-    val verts = edges.select(col("id_a").as("id"))
-      .unionByName(edges.select(col("id_b").as("id")))
+
+  /** Step 3b: connected components (id, nl) over an edge set, on its
+    * EDGE-INCIDENT vertices only: feeding whole batches or components
+    * into the CC made its output — and the relabel maps built from it —
+    * batch-sized; an isolated vertex needs no CC row (the relabel
+    * resolves a missing hit to the vertex's own id). The edges are cut
+    * (read by the CC and twice by the vertex set, while their lineage is
+    * the whole probe/verify or split pipeline), and so is the output
+    * (read by every relabel join and the broadcast guard's count). */
+  private[graft] def edgeCC(edges: DataFrame): DataFrame = {
+    val e = graft.Checkpoints.cut(edges)
+    val verts = e.select(col("id_a").as("id"))
+      .unionByName(e.select(col("id_b").as("id")))
       .distinct()
-    // The merge CC: fan-out-bounded by construction (touched labels +
-    // edge-incident batch ids). Checkpointed so the two relabel maps
-    // and the size-guard counts read materialized rows.
-    Dedup.connectedComponents(verts, edges).transform(graft.Checkpoints.cut)
+    Dedup.connectedComponents(verts, e).toDF("id", "nl")
+      .transform(graft.Checkpoints.cut)
   }
+
+  /** Step 4: apply a merged map (id, nl) from [[edgeCC]]. Old rows
+    * (id, lbl) map by LABEL: a whole component adopts its merged label
+    * (old labels are component minima, so a bridge through a new doc
+    * pulls both sides down to the global min); with `allOld = false`
+    * only the rows the map covers are kept (the delta forms). Raw ids
+    * map by ID ([[ownOrMerged]]). The label-keyed map is bounded by the
+    * edge FAN-OUT and broadcast so the corpus-sized label table maps in
+    * place instead of shuffling — SIZE-GUARDED
+    * ([[Skew.boundedBroadcast]]): a ~100%-near-dup batch (the crawl
+    * case) makes fan-out ≈ batch, and the guard lets the relabel degrade
+    * to a shuffle join instead of a forced driver collect. */
+  private[graft] def relabeled(merged: DataFrame, old: DataFrame, raw: DataFrame,
+                               allOld: Boolean = true): DataFrame =
+    old.join(Skew.boundedBroadcast(merged.toDF("lbl", "nl")), Seq("lbl"),
+        if (allOld) "left" else "inner")
+      .select(col("id"), coalesce(col("nl"), col("lbl")).as("lbl"))
+      .unionByName(ownOrMerged(merged, raw))
+
+  /** Step 4, raw half: ids (id) take their merged label, or their own id
+    * when the map has no row (an isolated vertex). The map is the cut CC
+    * output, so the planner broadcasts it by its measured size. */
+  private[graft] def ownOrMerged(merged: DataFrame, raw: DataFrame): DataFrame =
+    raw.join(merged, Seq("id"), "left")
+      .select(col("id"), coalesce(col("nl"), col("id")).as("lbl"))
 
   /** Append a batch of vectors to a persisted IVF×PQ index with FROZEN
     * quantizers. Pure per-vector encode of the batch (one cell
@@ -235,7 +284,7 @@ object Incremental {
     * gated key and the persisted-state path. */
   private def appendAndResolve(s: SparkSession, st: GroupLifecycleState,
                                sl: AppendSlice): DataFrame =
-    resolveGroups(appendGroupLifecycle(s, st, sl.ids, sl.shingles).labels)
+    Dedup.resolveGroups(appendGroupLifecycle(s, st, sl.ids, sl.shingles).labels)
 
   /** d09: incremental dup-group ingestion as a gated key. The 20% batch
     * (doc_id ≡ 0 mod [[IngestMod]]) is appended to the base corpus's
@@ -338,19 +387,12 @@ object Incremental {
     * bands or shingles at all, because removing vertices never CREATES
     * an edge).
     *
-    * Work is bounded by what the takedown disturbs:
-    *  - touched components = labels of deleted ids — takedown-sized;
-    *  - untouched components pass through with ONE map-side anti-join
-    *    against the broadcast touched-label set (a component with no
-    *    deleted vertex loses no vertex and no edge, so its membership
-    *    AND its min — its label — are unchanged);
-    *  - touched components re-run CC on their label-filtered persisted
-    *    subgraph minus edges incident to deleted vertices — a SPLIT
-    *    falls out as multiple new components, and a dead keeper
-    *    (deleted component-min) re-elects by each piece taking its own
-    *    min (the new label). Vertices are edge-incident only; isolated
-    *    survivors resolve to their own id via the coalesce (d09's
-    *    merge-CC shape).
+    * Work is bounded by what the takedown disturbs: [[touchedSplit]]
+    * passes the untouched components through with one map-side
+    * anti-join, and the touched ones re-run [[edgeCC]] on their
+    * surviving subgraph — a SPLIT falls out as multiple new components,
+    * and a dead keeper (deleted component-min) re-elects by each piece
+    * taking its own min (the new label).
     *
     * Exactness: deleting vertices only ever REMOVES edges incident to
     * them, so components not containing a deleted vertex are identical
@@ -358,74 +400,35 @@ object Incremental {
     * re-CC'd on the induced subgraph are exactly the from-scratch
     * components of the remaining corpus restricted to that component —
     * the d16 gate hash-checks this against from-scratch-on-remaining
-    * every run. Broadcasts are size-guarded ([[Skew.boundedBroadcast]]):
-    * a hostile takedown touching most components degrades to a shuffle
-    * join, never a forced collect. */
+    * every run. */
   def deleteFromGroups(s: SparkSession, labels: DataFrame,
-                       labeledPairs: DataFrame, deleted: DataFrame): DataFrame = {
-    val delIds = deleted.select("id")
-    // Touched labels feed three consumers and their lineage includes the
-    // label-table join; cut once (the x08/r11 multiply-referenced rule).
-    val touched = labels.join(delIds, "id").select("lbl").distinct()
-      .transform(graft.Checkpoints.cut)
-    val touchedB = Skew.boundedBroadcast(touched)
-    val untouched = labels.join(touchedB, Seq("lbl"), "left_anti")
-      .select("id", "lbl")
-    val survivors = labels.join(touchedB, "lbl")
-      .join(delIds, Seq("id"), "left_anti")
-      .select("id")
-    val subEdges = labeledPairs.join(touchedB, "lbl")
-      .join(delIds.toDF("id_a"), Seq("id_a"), "left_anti")
-      .join(delIds.toDF("id_b"), Seq("id_b"), "left_anti")
-      .select("id_a", "id_b")
-      .transform(graft.Checkpoints.cut)
-    val verts = subEdges.select(col("id_a").as("id"))
-      .unionByName(subEdges.select(col("id_b").as("id")))
-      .distinct()
-    val cc = Dedup.connectedComponents(verts, subEdges).toDF("id", "nl")
-      .transform(graft.Checkpoints.cut)
-    val touchedFinal = survivors.join(cc, Seq("id"), "left")
-      .select(col("id"), coalesce(col("nl"), col("id")).as("lbl"))
-    untouched.unionByName(touchedFinal)
-  }
+                       labeledPairs: DataFrame, deleted: DataFrame): DataFrame =
+    splitLabels(touchedSplit(labels, labeledPairs, deleted.select("id")))
+
+  /** A split's new labelling: untouched rows pass through; survivors
+    * re-CC on the surviving subgraph. */
+  private def splitLabels(sp: TouchedSplit): DataFrame =
+    sp.untouched.unionByName(ownOrMerged(edgeCC(sp.subEdges), sp.survivors))
 
   /** Propagate a takedown through (labels, component-labeled pairs) and
     * return BOTH updated frames — the state a MULTI-BATCH delete stream
     * carries forward (d16's one-shot form returns labels only; a second
     * delete needs the surviving pair graph re-keyed by its new
-    * component labels). The pair-graph update is takedown-bounded:
-    * untouched components' pairs pass through labels-and-all with ONE
-    * anti-join against the broadcast touched-label set; only touched
-    * components' surviving pairs re-label against the new labelling.
-    * Applying the same takedown twice is a NO-OP (already-deleted ids
-    * hit no label row, so `touched` is empty) — the idempotence the
-    * CDC drain's at-least-once restart semantics rest on
-    * (StreamTakedownSpec asserts it). */
+    * component labels). The pair-graph update is takedown-bounded and
+    * reuses the split: untouched components' pairs pass through
+    * labels-and-all with ONE anti-join against its broadcast touched
+    * set; only the surviving subgraph re-labels against the new
+    * labelling. Applying the same takedown twice is a NO-OP
+    * (already-deleted ids hit no label row, so `touched` is empty) — the
+    * idempotence the CDC drain's at-least-once restart semantics rest
+    * on (StreamTakedownSpec asserts it). */
   def deleteGroupStateStep(s: SparkSession, labels: DataFrame,
                            labeledPairs: DataFrame,
                            deleted: DataFrame): (DataFrame, DataFrame) = {
-    val del = deleted.select("id")
-    val newLabels = deleteFromGroups(s, labels, labeledPairs, del)
-      .transform(graft.Checkpoints.cut)
-    val touchedB = Skew.boundedBroadcast(
-      labels.join(del, "id").select("lbl").distinct())
-    val untouched = labeledPairs.join(touchedB, Seq("lbl"), "left_anti")
-    val survivors = labeledPairs.join(touchedB, Seq("lbl"), "left_semi")
-      .join(del.toDF("id_a"), Seq("id_a"), "left_anti")
-      .join(del.toDF("id_b"), Seq("id_b"), "left_anti")
-      .drop("lbl")
-      .join(newLabels.toDF("id_a", "lbl"), "id_a")
-    (newLabels, untouched.unionByName(survivors))
-  }
-
-  /** Resolve a labelling into d06's group schema (sizes + min-id
-    * keeper) — the shared tail of d06/d09/d16. */
-  private[graft] def resolveGroups(labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy(col("lbl").as("cid"))
-      .agg(count(lit(1)).as("group_size"))
-    labels.join(sizes, col("lbl") === col("cid"))
-      .select(col("id").as("doc_id"), col("lbl").as("canonical_id"),
-        col("group_size"), (col("id") === col("lbl")).as("is_keeper"))
+    val sp = touchedSplit(labels, labeledPairs, deleted.select("id"))
+    val newLabels = graft.Checkpoints.cut(splitLabels(sp))
+    (newLabels, labeledPairs.join(sp.touched, Seq("lbl"), "left_anti")
+      .unionByName(sp.subEdges.join(newLabels.toDF("id_a", "lbl"), "id_a")))
   }
 
   /** d16: takedown propagation through dup groups as a gated key. The
@@ -448,7 +451,7 @@ object Incremental {
     val deleted = Tables.documents(s, d)
       .filter(col("doc_id") % DeleteMod === DeleteRes)
       .select(col("doc_id").as("id"))
-    resolveGroups(deleteGroupLifecycle(s,
+    Dedup.resolveGroups(deleteGroupLifecycle(s,
       groupLifecycleOf(s, corpusDocs(s, d)), deleted).labels)
   }
 
@@ -472,7 +475,7 @@ object Incremental {
   def deleteGroupsFromState(s: SparkSession, dir: String,
                             deleted: DataFrame): DataFrame = {
     val Seq(labels, pairs) = StateDir.read(s, dir, "labels", "pairs")
-    resolveGroups(deleteFromGroups(s, labels, pairs, deleted))
+    Dedup.resolveGroups(deleteFromGroups(s, labels, pairs, deleted))
   }
 
   /** e15: takedown propagation through the IVF×PQ index as a gated key.
@@ -721,9 +724,8 @@ object Incremental {
     // re-runs per consumer.
     val newPairs = batchPairs(s, st.bands, st.shingles, newSh, threshold)
       .transform(graft.Checkpoints.cut)
-    val merged = mergeLabels(s, st.labels, newPairs)
     GroupLifecycleState(
-      relabeled(st.labels, newIds, merged),
+      relabeled(edgeCC(lifted(newPairs, st.labels)), st.labels, newIds),
       st.pairs.unionByName(newPairs),
       st.bands.unionByName(Dedup.minhashBands(newSh)),
       st.shingles.unionByName(newSh))
@@ -779,7 +781,7 @@ object Incremental {
     * marginal per step from PERSISTED state is priced by
     * [[graft.IncBench]] `--composed`. */
   def d17LifecycleGroups(s: SparkSession, d: String): DataFrame =
-    resolveGroups(composedLifecycleLabels(s, d))
+    Dedup.resolveGroups(composedLifecycleLabels(s, d))
 
   /** The composed append→delete→append labelling over the gate corpus —
     * shared by the gated key and the persisted-path equality spec. */

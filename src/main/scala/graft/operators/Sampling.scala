@@ -743,87 +743,6 @@ object Sampling {
     picks.toSeq
   }
 
-  /** One DELTA vocabulary/pair-count step: apply a symbol-disjoint
-    * merge batch to the framed vocabulary and update the pair-count
-    * frame incrementally. Between rounds only words CONTAINING an
-    * accepted pair can change any adjacent-pair count, so the
-    * per-round aggregate runs over the AFFECTED vocab slice (plus a
-    * counts-frame merge) instead of the full vocabulary — the recount
-    * policy a real 32k-merge vocabulary needs, where the full recount
-    * is a millions-of-words pass per round. Exact, not approximate:
-    * batch merges commute (symbol-disjoint — none can create or
-    * destroy another's occurrences, so ONE replace chain over an
-    * affected word equals pick-order application), and an unaffected
-    * word contributes identical pairs before and after, hence
-    * newCounts = prev − pairs(affected) + pairs(rewritten).
-    * BpeDeltaSpec asserts frame equality with the full recount after
-    * every round, and picks parity end-to-end. */
-  private[graft] def bpeDeltaStep(w: DataFrame, counts: DataFrame,
-                                  accepted: Seq[(String, String)]): (DataFrame, DataFrame) = {
-    val pats = accepted.map { case (l, rr) => (s"($l)($rr)", s"(${l + rr})") }
-    val isAffected = pats.map(p => col("w").contains(p._1)).reduce(_ || _)
-    val affected = graft.Checkpoints.cut(w.filter(isAffected))
-    val chain = pats.foldLeft("w") { case (acc, (from, to)) =>
-      s"replace($acc, '$from', '$to')"
-    }
-    val rewritten = graft.Checkpoints.cut(
-      affected.select(expr(chain).as("w"), col("freq")))
-    val sub = bpePairCounts(affected)
-      .select(col("lhs"), col("rhs"), (-col("cnt")).as("d"))
-    val add = bpePairCounts(rewritten)
-      .select(col("lhs"), col("rhs"), col("cnt").as("d"))
-    val newCounts = graft.Checkpoints.cut(
-      counts.select(col("lhs"), col("rhs"), col("cnt").as("d"))
-        .unionByName(sub).unionByName(add)
-        .groupBy("lhs", "rhs").agg(sum("d").as("cnt"))
-        .filter(col("cnt") > 0))
-    val newW = graft.Checkpoints.cut(
-      w.filter(!isAffected).unionByName(rewritten))
-    (newW, newCounts)
-  }
-
-  /** [[bpeMergeListBatched]] with DELTA-maintained pair counts — same
-    * picks (the conflict scan reads the maintained counts frame, which
-    * is round-for-round equal to the full recount), different recount
-    * cost curve: per round one affected-slice pass + a counts merge
-    * instead of a full-vocabulary explode. The lineage discipline is
-    * the iterative-frame rule (every carried frame checkpointed per
-    * round — d15/k-means' lesson). */
-  private[graft] def bpeMergeListBatchedDelta(s: SparkSession, docs: DataFrame,
-                                              rounds: Int, batch: Int): Seq[(Long, Long, String, String, String, Long)] = {
-    var w = bpeVocab(docs)
-    var counts = graft.Checkpoints.cut(bpePairCounts(w))
-    val picks = scala.collection.mutable.ArrayBuffer[(Long, Long, String, String, String, Long)]()
-    for (r <- 1 to rounds) {
-      val slice = batch * 16
-      val topAll = counts
-        .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
-        .limit(slice + 1).collect()
-      val sawEverything = topAll.length <= slice
-      val top = topAll.take(slice)
-      val used = scala.collection.mutable.Set.empty[String]
-      val accepted = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-      val it = top.iterator
-      while (accepted.size < batch && it.hasNext) {
-        val row = it.next()
-        val l = row.getAs[String]("lhs"); val rr = row.getAs[String]("rhs")
-        if (!used(l) && !used(rr)) {
-          accepted += ((l, rr, row.getAs[Long]("cnt")))
-          used += l; used += rr
-        }
-      }
-      require(accepted.size == batch || sawEverything,
-        s"x17-delta: conflict headroom exhausted at round $r — " +
-          s"${accepted.size} of $batch accepts in the top-$slice slice")
-      if (accepted.isEmpty) return picks.toSeq
-      for (((l, rr, cnt), k) <- accepted.zipWithIndex)
-        picks += ((r.toLong, (k + 1).toLong, l, rr, l + rr, cnt))
-      val (nw, nc) = bpeDeltaStep(w, counts, accepted.map(a => (a._1, a._2)).toSeq)
-      w = nw; counts = nc
-    }
-    picks.toSeq
-  }
-
   /** x16: BPE ENCODING with the trained vocabulary — the apply half of
     * x13 (train → APPLY → pack x02 → chunk x10 closes the tokenization
     * loop): every alphanumeric token is framed (c)(h)(a)(r) and the 8

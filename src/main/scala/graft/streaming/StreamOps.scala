@@ -735,7 +735,7 @@ object StreamOps {
     * Checkpoint-restart exactly-once is spec-gated
     * (StreamTakedownSpec, the StreamRestartSpec pattern). */
   def s10StreamTakedown(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    import graft.operators.Incremental
+    import graft.operators.{Dedup, Incremental}
     // JVM-exit cleanup (round 19, ADVICE item): corpus-sized state
     // versions otherwise accumulate in /tmp across Verify/Bench runs.
     // The returned frame is read lazily by the gate, so the dir must
@@ -749,7 +749,7 @@ object StreamOps {
     Incremental.writeDeleteGroupState(s, d, s"$root/v0")
     publishTakedownOps(s, d, s"$root/ops", Seq(3L, 13L, 23L))
     takedownDrain(s, root, s"$root/ops", s"$root/ckpt")
-    Incremental.resolveGroups(
+    Dedup.resolveGroups(
       StateDir.read(s, s"$root/v${StateDir.latest(root)}", "labels").head)
   }
 

@@ -21,6 +21,11 @@ import graft.operators.{Curation, Dedup}
   *    is t53..t60 — an 8-token run of B spanning the U/V boundary that
   *    neither A nor C contains (A stops at t59+Z, C starts at t60+Z'),
   *    so B alone flips to contaminated and the chain must split.
+  *  - Batch doc N(20) = t60..t119 ++ t20..t44 is a prefix of C (J≈0.94;
+  *    J(N,B)≈0.64 but B leaves the clean graph; J(N,A)≈0.39). It pairs
+  *    with C, a SURVIVOR of that split: C must enter the merge CC as its
+  *    own id, not lifted to its old label (A's id 1), or N would pull
+  *    A's piece and C's together again.
   *  - D(4)⊃E(6) (J≈0.95) is a second component; batch doc G(5) is a
   *    prefix of D (J≈0.9) and must join it (the untouched-incident
   *    relabel path).
@@ -58,6 +63,7 @@ class CurationIncSpec extends SparkSpecBase {
   private def batchRows(seed: Int): Seq[(Long, Seq[Int])] = Seq(
     5L -> (200 to 271),
     100L -> (53 to 60),
+    20L -> ((60 to 119) ++ (20 to 44)),
     15L -> (400 to 459))
 
   private def batchDocs(seed: Int): DataFrame =
@@ -71,10 +77,10 @@ class CurationIncSpec extends SparkSpecBase {
     val got = Dedup.minhashLshPairs(spark, Dedup.shingledDocs(spark, all))
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val chain = Set((1L, 2L), (2L, 3L), (4L, 6L), (7L, 8L), (4L, 5L))
+    val chain = Set((1L, 2L), (2L, 3L), (4L, 6L), (7L, 8L), (4L, 5L), (3L, 20L))
     chain.subsetOf(got) && !got.contains((1L, 3L)) &&
       got.forall { case (a, b) =>
-        chain((a, b)) || Set((5L, 6L))((a, b)) }
+        chain((a, b)) || Set((5L, 6L), (2L, 20L))((a, b)) }
   }.getOrElse(fail("no vocabulary seed bands the intended pair structure"))
 
   private lazy val base = docsOf(seed, baseRows(seed))
@@ -106,6 +112,17 @@ class CurationIncSpec extends SparkSpecBase {
       byId(6L).getLong(2) == byId(4L).getLong(2),
       "G must join D/E's component through the band probe")
     assert(byId(10L).getString(1) == "low_quality")
+  }
+
+  test("synthetic: a batch doc pairing with a split survivor joins that piece only") {
+    val byId = full.collect().map(r => r.getLong(0) -> r).toMap
+    assert(byId(20L).getString(1) == "kept" || byId(20L).getString(1) == "duplicate")
+    assert(byId(20L).getLong(2) == byId(3L).getLong(2) && byId(3L).getLong(3) == 2L,
+      "N must join C's piece of the split component")
+    assert(byId(1L).getLong(3) == 1L,
+      "A's piece must stay alone: C enters the merge CC raw, not as label 1")
+    assert(rowsOf(full.filter(col("doc_id").isin(1L, 3L, 20L))) ==
+      rowsOf(scratch.filter(col("doc_id").isin(1L, 3L, 20L))))
   }
 
   test("synthetic: upserting the delta reproduces the full merge; untouched stays out") {

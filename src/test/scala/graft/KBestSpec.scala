@@ -57,5 +57,8 @@ class KBestSpec extends SparkSpecBase {
       assert(e.getMessage.contains(f), s"$f k=$k: ${e.getMessage}")
     }
     assert(call("graft_mink", "2147483647").head.getSeq[Long](0) == Seq(1L, 3L, 5L))
+    // 2^32 + 1 must not wrap to k = 1
+    val e = intercept[IllegalArgumentException](call("graft_mink", "4294967297"))
+    assert(e.getMessage.contains("4294967297"), e.getMessage)
   }
 }

@@ -86,14 +86,19 @@ class ScaleGuardSpec extends SparkSpecBase {
     val st = Curation.curationState(spark, base)
     val p = Curation.mergeParts(spark, st, batch)
     val clean = p.batchClean.count()
-    val relabel = p.relabel.count()
+    // The relabel map is the merge CC's output keyed by label.
+    val relabel = p.merged.count()
     // Most of the 203-doc batch is clean (a deterministic handful land
     // in the 1-in-20 md5 benchmark slice) — the bound must not depend
     // on that, only on the edge fan-out.
     assert(clean >= 150, s"expected a mostly-clean batch, got $clean")
     assert(relabel <= 8,
       s"relabel map must be edge-incident-bounded: $relabel rows for $clean clean batch docs")
-    assert(p.relabel.queryExecution.analyzed.toString.contains("ResolvedHint"),
+    val hinted = p.labels(full = true).queryExecution.analyzed.collect {
+      case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint =>
+        h.output.map(_.name)
+    }
+    assert(hinted.contains(Seq("lbl", "nl")),
       "a fan-out-bounded relabel map should take the broadcast fast path")
   }
 

@@ -207,4 +207,12 @@ class TextFunSpec extends SparkSpecBase {
       .collect()(0).getSeq[String](0)
     assert(sh == ng.distinct)
   }
+
+  test("graft_shingles rejects a bigint k outside the Int range instead of wrapping") {
+    graft.functions.Natives.register(spark, "graft_shingles")
+    // 2^32 + 2 wrapped to k = 2 before
+    val e = intercept[IllegalArgumentException](
+      spark.sql("SELECT graft_shingles('a b c', 4294967298) AS sh").collect())
+    assert(e.getMessage.contains("4294967298"), e.getMessage)
+  }
 }
