@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Curation, Incremental}
+import graft.sources.Sources
 
 /** Prices incremental ingestion the way production pays for it: state
   * is PERSISTED between batches, so the number that matters is the
@@ -165,7 +166,7 @@ object IncBench {
       Incremental.deleteGroupLifecycle(spark, rd(1), delIds), s"$root/v2"))
     val tApp2 = timed(Incremental.writeGroupLifecycle(
       Incremental.appendGroupLifecycle(spark, rd(2), ids2, sh2), s"$root/v3"))
-    val finalRows = spark.read.parquet(s"$root/v3/labels").count()
+    val finalRows = Sources.parquet(spark, s"$root/v3/labels").count()
     // The segmented lexical index through the same history: appends
     // land new segment FILES, the delete lands tombstone rows — the
     // per-op cost production pays — then compaction folds the debt.
@@ -179,10 +180,10 @@ object IncBench {
     val tPApp2 = timed(Retrieval.appendPostingsLifecycleState(spark, pDir, batch2))
     val tPQuery = marginal(Retrieval.queryPostingsLifecycleState(spark, pDir))
     val pFilesBefore = Retrieval.partFileCount(spark, s"$pDir/postings")
-    val pRowsBefore = spark.read.parquet(s"$pDir/postings").count()
+    val pRowsBefore = Sources.parquet(spark, s"$pDir/postings").count()
     val tPCompact = timed(Retrieval.compactPostingsLifecycle(spark, pDir))
     val pFilesAfter = Retrieval.partFileCount(spark, s"$pDir/postings")
-    val pRowsAfter = spark.read.parquet(s"$pDir/postings").count()
+    val pRowsAfter = Sources.parquet(spark, s"$pDir/postings").count()
     val tPQueryC = math.min(
       timed(noop(Retrieval.queryPostingsLifecycleState(spark, pDir))),
       timed(noop(Retrieval.queryPostingsLifecycleState(spark, pDir))))
@@ -231,7 +232,7 @@ object IncBench {
     // Fan-out evidence: the merge-CC output must track the batch (each
     // batch doc + its source's label), never the corpus beyond that.
     val mergedRows = Incremental
-      .mergeGraph(spark, labels, bands, sh, newIds, newSh).count()
+      .mergeGraph(spark, labels, bands, sh, newSh).count()
     def ingest = Incremental.ingestDupGroups(spark, labels, bands, sh, newIds, newSh)
     val tIngest = marginal(ingest)
     val ingestRows = ingest.count()

@@ -1,10 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.Sources
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
-  * One parquet file per table under an sf directory. Reads are plain
-  * `spark.read.parquet` so Catalyst keeps full pushdown/pruning freedom.
+  * One parquet file per table under an sf directory. Tables open
+  * through [[Sources.parquet]] (footer schema read on the driver, no
+  * Spark job); Catalyst keeps full pushdown/pruning freedom.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -12,7 +14,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.parquet(spark, s"$dir/$name.parquet")
 
   /** Spread a per-row-HEAVY pass (explode / regex / digest over every
     * row) across the session's parallelism when the input scan has

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** The one list of graft's native Catalyst expressions: SQL name,
@@ -29,11 +30,14 @@ object Natives {
     Seq(TopKByScore, TopKByLongScore, TopKTerms, MinKLong, MinKPairs).map(r =>
       Native(r.name, classOf[KBest], e => KBest(r, e(0), ExprArgs.int(e(1)))))
 
-  /** Registers the entry named `name` on the session. Idempotent. */
+  /** Registers the entry named `name` on the session, once: a name the
+    * session's registry already holds (an earlier call, or
+    * [[graft.GraftExtensions]]) is left as it is. */
   def register(spark: SparkSession, name: String): Unit = {
     val n = all.find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"no native function $name"))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      n.name, n.build, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(n.name)))
+      registry.createOrReplaceTempFunction(n.name, n.build, "built-in")
   }
 }

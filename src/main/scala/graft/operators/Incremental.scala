@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.sources.StateDir
+import graft.sources.{Sources, StateDir}
 
 /** Incremental corpus ingestion — the operation a 100 TB pipeline runs
   * DAILY: a new document batch arrives and must join the existing dedup
@@ -67,7 +67,7 @@ object Incremental {
                       oldBands: DataFrame, oldSh: DataFrame,
                       newIds: DataFrame, newSh: DataFrame,
                       threshold: Double = 0.5): DataFrame =
-    relabeled(mergeGraph(s, oldLabels, oldBands, oldSh, newIds, newSh, threshold),
+    relabeled(mergeGraph(s, oldLabels, oldBands, oldSh, newSh, threshold),
       oldLabels, newIds)
 
   /** The LABEL DELTA of an ingest — what a production pipeline actually
@@ -85,7 +85,7 @@ object Incremental {
                            oldBands: DataFrame, oldSh: DataFrame,
                            newIds: DataFrame, newSh: DataFrame,
                            threshold: Double = 0.5): DataFrame =
-    relabeled(mergeGraph(s, oldLabels, oldBands, oldSh, newIds, newSh, threshold)
+    relabeled(mergeGraph(s, oldLabels, oldBands, oldSh, newSh, threshold)
       .filter(col("nl") =!= col("id")), oldLabels, newIds, allOld = false)
 
   /** The merged labelling (id, nl) of a batch's touched graph: the band
@@ -98,7 +98,7 @@ object Incremental {
     * real frame). */
   private[graft] def mergeGraph(s: SparkSession, oldLabels: DataFrame,
                                 oldBands: DataFrame, oldSh: DataFrame,
-                                newIds: DataFrame, newSh: DataFrame,
+                                newSh: DataFrame,
                                 threshold: Double = 0.5): DataFrame =
     edgeCC(lifted(batchPairs(s, oldBands, oldSh, newSh, threshold), oldLabels))
 
@@ -425,7 +425,10 @@ object Incremental {
   def deleteGroupStateStep(s: SparkSession, labels: DataFrame,
                            labeledPairs: DataFrame,
                            deleted: DataFrame): (DataFrame, DataFrame) = {
-    val sp = touchedSplit(labels, labeledPairs, deleted.select("id"))
+    // Cut the surviving subgraph once: edgeCC and the pair update below
+    // both read it, and edgeCC's own cut of a cut frame is free.
+    val sp0 = touchedSplit(labels, labeledPairs, deleted.select("id"))
+    val sp = sp0.copy(subEdges = graft.Checkpoints.cut(sp0.subEdges))
     val newLabels = graft.Checkpoints.cut(splitLabels(sp))
     (newLabels, labeledPairs.join(sp.touched, Seq("lbl"), "left_anti")
       .unionByName(sp.subEdges.join(newLabels.toDF("id_a", "lbl"), "id_a")))
@@ -581,7 +584,7 @@ object Incremental {
     * lazily reading. */
   def deleteFromIndexState(s: SparkSession, dir: String,
                            deletedIds: DataFrame): Seq[Int] = {
-    val index = s.read.parquet(s"$dir/index")
+    val index = Sources.parquet(s, s"$dir/index")
     val del = deletedIds.toDF("c_id")
     val touched = index.join(del, "c_id").select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq // bounded by KmeansCells (16)
@@ -607,7 +610,7 @@ object Incremental {
   def appendToIndexState(s: SparkSession, dir: String,
                          batch: DataFrame): Unit =
     Similarity.e05IndexFrom(s, batch,
-        s.read.parquet(s"$dir/centroids"), s.read.parquet(s"$dir/codebooks"))
+        Sources.parquet(s, s"$dir/centroids"), Sources.parquet(s, s"$dir/codebooks"))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/index")
 
   /** COMPACTION of a persisted cell-partitioned IVF×PQ index: per
@@ -632,7 +635,7 @@ object Incremental {
     cells.map { c =>
       val cellPath = s"$dir/index/cell=$c"
       val before = Retrieval.partFileCount(s, cellPath)
-      val rows = graft.Checkpoints.cut(s.read.parquet(cellPath))
+      val rows = graft.Checkpoints.cut(Sources.parquet(s, cellPath))
       val n = Retrieval.packFileCount(s,
         Retrieval.dirBytes(s, cellPath), targetBytes)
       rows.coalesce(n).write.mode("overwrite").parquet(cellPath)

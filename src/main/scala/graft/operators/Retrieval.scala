@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.functions.Text
-import graft.sources.StateDir
+import graft.sources.{Sources, StateDir}
 
 /** Lexical retrieval (SURVEY §2 e09): inverted-index BM25 top-k — the
   * keyword sibling of the ANN ladder (e01–e08). Every retrieval/curation
@@ -550,7 +550,7 @@ object Retrieval {
   /** The production append: O(batch) new segment files, one meta bump. */
   def appendPostingsLifecycleState(s: SparkSession, dir: String,
                                    batch: DataFrame): Unit = {
-    val seg = s.read.parquet(s"$dir/meta").head().getAs[Int]("cur_seg") + 1
+    val seg = Sources.parquet(s, s"$dir/meta").head().getAs[Int]("cur_seg") + 1
     stamped(seg, postings(s, batch)).write.mode("append").parquet(s"$dir/postings")
     stamped(seg, doclensOf(batch)).write.mode("append").parquet(s"$dir/doclens")
     metaOf(s, seg).write.mode("overwrite").parquet(s"$dir/meta")
@@ -560,7 +560,7 @@ object Retrieval {
     * postings IO. */
   def deletePostingsLifecycleState(s: SparkSession, dir: String,
                                    deletedIds: DataFrame): Unit = {
-    val seg = s.read.parquet(s"$dir/meta").head().getAs[Int]("cur_seg")
+    val seg = Sources.parquet(s, s"$dir/meta").head().getAs[Int]("cur_seg")
     deletedIds.select(col("doc_id"), lit(seg).as("killed_at_seg"))
       .write.mode("append").parquet(s"$dir/tombs")
   }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.types.StructType
 
 /** Readers (SURVEY §2.G) — the reference's extract step reads ragged-key
@@ -22,9 +23,15 @@ object Sources {
   def json(s: SparkSession, path: String, schema: StructType): DataFrame =
     s.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
-  /** Parquet (schema comes from the footer; pushdown/pruning free). */
+  /** Parquet, the one way a table is opened: the schema comes from one
+    * data file's footer, read on the driver (no Spark job; partition
+    * columns still come from Spark's partition discovery), and is handed
+    * to the reader, so the frame is exactly what inference would give.
+    * Whatever that read does not cover (no data files, summary files,
+    * schema merging on) takes Spark's own inference, job and errors. */
   def parquet(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    GraftParquetFooter.dataSchema(s, path)
+      .fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
 
   /** ORC (columnar like parquet: self-describing schema, predicate
     * pushdown and column pruning at the stripe level). */
@@ -161,8 +168,8 @@ object Sinks {
           val cond = if (nonNull.length == touched.length)
             col(pc).isin(nonNull.toIndexedSeq: _*)
           else col(pc).isin(nonNull.toIndexedSeq: _*) || col(pc).isNull
-          s.read.parquet(path).filter(cond)
-        case None => s.read.parquet(path)
+          Sources.parquet(s, path).filter(cond)
+        case None => Sources.parquet(s, path)
       }
       val kept = existing.join(delta.select(keys.map(col): _*).distinct(),
         keys, "left_anti")
@@ -170,7 +177,7 @@ object Sinks {
       partitionCol match {
         case Some(pc) =>
           // swap only the rewritten partition directories
-          val staging = StateDir.stagingOf(fs, target)
+          val staging = StateDir.stagingOf(target)
           write(merged, staging.toString)
           for (st <- fs.listStatus(staging) if st.isDirectory &&
               st.getPath.getName.startsWith(s"$pc=")) {
@@ -178,7 +185,7 @@ object Sinks {
             StateDir.delete(fs, dest)
             StateDir.rename(fs, st.getPath, dest)
           }
-          StateDir.delete(fs, staging)
+          StateDir.sweep(fs, target)
         case None => StateDir.staged(s, path)(write(merged, _))
       }
     } finally delta.unpersist()

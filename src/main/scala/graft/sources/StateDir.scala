@@ -6,14 +6,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Persisted-state table sets, the incremental form of the reference's
   * full-replace load (challenge.py:311-325). A set is a directory with
   * one parquet table per name (`dir/<name>/`), written by [[publish]]
-  * and read by [[read]]. [[publish]] writes every table under the hidden
-  * sibling `.<name>.staging` (Spark's listing skips dot-names) and makes
-  * the set visible with one rename; an existing set is first moved aside
-  * to `.<name>.old-<stamp>` and deleted once the new one is in. A failed
-  * write leaves `dir` as it was, and the next publish deletes the stale
-  * staging dir. Hadoop's rename and delete report failure by RETURNING
-  * FALSE (HDFS and S3A do not throw), so state is renamed and deleted
-  * only through the checked [[rename]] and [[delete]].
+  * and read by [[read]]. [[publish]] writes every table under a hidden
+  * sibling `.<name>.staging-<stamp>` of its own (Spark's listing skips
+  * dot-names) and makes the set visible with one rename; an existing set
+  * is first moved aside to `.<name>.old-<stamp>` and deleted once the
+  * new one is in. A failed write leaves `dir` as it was; its staging dir
+  * is never reused (the failed job's cancelled tasks may still be
+  * writing there) and the next successful publish sweeps it. Hadoop's
+  * rename and delete report failure by RETURNING FALSE (HDFS and S3A do
+  * not throw), so state is renamed and deleted only through the checked
+  * [[rename]] and [[delete]].
   */
 object StateDir {
 
@@ -30,7 +32,7 @@ object StateDir {
 
   /** The named tables of the set at `dir`, in the order asked. */
   def read(s: SparkSession, dir: String, names: String*): Seq[DataFrame] =
-    names.map(n => s.read.parquet(s"$dir/$n"))
+    names.map(n => Sources.parquet(s, s"$dir/$n"))
 
   /** The newest published version k of a version root holding `v<k>`
     * sets (staging and old dirs are dot-names, never matched). */
@@ -48,7 +50,7 @@ object StateDir {
       write: String => Unit): Unit = {
     val fs = fsOf(s, new Path(dir))
     val target = fs.makeQualified(new Path(dir))
-    val staging = stagingOf(fs, target)
+    val staging = stagingOf(target)
     write(staging.toString)
     if (fs.exists(target)) {
       val old = new Path(target.getParent,
@@ -57,14 +59,25 @@ object StateDir {
       rename(fs, staging, target)
       delete(fs, old)
     } else rename(fs, staging, target)
+    sweep(fs, target)
   }
 
-  /** The hidden staging sibling of `target`, emptied of any residue a
-    * killed run left. */
-  private[sources] def stagingOf(fs: FileSystem, target: Path): Path = {
-    val staging = new Path(target.getParent, s".${target.getName}.staging")
-    delete(fs, staging)
-    staging
+  /** A fresh hidden staging sibling of `target`, unique to this attempt. */
+  private[sources] def stagingOf(target: Path): Path =
+    new Path(target.getParent, s".${target.getName}.staging-${System.nanoTime()}")
+
+  /** Best-effort removal of the staging siblings earlier attempts left:
+    * readers never see them, so a delete that fails (a killed attempt's
+    * task still writing) is logged and left for the next publish. */
+  private[sources] def sweep(fs: FileSystem, target: Path): Unit = {
+    val prefix = s".${target.getName}.staging"
+    for (st <- fs.listStatus(target.getParent)
+         if st.getPath.getName.startsWith(prefix)) {
+      try delete(fs, st.getPath)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[state] left stale ${st.getPath}: ${e.getMessage}")
+      }
+    }
   }
 
   private[sources] def fsOf(s: SparkSession, p: Path): FileSystem =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
-import graft.sources.StateDir
+import graft.sources.{Sources, StateDir}
 
 /** Event with both exact-µs long and the event-time timestamp column
   * Structured Streaming needs for watermarks. */
@@ -437,7 +437,8 @@ object StreamOps {
     }
     def register(p: Path): Path = { p.toFile.deleteOnExit(); p }
     val srcFile = Paths.get(d, "events.parquet").toAbsolutePath
-    val rawSchema = s.read.parquet(srcFile.toString).schema
+    val raw = Sources.parquet(s, srcFile.toString)
+    val rawSchema = raw.schema
     val tsType = rawSchema("ts").dataType
     val dir = tempDir("graft_evsrc_")
     // Staging-dir cleanup shared by slice/sentinel writers.
@@ -458,7 +459,7 @@ object StreamOps {
     val (nReal, realMtimeCeil) =
       if (timeSplits > 1) {
         // Event-time range slices, one file per ascending mtime group.
-        val norm = graft.Tables.normalizeEventTs(s.read.parquet(srcFile.toString))
+        val norm = graft.Tables.normalizeEventTs(raw)
         val b = norm.agg(min(expr("ts_ns DIV 1000")).as("mn"),
           max(expr("ts_ns DIV 1000")).as("mx")).head()
         val (mn, mx) = (b.getAs[Long]("mn"), b.getAs[Long]("mx"))
@@ -704,8 +705,8 @@ object StreamOps {
           val Seq(labels, pairs) =
             StateDir.read(s, s"$stateRoot/v$v", "labels", "pairs")
           val (nl, np) = Incremental.deleteGroupStateStep(s, labels, pairs, del)
-          // A crash mid-write leaves only the hidden .v{n+1}.staging dir
-          // (cleared by the next attempt), never a half-published version
+          // A crash mid-write leaves only a hidden .v{n+1}.staging-<stamp>
+          // dir (swept by a later publish), never a half-published version
           // the restarted drain would wedge on.
           StateDir.publish(s"$stateRoot/v${v + 1}",
             Seq("labels" -> nl, "pairs" -> np))

@@ -103,4 +103,19 @@ class ExtensionsSpec extends SparkSpecBase {
       SparkSession.setDefaultSession(prev)
     }
   }
+
+  test("a second register leaves the registered function untouched") {
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingles")
+    val registry = spark.sessionState.functionRegistry
+    Natives.register(spark, "graft_shingles")
+    val (info, builder) = (registry.lookupFunction(id), registry.lookupFunctionBuilder(id))
+    assert(info.isDefined && builder.isDefined)
+    Natives.register(spark, "graft_shingles")
+    // A replace stores a fresh ExpressionInfo even for the same builder.
+    assert(registry.lookupFunction(id).exists(_ eq info.get) &&
+      registry.lookupFunctionBuilder(id).exists(_ eq builder.get),
+      "the second register replaced the function")
+    assert(spark.sql("SELECT graft_shingles('a b c d', 3) AS sh")
+      .collect()(0).getSeq[String](0) == Seq("a b c", "b c d"))
+  }
 }

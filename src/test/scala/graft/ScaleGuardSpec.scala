@@ -121,7 +121,7 @@ class ScaleGuardSpec extends SparkSpecBase {
     val newIds = batch.select(col("doc_id").as("id"))
     val newSh = Dedup.shingledDocs(spark, batch)
     val merged = Incremental.mergeGraph(spark, baseLabels, baseBands,
-      baseSh, newIds, newSh)
+      baseSh, newSh)
     val n = merged.count()
     assert(n <= 8, s"merge-CC output must be edge-incident-bounded, got $n " +
       s"rows for a ${batch.count()}-doc batch")

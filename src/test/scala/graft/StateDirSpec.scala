@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.Incremental
 import graft.sources.StateDir
 
@@ -10,7 +13,7 @@ import graft.sources.StateDir
   * not at all. Fault injection throws while writing table j of n, over
   * a fresh dir and over an existing version; readers must still see the
   * previous version row-for-row, and a retry must equal a clean
-  * publish. */
+  * publish, staged in a dir of its own, with no staging dir left. */
 class StateDirSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -38,6 +41,33 @@ class StateDirSpec extends SparkSpecBase {
   private def rows(dir: String): Seq[Set[Row]] =
     StateDir.read(spark, dir, names: _*).map(_.collect().toSet)
 
+  /** The dirs holding the output of each of the `writes` parquet writes
+    * `body` runs, failed writes included. */
+  private def stagingOfWrites(writes: Int)(body: => Unit): Set[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit = qe.logical.foreach {
+        case c: InsertIntoHadoopFsRelationCommand =>
+          seen.add(c.outputPath.getParent.getName)
+        case _ =>
+      }
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      val deadline = System.currentTimeMillis() + 20000
+      while (seen.size < writes && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(seen.size == writes, s"saw ${seen.size} of $writes writes")
+    } finally spark.listenerManager.unregister(l)
+    seen.toArray.map(_.toString).toSet
+  }
+
+  private def stagingLeft(root: String, name: String): Seq[String] =
+    Files.list(Paths.get(root)).toArray.map(_.toString.split('/').last)
+      .filter(_.startsWith(s".$name.staging")).toSeq
+
   test("publish failing at table j of 4 leaves version k readable; a retry equals a clean publish") {
     val root = tempDir("graft-statedir").toString
     StateDir.publish(s"$root/clean1", tables(1), parts)
@@ -47,11 +77,16 @@ class StateDirSpec extends SparkSpecBase {
     assert(v1 != v2 && v1.forall(_.nonEmpty))
     for (j <- 1 to 4) {
       val fresh = s"$root/fresh$j"
-      val e1 = intercept[Exception](StateDir.publish(fresh, tables(1, j), parts))
-      assert(injected(e1), s"table $j: the write's own exception propagates")
+      val failedIn = stagingOfWrites(j) {
+        val e1 = intercept[Exception](StateDir.publish(fresh, tables(1, j), parts))
+        assert(injected(e1), s"table $j: the write's own exception propagates")
+      }
       assert(!Files.exists(Paths.get(fresh)), s"table $j: nothing published")
-      StateDir.publish(fresh, tables(1), parts)
+      val retriedIn = stagingOfWrites(names.size)(StateDir.publish(fresh, tables(1), parts))
+      assert(failedIn.size == 1 && retriedIn.size == 1 && failedIn != retriedIn,
+        s"table $j: the retry staged in $retriedIn, the failed attempt in $failedIn")
       assert(rows(fresh) == v1)
+      assert(stagingLeft(root, s"fresh$j").isEmpty, s"table $j: staging dirs left")
 
       val existing = s"$root/existing$j"
       StateDir.publish(existing, tables(1), parts)
@@ -60,6 +95,7 @@ class StateDirSpec extends SparkSpecBase {
       assert(rows(existing) == v1, s"table $j: version k still whole")
       StateDir.publish(existing, tables(2), parts)
       assert(rows(existing) == v2)
+      assert(stagingLeft(root, s"existing$j").isEmpty, s"table $j: staging dirs left")
     }
     val residue = Files.list(Paths.get(root)).toArray.map(_.toString)
       .filter(_.split('/').last.startsWith("."))
