@@ -153,14 +153,12 @@ object Bench {
     val failures = results.collect { case (k, None) => "\"" + k + "\"" }
     val total = results.flatMap(_._2).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"plan_fp":$fpJson,"failures":${failures.mkString("[", ",", "]")},"sf":"$sfDir"}"""
-    // s05 drain shape: micro-batch count of the last drain (deterministic
-    // under maxFilesPerTrigger=1; BENCH.md records it per SF).
-    val s05b = graft.streaming.StreamOps.lastS05MicroBatches.get
-    if (s05b >= 0) System.err.println(s"[bench] s05 micro-batches: $s05b")
-    val s08b = graft.streaming.StreamOps.lastS08MicroBatches.get
-    if (s08b >= 0) System.err.println(s"[bench] s08 micro-batches: $s08b")
-    val s09b = graft.streaming.StreamOps.lastS09MicroBatches.get
-    if (s09b >= 0) System.err.println(s"[bench] s09 micro-batches: $s09b")
+    // Each streaming key's last drain: micro-batches and the summed
+    // durationMs of each progress phase.
+    graft.streaming.StreamOps.lastDrain.toSeq.sortBy(_._1).foreach { case (k, r) =>
+      System.err.println(s"[bench] $k drain: batches=${r.batches} " +
+        r.phaseMs.toSeq.sortBy(_._1).map { case (p, ms) => s"$p=${ms}ms" }.mkString(" "))
+    }
     println(line)
     if (keyArgs.isEmpty) writeArtifact(line)
     spark.stop()

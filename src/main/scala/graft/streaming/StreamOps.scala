@@ -1,9 +1,12 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.LongType
 import graft.operators.EventOps
 import graft.sources.{Sources, StateDir}
 
@@ -72,35 +75,54 @@ object StreamOps {
     * (StreamNearDupSpec). The memory sink holds only verified pairs
     * (corpus-sparse); the blocking drain is the gate harness — a
     * production deployment keeps the query running. */
-  def s05StreamNearDup(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
+  def s05StreamNearDup(s: SparkSession, d: String): DataFrame = {
     // maxFilesPerTrigger=1 pins the micro-batch count to the source's
-    // FILE count (1 data batch per file + the final empty batch), so the
-    // drain cost is deterministic run to run — round 9 measured 6.18 vs
-    // 9.68 s for the same code when batch scheduling was left to the
-    // source's default chunking. The observed count is recorded in
-    // [[lastS05MicroBatches]] for BENCH.md.
-    val src = s.readStream.schema(schema)
+    // FILE count (one batch per file; a no-timeout state op runs no
+    // trailing empty batch), so the drain cost is deterministic run to
+    // run — round 9 measured 6.18 vs 9.68 s for the same code when batch
+    // scheduling was left to the source's default chunking. The observed
+    // count is in [[lastDrain]].
+    val src = s.readStream.schema("doc_id BIGINT, text STRING")
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1").parquet(d)
-    val name = "s05_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = nearDupStream(src).writeStream.format("memory")
-      .queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    lastS05MicroBatches.set(
-      Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L))
-    s.table(name).select(col("id_a"), col("id_b"), col("jaccard")).distinct()
+    drainToMemory("s05_stream_neardup", nearDupStream(src))
+      .select(col("id_a"), col("id_b"), col("jaccard")).distinct()
   }
 
-  /** Micro-batch count of the most recent [[s05StreamNearDup]] drain
-    * (batchId of the last progress + 1). Deterministic given the source
-    * file layout under maxFilesPerTrigger=1; Bench logs it so BENCH.md
-    * can record the per-SF count alongside the timing. */
-  val lastS05MicroBatches = new java.util.concurrent.atomic.AtomicLong(-1L)
+  /** What the last drain of a streaming key did: its micro-batch count
+    * (`lastProgress.batchId + 1`), the summed `durationMs` of each
+    * progress phase (`addBatch`, `queryPlanning`, `walCommit`, …) over
+    * the drain's `recentProgress`, and the event-time cuts (µs) of its
+    * source's slices (empty unless the source is time-sliced). */
+  final case class Drain(batches: Long, phaseMs: Map[String, Long], cutsUs: Seq[Long])
+
+  /** The [[Drain]] of the most recent run of each streaming key, by key
+    * name. Bench prints it; the drain specs read it. */
+  val lastDrain = scala.collection.concurrent.TrieMap.empty[String, Drain]
+
+  /** The one bounded drain every streaming key runs: start `w`, process
+    * everything available, stop, and record the [[Drain]] under `key`. */
+  private def drain(key: String, w: DataStreamWriter[_], cutsUs: Seq[Long] = Nil): Unit = {
+    val q = w.start()
+    try q.processAllAvailable() finally q.stop()
+    lastDrain(key) = Drain(Option(q.lastProgress).fold(0L)(_.batchId + 1),
+      q.recentProgress.toSeq.flatMap(_.durationMs.asScala)
+        .groupMapReduce(_._1)(_._2.longValue)(_ + _), cutsUs)
+  }
+
+  /** [[drain]] `out` into a memory sink and return the sink's rows. The
+    * sink's temp view is dropped once the frame is built (also when the
+    * drain fails): the frame holds the sink itself, so the rows live
+    * exactly as long as the frame does, not as long as the session. */
+  private def drainToMemory(key: String, out: Dataset[_],
+                            cutsUs: Seq[Long] = Nil): DataFrame = {
+    val s = out.sparkSession
+    val name = key.take(3) + "_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try {
+      drain(key, out.writeStream.format("memory").queryName(name).outputMode("append"), cutsUs)
+      s.table(name)
+    } finally s.catalog.dropTempView(name)
+  }
 
   /** STREAMING banded near-dup — d03's MinHash-LSH dedup as documents
     * ARRIVE: each doc's 4 band signatures key it into stateful buckets
@@ -290,8 +312,8 @@ object StreamOps {
     * within one micro-batch is the operator's real bound, the same
     * hazard s02's bucketed batch form defends against across a whole
     * history). */
-  def s06StreamSessionize(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    sessionizeDrain(s, d, timeSplits = 1)
+  def s06StreamSessionize(s: SparkSession, d: String): DataFrame =
+    sessionizeDrain(s, d, "s06_stream_sessionize", timeSplits = 1)
 
   /** s08: the s06 sessionization drain with the corpus split across
     * THREE event-time-ordered micro-batches (plus two sentinel batches)
@@ -300,17 +322,10 @@ object StreamOps {
     * flatMapGroupsWithState STATE across real micro-batch boundaries,
     * watermark advancement between data batches is exercised on real
     * data, and the emitted set still hash-gates against batch s02's
-    * oracle verbatim. [[lastS08MicroBatches]] records the drain's batch
-    * count (≥ 5) for BENCH.md. */
-  def s08StreamSessionizeMB(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    sessionizeDrain(s, d, timeSplits = 3)
-
-  /** Micro-batch count of the most recent [[s08StreamSessionizeMB]]
-    * drain (batchId of the last progress + 1). */
-  val lastS08MicroBatches = new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Micro-batch count of the most recent [[s09StreamWindowAgg]] drain. */
-  val lastS09MicroBatches = new java.util.concurrent.atomic.AtomicLong(-1L)
+    * oracle verbatim. Its [[lastDrain]] record holds the batch count
+    * (≥ 5) and the cuts. */
+  def s08StreamSessionizeMB(s: SparkSession, d: String): DataFrame =
+    sessionizeDrain(s, d, "s08_stream_multibatch", timeSplits = 3)
 
   /** s09: the canonical WATERMARKED STREAMING AGGREGATION — s01's
     * tumbling-window count/exact-decimal-sum (the SHARED
@@ -334,57 +349,50 @@ object StreamOps {
     * state is bounded by arrival disorder, not stream length; sums
     * accumulate in the same DECIMAL(18,2) the batch plan uses (bit-equal
     * results regardless of how events split across batches). */
-  def s09StreamWindowAgg(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val maxUs = graft.Tables.eventsWithTs(s, d)
-      .agg(max(expr("ts_ns DIV 1000"))).head().getLong(0)
-    // First sentinel 90 min past the corpus max: strictly beyond the
-    // last real 1-hour window's end, so the final watermark closes it.
-    val t1 = maxUs + EventOps.GapUs + 3600000000L
-    val src = eventsStreamSource(s, d, sentinelUs = Seq(t1, t1 + 60000000L),
-      timeSplits = 3)
-    val ev = graft.Tables.normalizeEventTs(src)
-      .select(col("ts"), col("event_type"), col("value"))
-    val name = "s09_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = EventOps.windowAgg(ev.withWatermark("ts", "0 seconds"))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    lastS09MicroBatches.set(
-      Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L))
-    s.table(name).filter(col("event_type") =!= "sentinel")
-  }
+  def s09StreamWindowAgg(s: SparkSession, d: String): DataFrame =
+    eventsDrain(s, d, "s09_stream_window", sentinels = true, timeSplits = 3) { events =>
+      EventOps.windowAgg(graft.Tables.normalizeEventTs(events())
+        .select(col("ts"), col("event_type"), col("value"))
+        .withWatermark("ts", "0 seconds"))
+    }.filter(col("event_type") =!= "sentinel")
 
-  /** The event-time cut points (µs) of the most recent time-split
-    * source build — exposed so specs can independently verify that
-    * sessions straddle every micro-batch boundary. */
-  val lastSplitCutsUs =
-    new java.util.concurrent.atomic.AtomicReference[Seq[Long]](Seq.empty)
-
-  private def sessionizeDrain(s: org.apache.spark.sql.SparkSession, d: String,
+  private def sessionizeDrain(s: SparkSession, d: String, key: String,
                               timeSplits: Int): DataFrame = {
     import s.implicits._
-    val maxUs = graft.Tables.eventsWithTs(s, d)
-      .agg(max(expr("ts_ns DIV 1000"))).head().getLong(0)
-    val t1 = maxUs + EventOps.GapUs + 3600000000L
-    val src = eventsStreamSource(s, d, sentinelUs = Seq(t1, t1 + 60000000L),
-      timeSplits = timeSplits)
-    val ev = graft.Tables.normalizeEventTs(src)
-      .select(col("user_id"), col("event_id"),
-        expr("ts_ns DIV 1000").as("ts_us"), col("value"), col("ts"))
-      .as[SessEvent]
-    val name = s"s0${if (timeSplits > 1) 8 else 6}_sink_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = sessionizeStream(ev).writeStream.format("memory")
-      .queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    if (timeSplits > 1) lastS08MicroBatches.set(
-      Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L))
-    s.table(name).filter(col("user_id") >= 0)
+    eventsDrain(s, d, key, sentinels = true, timeSplits) { events =>
+      sessionizeStream(graft.Tables.normalizeEventTs(events())
+        .select(col("user_id"), col("event_id"),
+          expr("ts_ns DIV 1000").as("ts_us"), col("value"), col("ts"))
+        .as[SessEvent])
+    }.filter(col("user_id") >= 0)
       .select(col("user_id"), col("sess_no"), col("n_events"),
         col("start_us"), col("end_us"), col("sum_value"))
   }
 
-  /** Bounded file-stream source over the events table, shared by the
-    * gated drains (s06/s07).
+  /** [[drainToMemory]] over the bounded events source of `d`
+    * ([[eventsSource]]), built in ONE scratch dir that is deleted when
+    * the drain ends: the memory sink holds the result rows, so nothing
+    * reads the files once the query stops. `query` gets the source's
+    * reader, one stream per call (s07's two sides read the same dir). */
+  private def eventsDrain(s: SparkSession, d: String, key: String, sentinels: Boolean,
+      timeSplits: Int = 1)(query: (() => DataFrame) => Dataset[_]): DataFrame = {
+    val dir = Files.createTempDirectory("graft_evsrc_")
+    try {
+      val (events, cuts) = eventsSource(s, d, dir, sentinels, timeSplits)
+      drainToMemory(key, query(events), cuts)
+    } finally rmTree(dir)
+  }
+
+  /** Delete `p` and everything under it; a symlink is removed, never
+    * followed, and a failed delete throws. */
+  private def rmTree(p: Path): Unit =
+    scala.util.Using.resource(Files.walk(p)) { paths =>
+      paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    }
+
+  /** Bounded file-stream source over the events table of `d`, built in
+    * `dir` and shared by the gated drains (s06-s09); returns its reader
+    * and the event-time cuts of its slices.
     *
     * Layout-proofing: the corpus MUST arrive as ONE micro-batch (a
     * 0-second watermark would drop cross-batch out-of-order events).
@@ -397,11 +405,10 @@ object StreamOps {
     * for any layout (real parts are strictly older than the sentinels,
     * so the oldest-first trigger takes them all first).
     *
-    * `sentinelUs` adds one watermark-advance micro-batch per element
-    * (one-row files for throwaway user_id = −1 at the given event-time
-    * µs) — stateful drains needing timeout flushes pass two ascending
-    * values; pure inner-join drains pass none. Callers filter
-    * user_id >= 0.
+    * `sentinels` adds two watermark-advance micro-batches (one-row
+    * files for throwaway user_id = −1, event_type 'sentinel', past the
+    * corpus max) — stateful drains need them for timeout flushes; pure
+    * inner-join drains do not. Callers filter the sentinel rows out.
     *
     * `timeSplits > 1` switches to the MULTI-micro-batch layout (s08's
     * gate): the corpus is cut into that many EVENT-TIME range slices,
@@ -413,56 +420,23 @@ object StreamOps {
     * the watermark (computed from the PREVIOUS batch's max) never
     * classifies an arriving row as late — the one-batch constraint the
     * default layout exists for is replaced by an ordering guarantee. */
-  private def eventsStreamSource(s: org.apache.spark.sql.SparkSession,
-      d: String, sentinelUs: Seq[Long], timeSplits: Int = 1): DataFrame = {
-    import java.nio.file.{Files, Path, Paths}
-    // Files.list streams hold an open directory handle until closed —
-    // materialize-then-close, or repeated drains in a long-lived driver
-    // leak fds.
-    def listParquet(p: Path): Seq[Path] = {
-      val st = Files.list(p)
-      try st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet")).toList
-      finally st.close()
-    }
-    // Temp dirs are per-invocation (the source must keep reading them
-    // for the drain's lifetime, so they can't be deleted here);
-    // deleteOnExit bounds the leak to one JVM run — files registered
-    // after their dir, so JVM-exit deletion (reverse order) empties
-    // each dir before removing it.
-    def tempDir(prefix: String): Path = {
-      val p = Files.createTempDirectory(prefix)
-      p.toFile.deleteOnExit()
-      p
-    }
-    def register(p: Path): Path = { p.toFile.deleteOnExit(); p }
+  private def eventsSource(s: SparkSession, d: String, dir: Path,
+      sentinels: Boolean, timeSplits: Int): (() => DataFrame, Seq[Long]) = {
     val srcFile = Paths.get(d, "events.parquet").toAbsolutePath
     val raw = Sources.parquet(s, srcFile.toString)
     val rawSchema = raw.schema
     val tsType = rawSchema("ts").dataType
-    val dir = tempDir("graft_evsrc_")
-    // Staging-dir cleanup shared by slice/sentinel writers.
-    def rmTreeOf(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val st = Files.list(p)
-        try st.iterator().asScala.toList.foreach(rmTreeOf) finally st.close()
-      }
-      Files.deleteIfExists(p); ()
-    }
-    def stamped(src: Path, dst: Path, ms: Long): Unit = {
-      Files.copy(src, register(dst))
-      // A silently-failed mtime write would collapse the batch ordering
-      // the drains depend on — fail loudly instead.
-      require(dst.toFile.setLastModified(ms), s"setLastModified failed for $dst")
+    val norm = graft.Tables.normalizeEventTs(raw)
+    val us = expr("ts_ns DIV 1000")
+    // One bounds aggregate feeds both the slice cuts and the sentinels.
+    lazy val (mn, mx) = {
+      val b = norm.agg(min(us), max(us)).head()
+      (b.getLong(0), b.getLong(1))
     }
     val nowMs = System.currentTimeMillis()
-    val (nReal, realMtimeCeil) =
+    val (cuts, nReal, realMtimeCeil) =
       if (timeSplits > 1) {
         // Event-time range slices, one file per ascending mtime group.
-        val norm = graft.Tables.normalizeEventTs(raw)
-        val b = norm.agg(min(expr("ts_ns DIV 1000")).as("mn"),
-          max(expr("ts_ns DIV 1000")).as("mx")).head()
-        val (mn, mx) = (b.getAs[Long]("mn"), b.getAs[Long]("mx"))
         val targets = (1 until timeSplits).map(k => mn + (mx - mn) * k / timeSplits)
         // Session-AWARE cuts: a naive range cut rarely lands inside a
         // session (measured: 0 straddling sessions at sf0.01, 3 at sf1),
@@ -486,8 +460,7 @@ object StreamOps {
           .partitionBy("user_id").orderBy(col("us"), col("event_id"))
         val hourUs = 3600000000L
         val mids = norm
-          .select(col("user_id"), col("event_id"),
-            expr("ts_ns DIV 1000").as("us"))
+          .select(col("user_id"), col("event_id"), us.as("us"))
           .withColumn("prev", lag("us", 1).over(uw))
           .filter(col("prev").isNotNull && col("us") > col("prev") &&
             col("us") - col("prev") <= lit(EventOps.GapUs))
@@ -503,73 +476,83 @@ object StreamOps {
           val p = picked.getStruct(i)
           if (p == null) targets(i) else p.getAs[Long]("mid")
         }.distinct.sorted
-        lastSplitCutsUs.set(cuts)
-        val bounds = (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue)
-        val rawCols = rawSchema.fieldNames.map {
+        val rawCols = rawSchema.fieldNames.toSeq.map {
           case "ts" => (tsType match {
-            case org.apache.spark.sql.types.LongType => col("ts_ns") // legacy nanos
+            case LongType => col("ts_ns") // legacy nanos
             case t => col("ts").cast(t)
           }).as("ts")
           case c => col(c)
         }
-        bounds.zipWithIndex.foreach { case ((lo, hi), k) =>
-          val w = Files.createTempDirectory("graft_evsrc_s_")
-          norm.filter(expr("ts_ns DIV 1000") > lo && expr("ts_ns DIV 1000") <= hi)
-            .select(rawCols.toSeq: _*)
-            .coalesce(1).write.mode("overwrite").parquet(w.toString)
-          val part = listParquet(w).headOption.getOrElse(
-            sys.error(s"slice write produced no parquet part in $w"))
-          stamped(part, dir.resolve(s"slice_$k.parquet"), nowMs + 60000L * k)
-          rmTreeOf(w)
+        (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue).zipWithIndex.foreach {
+          case ((lo, hi), k) =>
+            writeFile(norm.filter(us > lo && us <= hi).select(rawCols: _*),
+              dir.resolve(s"slice_$k.parquet").toString, nowMs + 60000L * k)
         }
-        (1, nowMs + 60000L * cuts.size) // cuts may dedupe below timeSplits-1
+        (cuts, 1, nowMs + 60000L * cuts.size) // cuts may dedupe below timeSplits-1
       } else {
         val realParts =
           if (Files.isDirectory(srcFile)) {
-            val parts = listParquet(srcFile)
+            // Files.list holds a directory handle until closed.
+            val parts = scala.util.Using.resource(Files.list(srcFile))(
+              _.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList)
             parts.zipWithIndex.foreach { case (p, j) =>
-              register(Files.createSymbolicLink(dir.resolve(s"events_$j.parquet"), p)); ()
+              Files.createSymbolicLink(dir.resolve(s"events_$j.parquet"), p)
             }
             parts
           } else {
-            register(Files.createSymbolicLink(dir.resolve("events.parquet"), srcFile))
+            Files.createSymbolicLink(dir.resolve("events.parquet"), srcFile)
             Seq(srcFile)
           }
-        (realParts.size.max(1),
+        (Nil, realParts.size.max(1),
           (nowMs +: realParts.map(Files.getLastModifiedTime(_).toMillis)).max)
       }
-    def sentinelDf(us: Long, eid: Long): DataFrame = {
-      val cols = rawSchema.fields.map { f =>
+    def sentinel(tUs: Long, eid: Long): DataFrame =
+      s.range(1).select(rawSchema.fields.toSeq.map { f =>
         (f.name match {
           case "event_id"   => lit(eid)
           case "user_id"    => lit(-1L)
           case "event_type" => lit("sentinel")
           case "value"      => lit(0.0)
           case "ts" => tsType match {
-            case org.apache.spark.sql.types.LongType => lit(us * 1000L) // legacy nanos
-            case t => timestamp_micros(lit(us)).cast(t)
+            case LongType => lit(tUs * 1000L) // legacy nanos
+            case t => timestamp_micros(lit(tUs)).cast(t)
           }
           case _ => lit(null).cast(f.dataType)
         }).as(f.name)
+      }: _*)
+    if (sentinels) {
+      // First sentinel 90 min past the corpus max: strictly beyond the
+      // last real 1-hour window's end, so the final watermark closes it.
+      val t1 = mx + EventOps.GapUs + 3600000000L
+      Seq(t1, t1 + 60000000L).zipWithIndex.foreach { case (tUs, g) =>
+        val grp = g + 1
+        (0 until nReal).foreach { j =>
+          writeFile(sentinel(tUs, -grp.toLong),
+            dir.resolve(s"sentinel_${grp}_$j.parquet").toString, realMtimeCeil + 60000L * grp)
+        }
       }
-      s.range(1).select(cols.toSeq: _*)
     }
-    sentinelUs.zipWithIndex.foreach { case (us, g) =>
-      val grp = g + 1
-      val w = Files.createTempDirectory("graft_evsrc_w_")
-      sentinelDf(us, -grp.toLong).coalesce(1).write.mode("overwrite").parquet(w.toString)
-      val part = listParquet(w).headOption.getOrElse(
-        sys.error(s"sentinel write produced no parquet part in $w"))
-      (0 until nReal).foreach { j =>
-        stamped(part, dir.resolve(s"sentinel_${grp}_$j.parquet"),
-          realMtimeCeil + 60000L * grp)
-      }
-      // The staging dir is only needed until the copy; remove it now
-      // instead of accumulating one per drain.
-      rmTreeOf(w)
-    }
-    s.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", nReal.toString).parquet(dir.toString)
+    (() => s.readStream.schema(rawSchema)
+      .option("maxFilesPerTrigger", nReal.toString).parquet(dir.toString), cuts)
+  }
+
+  /** Write `df` as the ONE parquet file `dst` (a file-stream source lists
+    * its dir flat, so a part has to leave its write dir): a one-part
+    * write to the hidden scratch sibling `.<name>.tmp`, its part renamed
+    * to `dst` and stamped with mtime `mtimeMs` (−1 keeps the write's),
+    * the scratch removed. Rename and delete are the checked
+    * [[StateDir.rename]] and [[StateDir.delete]]; a failed mtime write
+    * throws, since it would collapse the batch order a drain relies on. */
+  private def writeFile(df: DataFrame, dst: String, mtimeMs: Long = -1L): Unit = {
+    val to = new HPath(dst)
+    val fs = to.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val scratch = new HPath(to.getParent, s".${to.getName}.tmp")
+    df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+    val part = fs.listStatus(scratch).map(_.getPath).find(_.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"write produced no parquet part in $scratch"))
+    StateDir.rename(fs, part, to)
+    fs.setTimes(to, mtimeMs, -1L)
+    StateDir.delete(fs, scratch)
   }
 
   /** Density-calibrated attribution window for s07, derived from the
@@ -581,7 +564,7 @@ object StreamOps {
     * window (≈ 4 × the purchase fraction) — and therefore the output
     * volume — O(events) at EVERY SF, where any fixed window is empty at
     * sparse SFs and quadratic at dense ones. */
-  def s07JoinWindowUs(s: org.apache.spark.sql.SparkSession, d: String): Long = {
+  def s07JoinWindowUs(s: SparkSession, d: String): Long = {
     val r = graft.Tables.eventsWithTs(s, d)
       .selectExpr("min(ts_ns DIV 1000) AS mn", "max(ts_ns DIV 1000) AS mx",
         "count(*) AS n", "count(DISTINCT user_id) AS u").head()
@@ -617,51 +600,40 @@ object StreamOps {
     * one watermark horizon × window, not history. The drain harness is
     * the gate shape (s05/s06's pattern); production keeps the query
     * running. */
-  def s07StreamJoin(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+  def s07StreamJoin(s: SparkSession, d: String): DataFrame = {
     val wUs = s07JoinWindowUs(s, d)
-    def side(evType: String, idAs: String, usAs: String, tsAs: String,
-             uAs: String): DataFrame =
-      graft.Tables.normalizeEventTs(eventsStreamSource(s, d, Seq.empty))
-        .filter(col("event_type") === evType)
-        .select(col("user_id").as(uAs), col("event_id").as(idAs),
-          expr("ts_ns DIV 1000").as(usAs), col("ts").as(tsAs))
-        .withWatermark(tsAs, "0 seconds")
-    val views = side("view", "view_id", "v_us", "v_ts", "user_id")
-    val purch = side("purchase", "purchase_id", "p_us", "p_ts", "u2")
-    val joined = views.join(purch,
-      expr(s"u2 = user_id AND p_ts >= v_ts AND " +
-        s"p_ts <= v_ts + INTERVAL $wUs MICROSECOND"), "inner")
-    val name = "s07_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = joined
-      .select(col("view_id"), col("purchase_id"), col("user_id"),
-        (col("p_us") - col("v_us")).as("lag_us"))
-      .writeStream.format("memory")
-      .queryName(name).outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name)
+    eventsDrain(s, d, "s07_stream_join", sentinels = false) { events =>
+      def side(evType: String, idAs: String, usAs: String, tsAs: String,
+               uAs: String): DataFrame =
+        graft.Tables.normalizeEventTs(events())
+          .filter(col("event_type") === evType)
+          .select(col("user_id").as(uAs), col("event_id").as(idAs),
+            expr("ts_ns DIV 1000").as(usAs), col("ts").as(tsAs))
+          .withWatermark(tsAs, "0 seconds")
+      val views = side("view", "view_id", "v_us", "v_ts", "user_id")
+      val purch = side("purchase", "purchase_id", "p_us", "p_ts", "u2")
+      views.join(purch,
+          expr(s"u2 = user_id AND p_ts >= v_ts AND " +
+            s"p_ts <= v_ts + INTERVAL $wUs MICROSECOND"), "inner")
+        .select(col("view_id"), col("purchase_id"), col("user_id"),
+          (col("p_us") - col("v_us")).as("lag_us"))
+    }
   }
 
-  /** Micro-batch count of the most recent [[s10StreamTakedown]] drain. */
-  val lastS10MicroBatches = new java.util.concurrent.atomic.AtomicLong(-1L)
-
-  /** Recursive JVM-exit deletion for a scratch tree whose FILES are
-    * created later (by Spark writes), so the per-file deleteOnExit
-    * registration eventsStreamSource uses can't apply. ONE static hook
+  /** Recursive JVM-exit deletion for s10's scratch tree, whose state
+    * versions the returned frame reads lazily, so it must outlive the
+    * drain (the memory-sink drains delete theirs at once). ONE static hook
     * draining a queue of roots (round 20, ADVICE item): the previous
     * hook-per-call form accumulated a JVM thread per s10 invocation
     * across Verify/Bench/test runs. Each root's own recursive delete
     * needs no cross-hook ordering. */
-  private val exitRoots = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private val exitRoots = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
   private lazy val exitHookInstalled: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
       var p = exitRoots.poll()
-      while (p != null) { rm(p.toFile); p = exitRoots.poll() }
+      while (p != null) { scala.util.Try(rmTree(p)); p = exitRoots.poll() }
     }))
-  private def registerTreeOnExit(p: java.nio.file.Path): Unit = {
+  private def registerTreeOnExit(p: Path): Unit = {
     exitHookInstalled
     exitRoots.add(p); ()
   }
@@ -683,18 +655,13 @@ object StreamOps {
     * rewrite — at 100 TB the state rewrite cost amortizes by batching
     * takedowns (exactly how this drain feeds them), and the op volume
     * of a takedown stream is tiny against the corpus. */
-  def takedownDrain(s: org.apache.spark.sql.SparkSession, stateRoot: String,
+  def takedownDrain(s: SparkSession, stateRoot: String,
                     opsDir: String, checkpoint: String): Long = {
     import graft.operators.Incremental
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("op",
-        org.apache.spark.sql.types.StringType)))
-    val src = s.readStream.schema(schema)
+    val src = s.readStream.schema("id BIGINT, op STRING")
       .option("maxFilesPerTrigger", "1").parquet(opsDir)
     val applied = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = src.writeStream
+    drain("s10_stream_takedown", src.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val del = batch.filter(col("op") === "delete")
@@ -713,11 +680,7 @@ object StreamOps {
           applied.incrementAndGet()
         }
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    lastS10MicroBatches.set(
-      Option(q.lastProgress).map(_.batchId + 1).getOrElse(-1L))
+      })
     applied.get()
   }
 
@@ -735,16 +698,13 @@ object StreamOps {
     * per-batch deletes COMPOSE to the one-shot takedown.
     * Checkpoint-restart exactly-once is spec-gated
     * (StreamTakedownSpec, the StreamRestartSpec pattern). */
-  def s10StreamTakedown(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+  def s10StreamTakedown(s: SparkSession, d: String): DataFrame = {
     import graft.operators.{Dedup, Incremental}
     // JVM-exit cleanup (round 19, ADVICE item): corpus-sized state
     // versions otherwise accumulate in /tmp across Verify/Bench runs.
     // The returned frame is read lazily by the gate, so the dir must
-    // outlive this call — the shared exit hook recursively deletes the
-    // whole tree (no ordering requirement; File.deleteOnExit's
-    // reverse-registration guarantee is a different mechanism and was
-    // never what this relied on).
-    val rootPath = java.nio.file.Files.createTempDirectory("graft-s10")
+    // outlive this call — the shared exit hook deletes the whole tree.
+    val rootPath = Files.createTempDirectory("graft-s10")
     registerTreeOnExit(rootPath)
     val root = rootPath.toString
     Incremental.writeDeleteGroupState(s, d, s"$root/v0")
@@ -755,25 +715,17 @@ object StreamOps {
   }
 
   /** Publish takedown op files (one per residue of doc_id % 30) FLAT
-    * into `opsDir` — the file source does not list through
-    * subdirectories, so each sub-batch writes to a scratch dir and its
-    * part file moves into the ops dir under a stable name. */
-  private[graft] def publishTakedownOps(s: org.apache.spark.sql.SparkSession,
+    * into `opsDir` under stable names ([[writeFile]]). */
+  private[graft] def publishTakedownOps(s: SparkSession,
                                         d: String, opsDir: String,
                                         residues: Seq[Long]): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val ops = new org.apache.hadoop.fs.Path(opsDir)
-    val fs = ops.getFileSystem(conf)
-    fs.mkdirs(ops)
+    val ops = new HPath(opsDir)
+    // Hadoop reports a failed mkdirs by returning false, not by throwing.
+    if (!ops.getFileSystem(s.sparkContext.hadoopConfiguration).mkdirs(ops))
+      throw new java.io.IOException(s"mkdirs $ops failed")
     residues.zipWithIndex.foreach { case (r, i) =>
-      val scratch = s"$opsDir.tmp$i"
-      graft.Tables.documents(s, d).filter(col("doc_id") % 30 === r)
-        .select(col("doc_id").as("id"), lit("delete").as("op"))
-        .coalesce(1).write.mode("overwrite").parquet(scratch)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(scratch)).toSeq
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      StateDir.rename(fs, part, new org.apache.hadoop.fs.Path(ops, f"b$i%02d.parquet"))
-      StateDir.delete(fs, new org.apache.hadoop.fs.Path(scratch))
+      writeFile(graft.Tables.documents(s, d).filter(col("doc_id") % 30 === r)
+        .select(col("doc_id").as("id"), lit("delete").as("op")), f"$opsDir/b$i%02d.parquet")
     }
   }
 }

@@ -18,11 +18,12 @@ class MultiBatchDrainSpec extends SparkSpecBase {
     // (cuts may dedupe below timeSplits-1 on a regenerated corpus):
     // cuts+1 data batches + 2 sentinel batches. A multi-batch gate still
     // needs at least one real cut.
-    val cuts = StreamOps.lastSplitCutsUs.get
+    val drain = StreamOps.lastDrain("s08_stream_multibatch")
+    val cuts = drain.cutsUs
     assert(cuts.nonEmpty, "expected >=1 event-time cut — corpus too degenerate to time-slice")
-    assert(StreamOps.lastS08MicroBatches.get >= cuts.size + 3L,
+    assert(drain.batches >= cuts.size + 3L,
       s"expected >=${cuts.size + 3} batches (${cuts.size}+1 data + 2 sentinel), " +
-        s"got ${StreamOps.lastS08MicroBatches.get}")
+        s"got ${drain.batches}")
     // Independent straddle check from the emitted sessions themselves:
     // each cut must fall strictly inside at least one session's
     // [start_us, end_us] span — i.e. that session's state crossed the
@@ -43,11 +44,12 @@ class MultiBatchDrainSpec extends SparkSpecBase {
     val out = StreamOps.s09StreamWindowAgg(spark, sf001)
       .select("win_start", "event_type", "n", "sum_value")
       .orderBy("win_start", "event_type").collect()
-    val cuts = StreamOps.lastSplitCutsUs.get
+    val drain = StreamOps.lastDrain("s09_stream_window")
+    val cuts = drain.cutsUs
     assert(cuts.nonEmpty, "expected >=1 event-time cut — corpus too degenerate to time-slice")
-    assert(StreamOps.lastS09MicroBatches.get >= cuts.size + 3L,
+    assert(drain.batches >= cuts.size + 3L,
       s"expected >=${cuts.size + 3} batches (${cuts.size}+1 data + 2 sentinel), " +
-        s"got ${StreamOps.lastS09MicroBatches.get}")
+        s"got ${drain.batches}")
     // Independent straddle check from the raw events: at least one cut
     // must fall strictly inside a populated 1-hour window — events in
     // the SAME window land on BOTH sides of the micro-batch boundary,
