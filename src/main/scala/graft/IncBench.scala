@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Curation, Incremental}
-import graft.sources.Sources
+import graft.sources.StateDir
 
 /** Prices incremental ingestion the way production pays for it: state
   * is PERSISTED between batches, so the number that matters is the
@@ -18,7 +18,8 @@ import graft.sources.Sources
   *   noop materializations (the Bench protocol).
   *
   * Usage: IncBench [sfDir [stateDir [mod]]]; sfDir defaults to
-  * SPARK_GRAFT_SF_DIR, stateDir to a temp dir, mod to
+  * SPARK_GRAFT_SF_DIR, stateDir to a temp dir (deleted when the run
+  * ends; a stateDir given here is kept), mod to
   * [[Incremental.IngestMod]] (ids ≡ 0 mod `mod` form the batch, so
   * mod 5 = a 20% batch, mod 50 = 2% — the slope of marginal cost in
   * batch fraction is the incremental-ingestion scaling claim, measured).
@@ -50,15 +51,19 @@ object IncBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val adversarial = args.contains("--adversarial")
     val pos = args.filterNot(_.startsWith("--"))
     val sfDir = pos.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val stateDir = pos.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-inc-state").toString)
-    val mod = pos.lift(2).map(_.toInt).getOrElse(Incremental.IngestMod)
+    try run(args, sfDir, stateDir, pos.lift(2).map(_.toInt).getOrElse(Incremental.IngestMod))
+    finally if (pos.lift(1).isEmpty) // a state dir IncBench made itself
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stateDir))
+  }
+
+  private def run(args: Array[String], sfDir: String, stateDir: String, mod: Int): Unit = {
     val spark = Sessions.local()
-    if (adversarial) { runAdversarial(spark, sfDir, stateDir, mod); spark.stop(); return }
+    if (args.contains("--adversarial")) { runAdversarial(spark, sfDir, stateDir, mod); spark.stop(); return }
     if (args.contains("--deletes")) { runDeletes(spark, sfDir, stateDir); spark.stop(); return }
     if (args.contains("--composed")) { runComposed(spark, sfDir, stateDir); spark.stop(); return }
     val tGroup = timed(Incremental.writeGroupState(spark, sfDir, s"$stateDir/groups", mod))
@@ -166,7 +171,7 @@ object IncBench {
       Incremental.deleteGroupLifecycle(spark, rd(1), delIds), s"$root/v2"))
     val tApp2 = timed(Incremental.writeGroupLifecycle(
       Incremental.appendGroupLifecycle(spark, rd(2), ids2, sh2), s"$root/v3"))
-    val finalRows = Sources.parquet(spark, s"$root/v3/labels").count()
+    val finalRows = StateDir.read(spark, s"$root/v3", "labels").head.count()
     // The segmented lexical index through the same history: appends
     // land new segment FILES, the delete lands tombstone rows — the
     // per-op cost production pays — then compaction folds the debt.
@@ -180,10 +185,10 @@ object IncBench {
     val tPApp2 = timed(Retrieval.appendPostingsLifecycleState(spark, pDir, batch2))
     val tPQuery = marginal(Retrieval.queryPostingsLifecycleState(spark, pDir))
     val pFilesBefore = Retrieval.partFileCount(spark, s"$pDir/postings")
-    val pRowsBefore = Sources.parquet(spark, s"$pDir/postings").count()
+    val pRowsBefore = StateDir.read(spark, pDir, "postings").head.count()
     val tPCompact = timed(Retrieval.compactPostingsLifecycle(spark, pDir))
     val pFilesAfter = Retrieval.partFileCount(spark, s"$pDir/postings")
-    val pRowsAfter = Sources.parquet(spark, s"$pDir/postings").count()
+    val pRowsAfter = StateDir.read(spark, pDir, "postings").head.count()
     val tPQueryC = math.min(
       timed(noop(Retrieval.queryPostingsLifecycleState(spark, pDir))),
       timed(noop(Retrieval.queryPostingsLifecycleState(spark, pDir))))

@@ -592,10 +592,9 @@ object Dedup {
     * edges collect as ≤32 MB of longs and union-find in well under a
     * second, and the resulting label map (≤ 2 edges' worth of incident
     * ids = 4M rows) sits exactly at [[Skew.BroadcastRowCap]]'s relabel
-    * budget. Tunable per deployment via SPARK_GRAFT_CC_EDGE_CAP (rows);
-    * 0 forces the distributed loop everywhere. */
-  lazy val CcDriverEdgeCap: Long =
-    sys.env.get("SPARK_GRAFT_CC_EDGE_CAP").map(_.toLong).getOrElse(2L << 20)
+    * budget. [[connectedComponentsCapped]] takes any cap; 0 forces the
+    * distributed loop everywhere. */
+  val CcDriverEdgeCap: Long = 2L << 20
 
   /** Size-ADAPTIVE connected components (round 20): the catalog's CC
     * invocations split into two regimes. Base-corpus dup graphs can be

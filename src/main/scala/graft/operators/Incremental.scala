@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.sources.{Sources, StateDir}
+import graft.sources.StateDir
 
 /** Incremental corpus ingestion — the operation a 100 TB pipeline runs
   * DAILY: a new document batch arrives and must join the existing dedup
@@ -578,69 +578,61 @@ object Incremental {
   /** Delete vectors from a PERSISTED cell-partitioned IVF×PQ index,
     * rewriting ONLY the touched cell partitions (the
     * `partitionBy(cell)` layout makes takedown surgical: untouched
-    * cells' files are never read or written). Returns the touched cell
-    * ids. The kept rows are materialized (lineage cut) BEFORE the
-    * overwrite — Spark cannot safely overwrite a path it is still
-    * lazily reading. */
+    * cells' files are never read or written): one [[StateDir.commit]]
+    * that drops the touched cells' files and adds their kept rows.
+    * Returns the touched cell ids. */
   def deleteFromIndexState(s: SparkSession, dir: String,
                            deletedIds: DataFrame): Seq[Int] = {
-    val index = Sources.parquet(s, s"$dir/index")
+    val Seq(index) = StateDir.read(s, dir, "index")
     val del = deletedIds.toDF("c_id")
     val touched = index.join(del, "c_id").select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq // bounded by KmeansCells (16)
-    if (touched.nonEmpty) {
-      val kept = index.filter(col("cell").isin(touched: _*))
-        .join(del, Seq("c_id"), "left_anti")
-        .transform(graft.Checkpoints.cut)
-      touched.foreach { c =>
-        kept.filter(col("cell") === c).drop("cell")
-          .write.mode("overwrite").parquet(s"$dir/index/cell=$c")
-      }
-    }
+    if (touched.nonEmpty)
+      StateDir.commit(dir, Seq(StateDir.Edit("index",
+        Some(index.filter(col("cell").isin(touched: _*)).join(del, Seq("c_id"), "left_anti")),
+        f => touched.exists(c => f.startsWith(s"cell=$c/")), Some("cell"))))
     touched
   }
 
   /** The production PERSISTED index append: encode a vector batch
-    * against the frozen on-disk quantizers and land NEW FILES in the
-    * cell partitions (mode append — existing index files are never
-    * read or rewritten; encoding is a per-vector map). Repeated cycles
-    * of this and [[deleteFromIndexState]] fragment the cell partitions
+    * against the frozen on-disk quantizers and commit the codes as NEW
+    * FILES in the cell partitions (existing index files are never read
+    * or rewritten; encoding is a per-vector map). Repeated cycles of
+    * this and [[deleteFromIndexState]] fragment the cell partitions
     * into small files — the storage debt [[compactIndexState]] pays
     * down. */
   def appendToIndexState(s: SparkSession, dir: String,
-                         batch: DataFrame): Unit =
-    Similarity.e05IndexFrom(s, batch,
-        Sources.parquet(s, s"$dir/centroids"), Sources.parquet(s, s"$dir/codebooks"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/index")
+                         batch: DataFrame): Unit = {
+    val Seq(centroids, codebooks) = StateDir.read(s, dir, "centroids", "codebooks")
+    StateDir.commit(dir, Seq(StateDir.Edit("index",
+      Some(Similarity.e05IndexFrom(s, batch, centroids, codebooks)), _ => false, Some("cell"))))
+  }
 
   /** COMPACTION of a persisted cell-partitioned IVF×PQ index: per
     * cell, bin-pack the accumulated part files to
-    * ~[[Retrieval.CompactTargetBytes]] (coalesce — no shuffle, and the
-    * cell partitioning is preserved because each cell rewrites in
-    * place). Rows are unchanged (deletes already rewrote their cells;
-    * index compaction is purely a small-file fold), frame equality is
-    * the CompactionSpec gate, and kept rows are lineage-cut before
-    * each overwrite. The per-cell loop is driver-side over ≤
+    * ~[[Retrieval.CompactTargetBytes]] of the cell's manifest bytes
+    * (coalesce — no shuffle, and the cell partitioning is preserved
+    * because each cell's rows coalesce on their own). Rows are
+    * unchanged (deletes already rewrote their cells; index compaction is
+    * purely a small-file fold), frame equality is the CompactionSpec
+    * gate, and the packed cells replace the index in one
+    * [[StateDir.commit]]. The per-cell union is over ≤
     * [[Similarity.KmeansCells]] cells — bounded by construction.
     * Returns cell → (files before, files after). */
   def compactIndexState(s: SparkSession, dir: String,
                         targetBytes: Long = Retrieval.CompactTargetBytes)
       : Map[Int, (Int, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/index")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val cells = fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath.getName.stripPrefix("cell=").toInt).sorted
-    cells.map { c =>
-      val cellPath = s"$dir/index/cell=$c"
-      val before = Retrieval.partFileCount(s, cellPath)
-      val rows = graft.Checkpoints.cut(Sources.parquet(s, cellPath))
-      val n = Retrieval.packFileCount(s,
-        Retrieval.dirBytes(s, cellPath), targetBytes)
-      rows.coalesce(n).write.mode("overwrite").parquet(cellPath)
-      c -> (before, Retrieval.partFileCount(s, cellPath))
-    }.toMap
+    def cells: Map[Int, Map[String, Long]] = StateDir.tables(s, dir)("index").files
+      .groupBy(_._1.takeWhile(_ != '/').stripPrefix("cell=").toInt)
+    val before = cells
+    if (before.isEmpty) return Map.empty
+    val Seq(index) = StateDir.read(s, dir, "index")
+    StateDir.commit(dir, Seq(StateDir.Edit("index", Some(before.toSeq.sortBy(_._1).map {
+      case (c, files) => index.filter(col("cell") === c)
+        .coalesce(Retrieval.packFileCount(s, files.values.sum, targetBytes))
+    }.reduce(_ union _)), _ => true, Some("cell"))))
+    val after = cells
+    before.map { case (c, files) => c -> (files.size, after(c).size) }
   }
 
   /** e06: incremental ANN-index append as a gated key. Quantizers are

@@ -526,10 +526,10 @@ object Retrieval {
 
   /** Persist segmented lifecycle state (postings, doclens, tombs and the
     * one-row meta holding curSeg) as one [[StateDir.publish]]ed set. The
-    * mutators then change the live set in place:
-    * [[appendPostingsLifecycleState]] appends NEW FILES under postings/
-    * and doclens/ and overwrites meta (read driver-side first);
-    * [[deletePostingsLifecycleState]] appends tombstone files. */
+    * later steps are each one [[StateDir.commit]]:
+    * [[appendPostingsLifecycleState]] adds segment files to postings and
+    * doclens and replaces meta together; [[deletePostingsLifecycleState]]
+    * adds tombstone files. */
   def writePostingsLifecycleState(s: SparkSession,
                                   st: PostingsLifecycleState, dir: String): Unit =
     StateDir.publish(dir, LifecycleTables.zip(
@@ -547,23 +547,26 @@ object Retrieval {
     PostingsLifecycleState(post, lens, tombs, meta.head().getAs[Int]("cur_seg"))
   }
 
-  /** The production append: O(batch) new segment files, one meta bump. */
+  private def curSegOf(s: SparkSession, dir: String): Int =
+    StateDir.read(s, dir, "meta").head.head().getAs[Int]("cur_seg")
+
+  /** The production append: O(batch) new segment files in postings and
+    * doclens and the meta bump, committed as one version. */
   def appendPostingsLifecycleState(s: SparkSession, dir: String,
                                    batch: DataFrame): Unit = {
-    val seg = Sources.parquet(s, s"$dir/meta").head().getAs[Int]("cur_seg") + 1
-    stamped(seg, postings(s, batch)).write.mode("append").parquet(s"$dir/postings")
-    stamped(seg, doclensOf(batch)).write.mode("append").parquet(s"$dir/doclens")
-    metaOf(s, seg).write.mode("overwrite").parquet(s"$dir/meta")
+    val seg = curSegOf(s, dir) + 1
+    StateDir.commit(dir, Seq(
+      StateDir.Edit("postings", Some(stamped(seg, postings(s, batch))), _ => false),
+      StateDir.Edit("doclens", Some(stamped(seg, doclensOf(batch))), _ => false),
+      StateDir.Edit("meta", Some(metaOf(s, seg)), _ => true)))
   }
 
-  /** The production delete: O(takedown) tombstone rows appended, zero
-    * postings IO. */
+  /** The production delete: O(takedown) tombstone rows committed as new
+    * tombs files, zero postings IO. */
   def deletePostingsLifecycleState(s: SparkSession, dir: String,
-                                   deletedIds: DataFrame): Unit = {
-    val seg = Sources.parquet(s, s"$dir/meta").head().getAs[Int]("cur_seg")
-    deletedIds.select(col("doc_id"), lit(seg).as("killed_at_seg"))
-      .write.mode("append").parquet(s"$dir/tombs")
-  }
+                                   deletedIds: DataFrame): Unit =
+    StateDir.commit(dir, Seq(StateDir.Edit("tombs", Some(deletedIds
+      .select(col("doc_id"), lit(curSegOf(s, dir)).as("killed_at_seg"))), _ => false)))
 
   /** Query persisted state (the production read path). */
   def queryPostingsLifecycleState(s: SparkSession, dir: String): DataFrame =
@@ -581,19 +584,19 @@ object Retrieval {
     * set. The LIVE view is frame-equal before and after (the
     * CompactionSpec gate — compaction has no query semantics of its
     * own), and curSeg is untouched so later appends keep monotone
-    * segments. The compacted set is published as a new set (postings,
-    * doclens, tombs and meta together), so the plan reading the old
-    * set never reads a path being overwritten. Sizing uses the
-    * PRE-compaction directory bytes — an overestimate when many rows
-    * are dead, so the packing errs toward a few more files, never
-    * giant ones. */
+    * segments. The compacted tables replace postings, doclens, tombs
+    * and meta in one [[StateDir.commit]]; the old files go only after
+    * the new version is in. Sizing uses the PRE-compaction bytes from
+    * the manifest — an overestimate when many rows are dead, so the
+    * packing errs toward a few more files, never giant ones. */
   def compactPostingsLifecycle(s: SparkSession, dir: String,
                                targetBytes: Long = CompactTargetBytes): Unit = {
     val st = readPostingsLifecycleState(s, dir)
     val tombs = tombsOf(st.tombs)
+    val sizes = StateDir.tables(s, dir)
     def packed(rows: DataFrame, sub: String): DataFrame =
       liveRows(rows, tombs)
-        .coalesce(packFileCount(s, dirBytes(s, s"$dir/$sub"), targetBytes))
+        .coalesce(packFileCount(s, sizes(sub).files.values.sum, targetBytes))
     writePostingsLifecycleState(s, PostingsLifecycleState(
       packed(st.postings, "postings"), packed(st.doclens, "doclens"),
       emptyTombs(s), st.curSeg), dir)
@@ -616,26 +619,10 @@ object Retrieval {
     math.max(1L, math.max(byTarget, parFloor)).toInt
   }
 
-  /** Total bytes under a path (0 if absent). */
-  private[graft] def dirBytes(s: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-  }
-
-  /** Parquet part-file count under a path (the fragmentation metric
-    * compaction reports). */
+  /** Live file count of the state table at `path` (`<set dir>/<table>`),
+    * from its manifest (the fragmentation metric compaction reports). */
   private[graft] def partFileCount(s: SparkSession, path: String): Int = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0
-    else {
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      }
-      n
-    }
+    StateDir.tables(s, p.getParent.toString)(p.getName).files.size
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooter
 import org.apache.spark.sql.types.StructType
@@ -32,6 +33,13 @@ object Sources {
   def parquet(s: SparkSession, path: String): DataFrame =
     GraftParquetFooter.dataSchema(s, path)
       .fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+
+  /** Parquet over exactly `files` (path under `base` → bytes) with a
+    * known read `schema` (partition column last): no listing, no footer,
+    * no job; the persisted-state read ([[StateDir.read]]). */
+  def parquetFiles(s: SparkSession, base: String, schema: StructType,
+                   partitionBy: Option[String], files: Map[String, Long]): DataFrame =
+    GraftParquetFooter.listed(s, base, schema, partitionBy, files)
 
   /** ORC (columnar like parquet: self-describing schema, predicate
     * pushdown and column pruning at the stripe level). */
@@ -129,9 +137,8 @@ object Sinks {
   /** Key-based upsert (MERGE) into a parquet dataset: rows of `df`
     * replace existing rows with matching `keys`; unmatched rows append.
     * Parquet has no native MERGE, so this is read → anti-join → union →
-    * rewrite, STAGED through [[StateDir]]'s hidden sibling directory
-    * (Spark cannot overwrite a path it is reading) and committed by its
-    * checked renames.
+    * rewrite, STAGED in a hidden sibling directory (Spark cannot
+    * overwrite a path it is reading) and swapped in by [[swap]].
     *
     * With `partitionCol` set, only the partitions `df` actually touches
     * are read (partition-pruned scan), rewritten, and swapped — the
@@ -145,51 +152,59 @@ object Sinks {
              partitionCol: Option[String] = None): Unit = {
     import org.apache.spark.sql.functions.col
     val s = df.sparkSession
-    val fs = StateDir.fsOf(s, new org.apache.hadoop.fs.Path(path))
-    val target = fs.makeQualified(new org.apache.hadoop.fs.Path(path))
-    def write(d: DataFrame, p: String): Unit =
-      partitionCol.fold(d.write.mode("overwrite").parquet(p))(pc =>
-        d.write.partitionBy(pc).mode("overwrite").parquet(p))
-    if (!fs.exists(target)) { StateDir.staged(s, path)(write(df, _)); return }
-
-    // The delta feeds the touched-partition collect, the anti-join, and
-    // the union — persist so an expensive upstream runs once, not thrice.
-    val delta = df.persist()
-    try {
-      val existing = partitionCol match {
-        case Some(pc) =>
-          // Prune the scan to the partitions the delta touches. CONTRACT:
-          // a key's partition value must be stable across upserts (as in
-          // Hive dynamic-partition overwrite) — a key that MOVES partition
-          // would leave its old row in an untouched partition. Moving keys
-          // requires the unpartitioned (full-table) form.
-          val touched = delta.select(pc).distinct().collect().map(_.get(0))
-          val nonNull = touched.filter(_ != null)
-          val cond = if (nonNull.length == touched.length)
-            col(pc).isin(nonNull.toIndexedSeq: _*)
-          else col(pc).isin(nonNull.toIndexedSeq: _*) || col(pc).isNull
-          Sources.parquet(s, path).filter(cond)
-        case None => Sources.parquet(s, path)
-      }
-      val kept = existing.join(delta.select(keys.map(col): _*).distinct(),
-        keys, "left_anti")
-      val merged = kept.unionByName(delta)
-      partitionCol match {
-        case Some(pc) =>
-          // swap only the rewritten partition directories
-          val staging = StateDir.stagingOf(target)
-          write(merged, staging.toString)
-          for (st <- fs.listStatus(staging) if st.isDirectory &&
-              st.getPath.getName.startsWith(s"$pc=")) {
-            val dest = new org.apache.hadoop.fs.Path(target, st.getPath.getName)
-            StateDir.delete(fs, dest)
-            StateDir.rename(fs, st.getPath, dest)
-          }
-          StateDir.sweep(fs, target)
-        case None => StateDir.staged(s, path)(write(merged, _))
-      }
-    } finally delta.unpersist()
+    val fs = StateDir.fsOf(s, new Path(path))
+    val target = fs.makeQualified(new Path(path))
+    val staging = StateDir.stagingOf(target)
+    def write(d: DataFrame): Unit =
+      partitionCol.fold(d.write)(d.write.partitionBy(_)).mode("overwrite").parquet(staging.toString)
+    if (!fs.exists(target)) write(df)
+    else {
+      // The delta feeds the touched-partition collect, the anti-join, and
+      // the union — persist so an expensive upstream runs once, not thrice.
+      val delta = df.persist()
+      try {
+        val existing = partitionCol match {
+          case Some(pc) =>
+            // Prune the scan to the partitions the delta touches. CONTRACT:
+            // a key's partition value must be stable across upserts (as in
+            // Hive dynamic-partition overwrite) — a key that MOVES partition
+            // would leave its old row in an untouched partition. Moving keys
+            // requires the unpartitioned (full-table) form.
+            val touched = delta.select(pc).distinct().collect().map(_.get(0))
+            val nonNull = touched.filter(_ != null)
+            val cond = if (nonNull.length == touched.length)
+              col(pc).isin(nonNull.toIndexedSeq: _*)
+            else col(pc).isin(nonNull.toIndexedSeq: _*) || col(pc).isNull
+            Sources.parquet(s, path).filter(cond)
+          case None => Sources.parquet(s, path)
+        }
+        write(existing.join(delta.select(keys.map(col): _*).distinct(), keys, "left_anti")
+          .unionByName(delta))
+      } finally delta.unpersist()
+    }
+    partitionCol match {
+      // swap only the rewritten partition directories
+      case Some(pc) if fs.exists(target) =>
+        for (st <- fs.listStatus(staging) if st.isDirectory &&
+            st.getPath.getName.startsWith(s"$pc="))
+          swap(fs, st.getPath, new Path(target, st.getPath.getName))
+      case _ => swap(fs, staging, target)
+    }
+    StateDir.sweep(fs, target)
   }
+
+  /** Make `from` the dir `to`: an existing `to` is first moved aside to a
+    * hidden `.<name>.old-<stamp>` sibling and deleted once `from` is in;
+    * if the rename in fails, the old dir is moved back. */
+  private def swap(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.exists(to)) StateDir.rename(fs, from, to)
+    else {
+      val old = new Path(to.getParent, s".${to.getName}.old-${System.nanoTime()}")
+      StateDir.rename(fs, to, old)
+      try StateDir.rename(fs, from, to)
+      catch { case e: Throwable => StateDir.rename(fs, old, to); throw e }
+      StateDir.delete(fs, old)
+    }
 
   /** Bucketed managed table: co-locates rows by join key at write time so
     * later joins between tables bucketed on the same key run with NO

@@ -2,7 +2,8 @@ package org.apache.spark.sql.execution.datasources.parquet
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileWriter
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
 
@@ -18,7 +19,10 @@ import org.apache.spark.util.HadoopFSUtils
   * conversion (`readSchema`: the session's converter flags,
   * `nanosAsLong` included) gives the same schema with no job. Those
   * helpers and the session's Hadoop conf are Spark-internal, which is
-  * why this one file lives in Spark's parquet package. */
+  * why this one file lives in Spark's parquet package. So is what
+  * [[listed]] needs to open a known file list (the persisted-state read)
+  * with no listing at all: the file index's listing cache and the
+  * relation's nullable schema. */
 object GraftParquetFooter {
 
   /** The data schema of the parquet table at `path`, or None where the
@@ -42,11 +46,36 @@ object GraftParquetFooter {
     }
 
   /** The files Spark's file index lists under `p`, hidden names skipped
-    * by Spark's own rule. */
-  private def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
+    * by Spark's own rule. Plain statuses: a located listing
+    * (`listFiles`) of the local file system loads each file's
+    * permissions with a shell command. */
+  def leaves(fs: FileSystem, p: Path): Seq[FileStatus] =
     fs.listStatus(p).toSeq
       .filterNot(st => HadoopFSUtils.shouldFilterOutPathName(st.getPath.getName))
       .flatMap(st => if (st.isDirectory) leaves(fs, st.getPath) else Seq(st))
+
+  /** The parquet table over exactly `files` (path under `base` → bytes)
+    * with read schema `schema`: the file list is handed to the file index
+    * as the cached listing of its one root, so the open lists nothing (a
+    * reader given more than `parallelPartitionDiscovery.threshold` file
+    * paths lists them in a Spark job) and reads no footer. Partition
+    * values come from the file paths, typed by `schema`. */
+  def listed(s: SparkSession, base: String, schema: StructType,
+             partitionBy: Option[String], files: Map[String, Long]): DataFrame = {
+    val root = new Path(base)
+    val qualified = root.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(root)
+    val leaves = files.toArray.map { case (f, n) =>
+      new FileStatus(n, false, 1, 0L, 0L, new Path(s"$qualified/$f")) }
+    val handed = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = Option.when(p == qualified)(leaves)
+      override def putLeafFiles(p: Path, f: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val (parts, data) = schema.asNullable.partition(f => partitionBy.contains(f.name))
+    s.baseRelationToDataFrame(HadoopFsRelation(
+      new InMemoryFileIndex(s, Seq(qualified), Map.empty, Some(schema), handed),
+      StructType(parts), StructType(data), None, new ParquetFileFormat, Map.empty)(s))
+  }
 
   private def isSummary(p: Path): Boolean =
     p.getName == ParquetFileWriter.PARQUET_METADATA_FILE ||

@@ -4,14 +4,17 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Incremental
 import graft.sources.{Sinks, Sources, StateDir}
 
 /** `Sources.parquet` opens a table with the schema Spark's inference
   * would give, read from a footer on the driver: equal schemas on the
   * real tables, a multi-file state set, a partitioned table and a
   * multi-schema dir; Spark's own result or error where the driver read
-  * does not apply; no Spark job for the open; and no other schema-less
-  * parquet read left in `src/main`. */
+  * does not apply; no Spark job for the open; the same schema and rows,
+  * again with no job, from a state set's manifest ([[StateDir.read]]),
+  * for a multi-table set and the cell-partitioned index set; and no other
+  * schema-less parquet read left in `src/main`. */
 class ParquetOpenSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -89,6 +92,25 @@ class ParquetOpenSpec extends SparkSpecBase {
       "inference must show as a job, or this test sees nothing")
     assert(jobsOfOpen(Sources.parquet(spark, path)).isEmpty)
     assert(jobsOfOpen(Tables.events(spark, sf)).isEmpty)
+  }
+
+  test("a state read through the manifest gives the footer open's schema and rows, with no job") {
+    val dir = tempDir("graft-open-manifest").resolve("v1").toString
+    StateDir.publish(dir, Seq(
+      "labels" -> spark.range(0, 400).select(col("id"), (col("id") % 7).as("lbl"))
+        .repartition(4),
+      "events" -> Tables.events(spark, sf).repartition(3)))
+    val index = tempDir("graft-open-index").resolve("v1").toString
+    Incremental.writeFullIndexState(spark, sf001, index)
+    for ((d, t) <- Seq(dir -> "labels", dir -> "events", index -> "centroids", index -> "index")) {
+      val read = StateDir.read(spark, d, t).head
+      val open = Sources.parquet(spark, s"$d/$t")
+      assert(read.schema == open.schema, s"$d/$t")
+      assert(read.collect().map(_.toString).sorted.toSeq ==
+        open.collect().map(_.toString).sorted.toSeq, s"$d/$t")
+      assert(jobsOfOpen(StateDir.read(spark, d, t).head).isEmpty, s"$d/$t")
+    }
+    assert(StateDir.read(spark, index, "index").head.schema.fieldNames.last == "cell")
   }
 
   /** A parquet read on `DataFrameReader` with no `.schema(` in its chain. */

@@ -191,6 +191,20 @@ class SinksSpec extends SparkSpecBase {
     assert(after == before, "p=1 must not be rewritten")
   }
 
+  test("partitioned upsert: a failed rename of a partition into the table keeps its old rows") {
+    val dir = FaultyFs.on(spark, tempDir("graft-sinks-faulty")) + "/upf"
+    Seq((1L, "a", 1), (2L, "b", 2)).toDF("id", "v", "p").write.partitionBy("p").parquet(dir)
+    def rows = Sources.parquet(spark, dir).collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("v"))).toSet
+    val delta = Seq((2L, "B", 2), (3L, "c", 2)).toDF("id", "v", "p")
+    intercept[java.io.IOException](FaultyFs.failing((from, to) =>
+        to.getName == "p=2" && from.getParent.getName.contains(".staging"))(
+      Sinks.upsert(delta, dir, Seq("id"), partitionCol = Some("p"))))
+    assert(rows == Set((1L, "a"), (2L, "b")), "p=2 must keep its old rows")
+    Sinks.upsert(delta, dir, Seq("id"), partitionCol = Some("p"))
+    assert(rows == Set((1L, "a"), (2L, "B"), (3L, "c")))
+  }
+
   test("append mode accumulates; overwrite replaces") {
     val dir = tmp() + "/modes"
     val df = Seq(1L, 2L).toDF("id")

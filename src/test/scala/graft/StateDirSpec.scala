@@ -1,19 +1,23 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.operators.Incremental
+import graft.operators.{Incremental, Retrieval}
 import graft.sources.StateDir
 
-/** The persisted-state publish protocol: a table set appears whole or
-  * not at all. Fault injection throws while writing table j of n, over
-  * a fresh dir and over an existing version; readers must still see the
-  * previous version row-for-row, and a retry must equal a clean
-  * publish, staged in a dir of its own, with no staging dir left. */
+/** The persisted-state commit protocol: a version of a table set appears
+  * whole or not at all. Fault injection throws while writing table j of
+  * n, over a fresh dir and over an existing version, and, for every
+  * family and step, fails a rename of the commit: the write of each
+  * table, the move of the first and the last file into the set and the
+  * manifest's. Readers must still see the previous version row-for-row,
+  * a retry must equal a clean step, and after it every table dir holds
+  * exactly the live files. */
 class StateDirSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -121,6 +125,118 @@ class StateDirSpec extends SparkSpecBase {
     assert(read() == before, "no new labels/pairs beside old or missing bands")
     Incremental.writeGroupLifecycle(state(2), dir)
     assert(read().head == Set(Row(1L, 2L), Row(2L, 2L)))
+  }
+
+  private lazy val docs = Tables.documents(spark, sf001).select(col("doc_id"), col("text"))
+  private lazy val vecs = Tables.embeddings(spark, sf001).select(col("vec_id"), col("embedding"))
+
+  private def groupState(k: Long) = Incremental.GroupLifecycleState(
+    Seq((1L, k), (2L, k)).toDF("id", "lbl"),
+    Seq((1L, 2L, k)).toDF("id_a", "id_b", "lbl"),
+    Seq((1L, 0, k)).toDF("doc_id", "band", "bsig"),
+    Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "sh"))
+
+  private def postingsOf(dir: String, keep: Column): Unit =
+    Retrieval.writePostingsLifecycleState(spark,
+      Retrieval.postingsLifecycleOf(spark, docs.filter(keep)), dir)
+
+  private def indexOf(dir: String): Unit = Incremental.writeFullIndexState(spark, sf001, dir)
+
+  /** family step → (version k at a dir, the step to k+1). */
+  private val steps: Seq[(String, String => Unit, String => Unit)] = Seq(
+    ("group publish", d => Incremental.writeGroupLifecycle(groupState(1), d),
+      d => Incremental.writeGroupLifecycle(groupState(2), d)),
+    ("postings publish", postingsOf(_, col("doc_id") % 2 === 0),
+      postingsOf(_, col("doc_id") % 2 === 1)),
+    ("index append", indexOf,
+      d => Incremental.appendToIndexState(spark, d, vecs.filter(col("vec_id") % 5 === 0))),
+    ("index delete", indexOf, d => Incremental.deleteFromIndexState(spark, d,
+      vecs.filter(col("vec_id") % 10 === 3).select("vec_id"))),
+    ("index compact", d => {
+      indexOf(d)
+      Incremental.appendToIndexState(spark, d, vecs.filter(col("vec_id") % 5 === 0))
+    }, d => Incremental.compactIndexState(spark, d)),
+    ("postings append", postingsOf(_, col("doc_id") % 5 =!= 0),
+      Retrieval.appendPostingsLifecycleState(spark, _, docs.filter(col("doc_id") % 5 === 0))),
+    ("postings delete", postingsOf(_, lit(true)), Retrieval.deletePostingsLifecycleState(
+      spark, _, docs.filter(col("doc_id") % 10 === 3).select("doc_id"))),
+    ("postings compact", d => {
+      postingsOf(d, lit(true))
+      Retrieval.deletePostingsLifecycleState(spark, d,
+        docs.filter(col("doc_id") % 10 === 3).select("doc_id"))
+    }, Retrieval.compactPostingsLifecycle(spark, _)))
+
+  /** Every table of the version at `dir`, rows sorted: through the
+    * manifest, or (`plain`) by a plain parquet read of each table dir. */
+  private def view(dir: String, plain: Boolean = false): Map[String, Seq[String]] =
+    StateDir.tables(spark, dir).keys.map { t =>
+      val df = if (plain) spark.read.parquet(s"$dir/$t") else StateDir.read(spark, dir, t).head
+      t -> df.collect().map(_.toString).sorted.toSeq
+    }.toMap
+
+  private def path(p: String): String = new HPath(p).toUri.getPath
+
+  /** A table written in the staging dir of the set named `d` (group 1). */
+  private def stagedTable(d: String) = s"/\\.$d\\.staging-[0-9]+/([^/_][^/]*)/".r
+
+  /** A data file moving from the staging dir into the set named `d`. */
+  private def isMove(d: String, from: String, to: String): Boolean =
+    from.contains(s"/.$d.staging-") && to.contains(s"/$d/") && !to.contains("/_manifest")
+
+  /** The faults of a step that writes `written` and moves `moves` files:
+    * (name, which renames of the set named `d` count, the failing one). */
+  private def faults(written: Seq[String], moves: Int)
+      : Seq[(String, (String, String, String) => Boolean, Int)] =
+    written.map(t => (s"write of $t", (d: String, _: String, to: String) =>
+      stagedTable(d).findFirstMatchIn(to).exists(_.group(1) == t), 1)) ++
+      Seq(1, moves).filter(_ > 0).distinct.map(j => (s"move of file $j", isMove _, j)) :+
+      (("manifest", (d: String, _: String, to: String) => to.contains(s"/$d/_manifest"), 1))
+
+  test("every family and step: a failed commit rename leaves version k; a retry equals a clean step") {
+    val root = FaultyFs.on(spark, tempDir("graft-statedir-faults"))
+    for (((name, base, step), i) <- steps.zipWithIndex) {
+      val clean = s"clean$i"
+      base(s"$root/$clean")
+      FaultyFs.renames.clear()
+      step(s"$root/$clean")
+      val expected = view(s"$root/$clean")
+      val renames = FaultyFs.renames.toArray(Array.empty[(String, String)]).toSeq
+        .map { case (f, t) => (path(f), path(t)) }
+      val written = renames.flatMap { case (_, t) =>
+        stagedTable(clean).findFirstMatchIn(t).map(_.group(1)) }.distinct
+      val moves = renames.count { case (f, t) => isMove(clean, f, t) }
+      assert(written.nonEmpty && moves > 0, s"$name: writes $written, moves $moves files")
+      for (((fault, p, n), j) <- faults(written, moves).zipWithIndex) {
+        val d = s"f${i}x$j"
+        val dir = s"$root/$d"
+        base(dir)
+        val k = view(dir)
+        intercept[Exception](FaultyFs.failing((f, t) => p(d, path(f.toString), path(t.toString)), n)(
+          step(dir)))
+        assert(view(dir) == k, s"$name, $fault: version k changed")
+        step(dir)
+        assert(view(dir) == expected, s"$name, $fault: the retry differs from a clean step")
+        assert(view(dir, plain = true) == expected,
+          s"$name, $fault: the table dirs hold more than the live files")
+      }
+    }
+  }
+
+  test("a postings append whose doclens write fails, retried, adds its rows once") {
+    val root = FaultyFs.on(spark, tempDir("graft-statedir-retry"))
+    val batch = docs.filter(col("doc_id") % 5 === 0)
+    def rows(dir: String) = {
+      val st = Retrieval.readPostingsLifecycleState(spark, dir)
+      (Seq(st.postings, st.doclens, st.tombs).map(_.collect().map(_.toString).sorted.toSeq), st.curSeg)
+    }
+    postingsOf(s"$root/clean", col("doc_id") % 5 =!= 0)
+    Retrieval.appendPostingsLifecycleState(spark, s"$root/clean", batch)
+    val dir = s"$root/retried"
+    postingsOf(dir, col("doc_id") % 5 =!= 0)
+    intercept[Exception](FaultyFs.failing((_, to) => to.toUri.getPath.contains("/doclens/"))(
+      Retrieval.appendPostingsLifecycleState(spark, dir, batch)))
+    Retrieval.appendPostingsLifecycleState(spark, dir, batch)
+    assert(rows(dir) == rows(s"$root/clean"))
   }
 
   test("latest reads only published v<k> dirs; a failed rename throws") {
